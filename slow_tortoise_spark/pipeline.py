@@ -11,18 +11,27 @@ Dataflow spine (matches /root/reference/flows/data_pipeline.py:977-1137):
     → temporal_aggregation("all") → output summary → results.json
 
 Caching policy: the validated cube feeds every branch → cache it; each
-temporal aggregate feeds 4+ branches → cache, unpersist when the
-resolution completes. At 100 TB replace cache() with a checkpoint to
-fast storage if executor memory can't hold the working set.
+temporal aggregate feeds 4+ branches → cache. Artifact sinks do not run
+one after another on the driver thread: each is queued on a driver pool
+of ``defaultParallelism`` threads, so their Spark jobs overlap with one
+another and with the eager decision actions (row counts, the approximate
+group count, extrema collects) that stay on the driver thread.  A
+resolution's cached frames are released once its queued sinks have
+drained.  On every path, errors included, the run cancels or waits for
+its queued sinks and releases every frame it cached.  At 100 TB replace
+cache() with a checkpoint to fast storage if executor memory can't hold
+the working set.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from slow_tortoise_spark.operators.extrema import regional_extrema
 from slow_tortoise_spark.operators.pivot import qualifier_timeseries_pivot
@@ -116,8 +125,77 @@ class PipelineParams:
     extra_writer_args: dict = field(default_factory=dict)
 
 
+class _RunScope:
+    """One pipeline run's driver-side resources: the thread pool its
+    artifact sinks run on and the frames it cached.  ``close`` runs on
+    every path, errors included: it cancels queued sinks, waits for
+    running ones and unpersists every frame still cached."""
+
+    def __init__(self, spark: SparkSession, checkpoint_dir: str):
+        self.spark = spark
+        self.checkpoint_dir = checkpoint_dir
+        # Sink jobs are small (per-job overhead, not data, bounds them),
+        # and Spark's FIFO scheduler runs jobs from several threads at
+        # once while none of them fills the cores: one sink per core.
+        self.pool = ThreadPoolExecutor(
+            max_workers=spark.sparkContext.defaultParallelism
+        )
+        self.pending: list[Future] = []
+        self.cached: list = []
+
+    def sink(self, fn, *args, **kwargs) -> Future:
+        """Queue ``fn(*args, **kwargs)`` on the pool.  The target is
+        wrapped here, on the calling thread, so the sink's jobs carry the
+        caller's job group, local properties and tags as they are now."""
+        future = self.pool.submit(
+            inheritable_thread_target(self.spark)(fn), *args, **kwargs
+        )
+        self.pending.append(future)
+        return future
+
+    def drain(self) -> None:
+        """Wait for every queued sink; raise the first failure in queue
+        order (``close`` then cancels the rest)."""
+        while self.pending:
+            self.pending.pop(0).result()
+
+    def persist(self, frame):
+        """Cache ``frame`` and build the cache now, on the calling thread,
+        or checkpoint it eagerly when the run has a checkpoint dir
+        (checkpointed frames need no unpersist: nothing is pinned in
+        executor memory).  Built here, a cache costs one job: sinks that
+        first read it concurrently would each submit a job to build it."""
+        if self.checkpoint_dir:
+            return frame.checkpoint(eager=True)
+        self.cached.append(frame.cache())
+        # the job adaptive execution runs for a cache's first reader
+        self.spark._jsparkSession.sharedState().cacheManager() \
+            .lookupCachedData(frame._jdf).get().cachedRepresentation() \
+            .cacheBuilder().cachedColumnBuffers().count()
+        return frame
+
+    def release_since(self, mark: int) -> None:
+        """Unpersist the frames cached after the first ``mark``."""
+        while len(self.cached) > mark:
+            self.cached.pop().unpersist()
+
+    def close(self) -> None:
+        self.pool.shutdown(wait=True, cancel_futures=True)
+        self.release_since(0)
+
+
 def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
     """Execute the full artifact pipeline; returns the run summary dict."""
+    run = _RunScope(spark, params.checkpoint_dir)
+    try:
+        return _run_pipeline(spark, params, run)
+    finally:
+        run.close()
+
+
+def _run_pipeline(
+    spark: SparkSession, params: PipelineParams, run: _RunScope
+) -> dict[str, Any]:
     writer = WRITE_TYPES[params.dest_type](
         params.dest_root, **params.extra_writer_args
     )
@@ -143,22 +221,11 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
     if params.checkpoint_dir:
         spark.sparkContext.setCheckpointDir(params.checkpoint_dir)
 
-    def persist(frame):
-        """cache() or checkpoint() per params; checkpointed frames need
-        no unpersist (nothing pinned in executor memory)."""
-        if params.checkpoint_dir:
-            return frame.checkpoint(eager=True)
-        return frame.cache()
-
-    def release(frame) -> None:
-        if not params.checkpoint_dir:
-            frame.unpersist()
-
     raw = read_datacube(spark, params.data_paths)
     df, stats = validate_and_fix(
         raw, weight_column=params.weight_column, fill_timestamp=params.fill_timestamp
     )
-    df = persist(df)
+    df = run.persist(df)
     results["rows"] = assert_non_empty(df)
     results["validation"] = stats.__dict__
 
@@ -204,7 +271,8 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
     feature_rows = {r["feature"]: r["n_rows"] for r in rows_per_feature(df).collect()}
     small = [f for f, n in feature_rows.items() if n <= params.raw_count_threshold]
     if small:
-        write_grouped_csv(
+        run.sink(
+            write_grouped_csv,
             df.filter(F.col("feature").isin(small)),
             group_cols=["feature"],
             path_fn=lambda k: f"{prefix}/raw/{k['feature']}/raw.csv",
@@ -241,7 +309,8 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                 lists[REGION_LEVELS[int(lv)]] = sorted(g["region_id"].tolist())
             return lists
 
-        write_grouped_json(
+        run.sink(
+            write_grouped_json,
             all_regions,
             group_cols=["feature"],
             path_fn=lambda k: f"{prefix}/raw/{k['feature']}/info/region_lists.json",
@@ -252,7 +321,8 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
     # only the aggregation breakouts, not the inventories — reference
     # record_qualifier_lists writes all of them).
     for q in all_qualifiers:
-        write_grouped_json(
+        run.sink(
+            write_grouped_json,
             df.select("feature", q).distinct(),
             group_cols=["feature"],
             path_fn=lambda k, qq=q: (
@@ -280,12 +350,15 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
     agg_cols = ["s_sum_t_sum", "s_mean_t_sum", "s_sum_t_mean", "s_mean_t_mean"]
 
     for time_res in params.time_resolutions:
-        t = persist(temporal_aggregation(df, time_res, weight_column=weight))
+        mark = len(run.cached)
+        n_tiles: Future | None = None
+        t = run.persist(temporal_aggregation(df, time_res, weight_column=weight))
 
         # Global timeseries CSV per feature.
         if task_on("compute_global_timeseries"):
             ts = global_timeseries(t, weight_column=weight)
-            write_grouped_csv(
+            run.sink(
+                write_grouped_csv,
                 ts,
                 group_cols=["feature"],
                 path_fn=lambda k, tr=time_res: f"{prefix}/timeseries/{tr}/{k['feature']}/global.csv",
@@ -300,12 +373,13 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
             or task_on("compute_regional_stats")
         )
         if need_regional:
-            regional = persist(regional_aggregation_all_levels(
+            regional = run.persist(regional_aggregation_all_levels(
                 t, weight_column=weight
             ))
         if need_regional and task_on("compute_regional_aggregation"):
             # one CSV per (feature, level, timestamp)
-            write_grouped_csv(
+            run.sink(
+                write_grouped_csv,
                 regional.withColumnRenamed("region_id", "id"),
                 group_cols=["feature", "level", "timestamp"],
                 path_fn=lambda k, tr=time_res: (
@@ -335,7 +409,8 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                     weight_column=weight,
                     qualifier=q,
                 )
-                write_grouped_csv(
+                run.sink(
+                    write_grouped_csv,
                     rolled_q.withColumnRenamed("region_id", "id")
                     .withColumnRenamed(q, "qualifier"),
                     group_cols=["feature", "level", "timestamp"],
@@ -369,7 +444,8 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                     write_grouped_csv_bundles,
                 )
 
-                write_grouped_csv_bundles(
+                run.sink(
+                    write_grouped_csv_bundles,
                     regional.withColumnRenamed("region_id", "id"),
                     group_cols=["feature", "level", "id"],
                     key_fn=lambda k, tr=time_res: (
@@ -383,7 +459,8 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                     sort_cols=["timestamp"],
                 )
             else:
-                write_grouped_csv(
+                run.sink(
+                    write_grouped_csv,
                     regional.withColumnRenamed("region_id", "id"),
                     group_cols=["feature", "level", "id"],
                     path_fn=lambda k, tr=time_res: (
@@ -412,7 +489,8 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                     qualifier=q,
                     max_level=ts_max_level,
                 )
-                write_grouped_csv(
+                run.sink(
+                    write_grouped_csv,
                     rq.withColumnRenamed("region_id", "id"),
                     group_cols=["feature", "level", "id", q],
                     path_fn=lambda k, tr=time_res, qq=q: (
@@ -452,8 +530,6 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                     f"{prefix}/extrema/{time_res}/{feat}/level-{level}.json",
                     writer,
                 )
-        if need_regional:
-            release(regional)
 
         # Qualifier timeseries pivots (V1), one CSV per (feature, agg col).
         # Derived from the cached full temporal aggregate so the s_* stats
@@ -469,7 +545,7 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                 continue
             # cached: the per-agg-column pivot loop below would otherwise
             # recompute this spatial aggregation once per column
-            sq = persist(spatial_aggregation(
+            sq = run.persist(spatial_aggregation(
                 t.filter(F.col("feature").isin(feats)),
                 keys=["feature", "timestamp", q], aggs=["sum", "mean"],
                 weight_column=weight,
@@ -477,7 +553,8 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
             for agg_col in [c for c in sq.columns
                             if c.startswith("s_") and c != "s_count"] + ["s_count"]:
                 wide = qualifier_timeseries_pivot(sq, q, agg_col)
-                write_grouped_csv(
+                run.sink(
+                    write_grouped_csv,
                     wide,
                     group_cols=["feature"],
                     path_fn=lambda k, tr=time_res, qq=q, ac=agg_col: (
@@ -486,12 +563,11 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                     writer=writer,
                     sort_cols=["timestamp"],
                 )
-            release(sq)
 
         # Tiling family (G5–G8) — only when coordinates exist.
         if (task_on("compute_tiles") and params.compute_tiles
                 and "lat" in df.columns and "lng" in df.columns):
-            sub = persist(subtile_aggregation(t))
+            sub = run.persist(subtile_aggregation(t))
             n_subtiles = sub.count()
             tile_mode = params.tile_sink
             if tile_mode == "auto":
@@ -509,7 +585,8 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                         write_tile_bundles,
                     )
 
-                    n_tiles = write_tile_bundles(
+                    n_tiles = run.sink(
+                        write_tile_bundles,
                         tiles,
                         bundle_path_fn=lambda pid, tr=time_res: (
                             f"{prefix}/tiles/{tr}/bundle-{pid:05d}"
@@ -517,7 +594,8 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                         writer=writer,
                     )
                 else:
-                    n_tiles = write_tiles(
+                    n_tiles = run.sink(
+                        write_tiles,
                         tiles,
                         path_fn=lambda r, tr=time_res, ex=ext: (
                             f"{prefix}/tiles/{tr}/{r['feature']}/"
@@ -527,9 +605,12 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                         writer=writer,
                         debug=params.tile_debug,
                     )
+                # the key takes its place in results.json now; the count
+                # replaces the future once the resolution's sinks drain
                 results[f"tiles_{time_res}"] = n_tiles
                 gs = grid_stats(sub)
-                write_grouped_csv(
+                run.sink(
+                    write_grouped_csv,
                     gs,
                     group_cols=["feature", "timestamp"],
                     path_fn=lambda k, tr=time_res: (
@@ -538,8 +619,10 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
                     writer=writer,
                     sort_cols=["zoom"],
                 )
-            release(sub)
-        release(t)
+        run.drain()
+        if n_tiles is not None:
+            results[f"tiles_{time_res}"] = n_tiles.result()
+        run.release_since(mark)
 
     # All-time summary (A6).
     t_all = temporal_aggregation(df, "all", weight_column=weight)
@@ -548,7 +631,7 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
     # results.json only on full runs — partial (selected-task) runs must
     # not clobber a complete run's record (reference record_results
     # gating, data_pipeline.py:264-276, 1140-1141).
+    run.drain()
     if full_run:
         write_json(results, f"{prefix}/results.json", writer)
-    release(df)
     return results

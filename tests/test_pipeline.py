@@ -614,3 +614,119 @@ def test_grouped_sinks_accept_dotted_column_names(spark, tmp_path):
     assert n_j == 2
     cols = _json.load(open(f"{out}/json/f1.json"))
     assert "1.0" in cols and "2.5" in cols
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("failing", ["write_grouped_csv", "regional_extrema"])
+def test_pipeline_releases_caches_on_every_path(spark, cube_path, tmp_path,
+                                                monkeypatch, failing):
+    """A run that fails in a queued sink or in an eager driver action
+    still drains its sink pool and unpersists every frame it cached,
+    then re-raises; a normal run leaves nothing cached either."""
+    from slow_tortoise_spark import pipeline
+
+    spark.catalog.clearCache()
+    params = PipelineParams(
+        data_id="dr", run_id="rr", data_paths=[cube_path],
+        dest_root=str(tmp_path / "ok"), time_resolutions=("month",),
+    )
+    run_pipeline(spark, params)
+    assert _cache_empty(spark)
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError(f"{failing} failed")
+
+    monkeypatch.setattr(pipeline, failing, boom)
+    params.dest_root = str(tmp_path / "failed")
+    with pytest.raises(RuntimeError, match=f"{failing} failed"):
+        run_pipeline(spark, params)
+    assert _cache_empty(spark)
+
+
+def test_repeated_run_compiles_no_new_classes(spark, cube_path, tmp_path):
+    """The session's codegen cache holds a whole run's generated classes:
+    a second run over the same cube Janino-compiles nothing."""
+    import time
+
+    from slow_tortoise_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES)
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled() -> int:
+        return metrics.METRIC_SOURCE_CODE_SIZE().getCount()
+
+    # the counter counts: an expression no earlier plan used compiles
+    before = compiled()
+    spark.range(3).selectExpr(f"id * {time.time_ns()} AS x").collect()
+    assert compiled() > before
+
+    params = PipelineParams(
+        data_id="dg", run_id="rg", data_paths=[cube_path],
+        dest_root=str(tmp_path / "first"), time_resolutions=("month",),
+    )
+    run_pipeline(spark, params)
+    params.dest_root = str(tmp_path / "second")
+    before = compiled()
+    run_pipeline(spark, params)
+    assert compiled() == before
+
+
+def _tree_digest(root: str) -> dict[str, str]:
+    import hashlib
+
+    out = {}
+    for path in glob.glob(f"{root}/**/*", recursive=True):
+        if os.path.isfile(path):
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = hashlib.sha256(
+                    fh.read()).hexdigest()
+    return out
+
+
+def test_concurrent_sinks_are_deterministic_and_inherit_job_group(
+        spark, cube_path, tmp_path):
+    """Sinks overlap on the driver pool, yet two runs write identical
+    artifact trees (results.json included), every job of a run lands in
+    the caller's job group, and the pool threads inherit tags without
+    pyspark's fallback warning."""
+    import warnings
+
+    sc = spark.sparkContext
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc._jsc.sc().statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    digests = []
+    for i in range(2):
+        out = str(tmp_path / f"run{i}")
+        group = f"pipeline-run-{i}"
+        seen = job_ids()
+        sc.setJobGroup(group, "concurrent sink test")
+        try:
+            with warnings.catch_warnings(record=True) as caught:
+                warnings.simplefilter("always")
+                results = run_pipeline(spark, PipelineParams(
+                    data_id="dj", run_id="rj", data_paths=[cube_path],
+                    dest_root=out, time_resolutions=("month", "year"),
+                ))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert not [w for w in caught
+                    if "Tags will not be inherited" in str(w.message)]
+        run_jobs = job_ids() - seen
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert run_jobs and run_jobs <= set(
+            sc.statusTracker().getJobIdsForGroup(group))
+        assert results["tiles_month"] > 0 and results["tiles_year"] > 0
+        digests.append(_tree_digest(out))
+    assert digests[0] == digests[1]
+    assert any(p.endswith("results.json") for p in digests[0])
+    assert any("/qualifiers/" in p for p in digests[0])
