@@ -1,39 +1,54 @@
 """Query catalog package: one Spark callable + one DuckDB oracle per
 operator (SURVEY.md section 2 plus the training-data extensions).
 
-Split from the former 5,400-line queries.py (round 6, verdict item 5)
-into per-family modules; this __init__ imports them in registration
-order, applies the catalog rotations last, and re-exports every name the
-old module exposed, so ``from slow_tortoise_spark.queries import ...``
-is unchanged for the driver (__spark_entry__), bench.py, the oracle
-harness, and the tests.
+The queries live in per-family modules (star, datacube, tiles, training,
+extended, snapshot and the verifier_* modules); each declares its
+queries once in a module-level ``ENTRIES`` dict.  ``catalog`` merges
+them and builds the four public dicts; which queries form the 50-entry
+driver tier is the one tuple ``catalog.DRIVER_CATALOG``.  To add a
+query, add one ``ENTRIES`` line in its family module; to change tiers,
+edit ``DRIVER_CATALOG`` (see the ``catalog`` docstring).
+
+This package exports the four dicts plus the few query callables and
+helpers the driver entry point and the tests import by name.
 """
 
 from __future__ import annotations
 
-from slow_tortoise_spark.queries import _shared as _m_shared
-from slow_tortoise_spark.queries import star as _m_star
-from slow_tortoise_spark.queries import datacube as _m_datacube
-from slow_tortoise_spark.queries import tiles as _m_tiles
-from slow_tortoise_spark.queries import training as _m_training
-from slow_tortoise_spark.queries import catalog as _m_catalog
-from slow_tortoise_spark.queries import extended as _m_extended
-from slow_tortoise_spark.queries import verifier_base as _m_verifier_base
-from slow_tortoise_spark.queries import verifier_core as _m_verifier_core
-from slow_tortoise_spark.queries import verifier_iterative as _m_verifier_iterative
-from slow_tortoise_spark.queries import verifier_scalarops as _m_verifier_scalarops
-from slow_tortoise_spark.queries import verifier_stats as _m_verifier_stats
-from slow_tortoise_spark.queries import snapshot as _m_snapshot
-from slow_tortoise_spark.queries import _rotations as _m_rotations  # noqa: F401  (applies rotations)
+from slow_tortoise_spark.queries.catalog import (
+    ORACLE_SQL,
+    QUERIES,
+    VERIFIER_ORACLE_SQL,
+    VERIFIER_QUERIES,
+)
+from slow_tortoise_spark.queries.datacube import (
+    q_global_timeseries,
+    q_regional_rollup,
+    q_temporal_agg_month,
+)
+from slow_tortoise_spark.queries.star import (
+    q_pricing_summary,
+    q_semi_join,
+    q_top_orders,
+)
+from slow_tortoise_spark.queries.tiles import q_tile_rollup
+from slow_tortoise_spark.queries.training import (
+    _hyperplanes,
+    q_embedding_near_dups,
+)
 
-# Re-export the full surface of the former single module: every public
-# and underscore-prefixed name (tests import e.g. _hyperplanes), later
-# modules shadowing earlier ones exactly as later code did in one file.
-for _m in (_m_shared, _m_star, _m_datacube, _m_tiles, _m_training,
-           _m_catalog, _m_extended, _m_verifier_base, _m_verifier_core,
-           _m_verifier_iterative, _m_verifier_scalarops,
-           _m_verifier_stats, _m_snapshot):
-    for _k, _v in vars(_m).items():
-        if not _k.startswith("__"):
-            globals()[_k] = _v
-del _m, _k, _v
+__all__ = [
+    "ORACLE_SQL",
+    "QUERIES",
+    "VERIFIER_ORACLE_SQL",
+    "VERIFIER_QUERIES",
+    "_hyperplanes",
+    "q_embedding_near_dups",
+    "q_global_timeseries",
+    "q_pricing_summary",
+    "q_regional_rollup",
+    "q_semi_join",
+    "q_temporal_agg_month",
+    "q_tile_rollup",
+    "q_top_orders",
+]

@@ -42,10 +42,9 @@ from slow_tortoise_spark.operators.regional import regional_aggregation_all_leve
 from slow_tortoise_spark.operators.similarity import (
     brute_force_topk,
     build_ivf_index,
-    cosine_col,
     ivf_topk,
 )
-from slow_tortoise_spark.operators.temporal import temporal_aggregation, to_normalized_time
+from slow_tortoise_spark.operators.temporal import temporal_aggregation
 from slow_tortoise_spark.operators.text import language_id, fingerprint
 from slow_tortoise_spark.sources.reader import read_table
 

@@ -1,138 +1,76 @@
-"""The driver catalog dicts (QUERIES / ORACLE_SQL): base membership as
-registered by the core families; later modules update them and
-_rotations.py replays the round-by-round catalog rotations.  Formerly
-queries.py lines 1340-1403."""
+"""The query catalog, declared once.
+
+Each family module declares ``ENTRIES``: query name -> (Spark callable,
+DuckDB oracle SQL), holding only the queries that module defines.  This
+module merges them and splits the result into two tiers:
+
+* the driver tier (``QUERIES`` / ``ORACLE_SQL``): the names listed in
+  ``DRIVER_CATALOG``, in that order — the driver hash-checks at most 50;
+* the verifier tier (``VERIFIER_QUERIES`` / ``VERIFIER_ORACLE_SQL``):
+  every other entry, checked locally by ``tests/oracle_harness.py``.
+
+To add a query, define ``q_<name>`` and its oracle SQL in the family
+module and add one ``"<name>": (q_<name>, <sql>)`` line to that module's
+``ENTRIES``; it joins the verifier tier.  To move a query between tiers,
+edit ``DRIVER_CATALOG`` (keep it at 50 names).  Either way, rewrite
+``tests/data/catalog_snapshot.json`` in the same change.  No other
+module reads or writes the four dicts built here.
+"""
 from __future__ import annotations
 
+from slow_tortoise_spark.queries import (
+    datacube,
+    extended,
+    snapshot,
+    star,
+    tiles,
+    training,
+    verifier_base,
+    verifier_core,
+    verifier_iterative,
+    verifier_scalarops,
+    verifier_stats,
+)
 from slow_tortoise_spark.queries._shared import (
     Callable,
     DataFrame,
     SparkSession,
 )
-from slow_tortoise_spark.queries.star import (
-    _Q_ANTI_JOIN,
-    _Q_HARMONIZED_UNION,
-    _Q_PRICING_SUMMARY,
-    _Q_REGION_REVENUE,
-    _Q_TOP_ORDERS,
-    _Q_WINDOW_TOPN,
-    q_anti_join,
-    q_harmonized_union,
-    q_pricing_summary,
-    q_region_revenue,
-    q_top_orders,
-    q_window_topn,
-)
-from slow_tortoise_spark.queries.datacube import (
-    _Q_GLOBAL_TIMESERIES,
-    _Q_OUTPUT_SUMMARY,
-    _Q_QUALIFIER_COUNTS,
-    _Q_QUALIFIER_PIVOT,
-    _Q_REGIONAL_EXTREMA,
-    _Q_REGIONAL_ROLLUP,
-    _Q_REGIONAL_TIMESERIES,
-    _Q_REGION_ID,
-    _Q_TEMPORAL_AGG_MONTH,
-    _Q_VALIDATE_COERCION,
-    _Q_WEIGHTED_AGG,
-    q_global_timeseries,
-    q_output_summary,
-    q_qualifier_counts,
-    q_qualifier_pivot,
-    q_region_id,
-    q_regional_extrema,
-    q_regional_rollup,
-    q_regional_timeseries,
-    q_temporal_agg_month,
-    q_validate_coercion,
-    q_weighted_agg,
-)
-from slow_tortoise_spark.queries.tiles import (
-    _Q_GRID_STATS,
-    _Q_TILE_BINNING,
-    _Q_TILE_ROLLUP,
-    q_grid_stats,
-    q_tile_binning,
-    q_tile_rollup,
-)
-from slow_tortoise_spark.queries.training import (
-    _Q_ANN_COSINE_TOPK,
-    _Q_IVF_TOPK,
-    _Q_JACCARD_PAIRS,
-    _Q_MINHASH_LSH_PAIRS,
-    _Q_TOKEN_STATS,
-    _embedding_near_dups_sql,
-    _lang_id_sql,
-    q_ann_cosine_topk,
-    q_embedding_near_dups,
-    q_ivf_topk,
-    q_jaccard_pairs,
-    q_lang_id,
-    q_minhash_lsh_pairs,
-    q_token_stats,
+
+FAMILIES = (
+    star, datacube, tiles, training, extended, verifier_base, verifier_core,
+    verifier_iterative, verifier_scalarops, verifier_stats, snapshot,
 )
 
-# Catalog
-# ---------------------------------------------------------------------------
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    name: entry for family in FAMILIES for name, entry in family.ENTRIES.items()
+}
+
+DRIVER_CATALOG: tuple[str, ...] = (
+    "grid_stats", "harmonized_union", "pricing_summary", "sessionize_batch",
+    "unigram_logprob", "weighted_agg", "bpe_encode", "cms_token_counts",
+    "latest_orders", "mad_outliers", "nfc_normalize", "resample_ffill",
+    "sq_topk", "stream_stream_join", "tfidf_terms", "token_budget_select",
+    "profile_table", "region_revenue", "skew_report", "token_stats",
+    "validate_coercion", "pack_sequences_append", "token_budget_mix",
+    "token_budget_epochs", "anti_join", "approx_distinct", "bm25_rank",
+    "bpe_pairs", "bpe_train", "containment_pairs", "contamination",
+    "cube_agg", "dedup_drop", "dedup_exact_docs", "embedding_near_dups",
+    "event_sequences", "harmonic_centrality", "hyperplane_lsh_buckets",
+    "incremental_dedup", "ivfpq_rerank", "ivfpq_topk", "jaccard_pairs_naive",
+    "jsonl_roundtrip", "k_core", "lsh_edit_funnel", "minhash_signatures",
+    "pagerank_graph", "pii_redact", "pack_sequences_epochs",
+    "pack_sequences_nosplit",
+)
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pricing_summary": q_pricing_summary,
-    "top_orders": q_top_orders,
-    "region_revenue": q_region_revenue,
-    "anti_join": q_anti_join,
-    "window_topn": q_window_topn,
-    "harmonized_union": q_harmonized_union,
-    "temporal_agg_month": q_temporal_agg_month,
-    "global_timeseries": q_global_timeseries,
-    "weighted_agg": q_weighted_agg,
-    "output_summary": q_output_summary,
-    "region_id": q_region_id,
-    "regional_rollup": q_regional_rollup,
-    "regional_timeseries": q_regional_timeseries,
-    "regional_extrema": q_regional_extrema,
-    "qualifier_pivot": q_qualifier_pivot,
-    "qualifier_counts": q_qualifier_counts,
-    "validate_coercion": q_validate_coercion,
-    "tile_binning": q_tile_binning,
-    "tile_rollup": q_tile_rollup,
-    "grid_stats": q_grid_stats,
-    "token_stats": q_token_stats,
-    "lang_id": q_lang_id,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "jaccard_pairs": q_jaccard_pairs,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "embedding_near_dups": q_embedding_near_dups,
-    "ivf_topk": q_ivf_topk,
+    name: ENTRIES[name][0] for name in DRIVER_CATALOG
 }
+ORACLE_SQL: dict[str, str] = {name: ENTRIES[name][1] for name in DRIVER_CATALOG}
 
-ORACLE_SQL: dict[str, str] = {
-    "pricing_summary": _Q_PRICING_SUMMARY,
-    "top_orders": _Q_TOP_ORDERS,
-    "region_revenue": _Q_REGION_REVENUE,
-    "anti_join": _Q_ANTI_JOIN,
-    "window_topn": _Q_WINDOW_TOPN,
-    "harmonized_union": _Q_HARMONIZED_UNION,
-    "temporal_agg_month": _Q_TEMPORAL_AGG_MONTH,
-    "global_timeseries": _Q_GLOBAL_TIMESERIES,
-    "weighted_agg": _Q_WEIGHTED_AGG,
-    "output_summary": _Q_OUTPUT_SUMMARY,
-    "region_id": _Q_REGION_ID,
-    "regional_rollup": _Q_REGIONAL_ROLLUP,
-    "regional_timeseries": _Q_REGIONAL_TIMESERIES,
-    "regional_extrema": _Q_REGIONAL_EXTREMA,
-    "qualifier_pivot": _Q_QUALIFIER_PIVOT,
-    "qualifier_counts": _Q_QUALIFIER_COUNTS,
-    "validate_coercion": _Q_VALIDATE_COERCION,
-    "tile_binning": _Q_TILE_BINNING,
-    "tile_rollup": _Q_TILE_ROLLUP,
-    "grid_stats": _Q_GRID_STATS,
-    "token_stats": _Q_TOKEN_STATS,
-    "lang_id": _lang_id_sql(),
-    "minhash_lsh_pairs": _Q_MINHASH_LSH_PAIRS,
-    "jaccard_pairs": _Q_JACCARD_PAIRS,
-    "ann_cosine_topk": _Q_ANN_COSINE_TOPK,
-    "embedding_near_dups": _embedding_near_dups_sql(),
-    "ivf_topk": _Q_IVF_TOPK,
+VERIFIER_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    name: fn for name, (fn, _) in ENTRIES.items() if name not in QUERIES
 }
-
-
+VERIFIER_ORACLE_SQL: dict[str, str] = {
+    name: sql for name, (_, sql) in ENTRIES.items() if name not in QUERIES
+}

@@ -1,8 +1,9 @@
 """Datacube operator family (A1-A9, R1-R3, V1, P-series) on the events
-cube.  Formerly queries.py lines 364-803."""
+cube."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
+    Callable,
     EVENT_TYPES,
     F,
     _DSUM,
@@ -14,7 +15,6 @@ from slow_tortoise_spark.queries._shared import (
     regional_aggregation_all_levels,
     regional_extrema,
     temporal_aggregation,
-    to_normalized_time,
 )
 
 # ---------------------------------------------------------------------------
@@ -457,3 +457,23 @@ _Q_VALIDATE_COERCION = """
 
 
 # ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
+
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "temporal_agg_month": (q_temporal_agg_month, _Q_TEMPORAL_AGG_MONTH),
+    "temporal_agg_year": (q_temporal_agg_year, _Q_TEMPORAL_AGG_YEAR),
+    "temporal_agg_all": (q_temporal_agg_all, _Q_TEMPORAL_AGG_ALL),
+    "global_timeseries": (q_global_timeseries, _Q_GLOBAL_TIMESERIES),
+    "weighted_agg": (q_weighted_agg, _Q_WEIGHTED_AGG),
+    "output_summary": (q_output_summary, _Q_OUTPUT_SUMMARY),
+    "region_id": (q_region_id, _Q_REGION_ID),
+    "regional_rollup": (q_regional_rollup, _Q_REGIONAL_ROLLUP),
+    "regional_timeseries": (q_regional_timeseries, _Q_REGIONAL_TIMESERIES),
+    "regional_extrema": (q_regional_extrema, _Q_REGIONAL_EXTREMA),
+    "qualifier_pivot": (q_qualifier_pivot, _Q_QUALIFIER_PIVOT),
+    "qualifier_counts": (q_qualifier_counts, _Q_QUALIFIER_COUNTS),
+    "region_lists": (q_region_lists, _Q_REGION_LISTS),
+    "rows_per_feature": (q_rows_per_feature, _Q_ROWS_PER_FEATURE),
+    "validate_coercion": (q_validate_coercion, _Q_VALIDATE_COERCION),
+}

@@ -1,16 +1,15 @@
 """Extended coverage: cube, streaming, constructed dedup, hyperplane
-LSH, salted agg, as-of/range joins, scalar families.  Formerly
-queries.py lines 1404-2133."""
+LSH, salted agg, as-of/range joins, scalar families."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
+    Callable,
     F,
     _DSUM,
     _dsum,
     _t,
     read_table,
 )
-from slow_tortoise_spark.queries.catalog import ORACLE_SQL, QUERIES
 from slow_tortoise_spark.queries.training import (
     _hyperplanes,
 )
@@ -275,25 +274,6 @@ _Q_MEDIA_FEATURES = """
 """
 
 
-QUERIES.update(
-    {
-        "cube_agg": q_cube_agg,
-        "streaming_window_counts": q_streaming_window_counts,
-        "dedup_exact_docs": q_dedup_exact_docs,
-        "media_features": q_media_features,
-    }
-)
-
-ORACLE_SQL.update(
-    {
-        "cube_agg": _Q_CUBE_AGG,
-        "streaming_window_counts": _Q_STREAMING_WINDOW_COUNTS,
-        "dedup_exact_docs": _Q_DEDUP_EXACT_DOCS,
-        "media_features": _Q_MEDIA_FEATURES,
-    }
-)
-
-
 def q_salted_agg(spark, sf_dir):
     """Skew path: two-phase salted aggregation; results equal the direct
     groupBy (oracle), the shuffle shape spreads hot keys over 16 tasks."""
@@ -332,9 +312,6 @@ _Q_SALTED_AGG = f"""
          CAST(MAX(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS vmax
   FROM events GROUP BY event_type ORDER BY event_type
 """
-
-QUERIES["salted_agg"] = q_salted_agg
-ORACLE_SQL["salted_agg"] = _Q_SALTED_AGG
 
 
 def q_weighted_timeseries(spark, sf_dir):
@@ -465,9 +442,6 @@ _Q_WEIGHTED_TIMESERIES = """
          COUNT(*) AS s_count
   FROM t2 GROUP BY 1, 2 ORDER BY 1, 2
 """
-
-QUERIES["weighted_timeseries"] = q_weighted_timeseries
-ORACLE_SQL["weighted_timeseries"] = _Q_WEIGHTED_TIMESERIES
 
 
 def q_asof_join(spark, sf_dir):
@@ -611,23 +585,6 @@ _Q_PERCENTILES = """
   FROM lineitem GROUP BY 1 ORDER BY 1
 """
 
-QUERIES.update(
-    {
-        "asof_join": q_asof_join,
-        "range_join": q_range_join,
-        "rolling_window": q_rolling_window,
-        "percentiles": q_percentiles,
-    }
-)
-ORACLE_SQL.update(
-    {
-        "asof_join": _Q_ASOF_JOIN,
-        "range_join": _Q_RANGE_JOIN,
-        "rolling_window": _Q_ROLLING_WINDOW,
-        "percentiles": _Q_PERCENTILES,
-    }
-)
-
 
 def q_approx_distinct(spark, sf_dir):
     """Approximate distinct counts (HLL) with an in-query accuracy gate.
@@ -664,9 +621,6 @@ _Q_APPROX_DISTINCT = """
   SELECT event_type, COUNT(DISTINCT user_id) AS exact_users, 1 AS approx_ok
   FROM events GROUP BY event_type ORDER BY event_type
 """
-
-QUERIES["approx_distinct"] = q_approx_distinct
-ORACLE_SQL["approx_distinct"] = _Q_APPROX_DISTINCT
 
 
 def q_json_extract(spark, sf_dir):
@@ -742,17 +696,6 @@ _Q_STRING_FUNCS = """
   FROM part ORDER BY p_partkey
 """
 
-QUERIES.update(
-    {
-        "json_extract": q_json_extract,
-    }
-)
-ORACLE_SQL.update(
-    {
-        "json_extract": _Q_JSON_EXTRACT,
-    }
-)
-
 
 def q_dedup_drop(spark, sf_dir):
     """drop_exact_duplicates over a corpus with constructed duplicates:
@@ -785,4 +728,25 @@ _Q_DEDUP_DROP = """
 """
 
 
+# ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
 
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "cube_agg": (q_cube_agg, _Q_CUBE_AGG),
+    "streaming_window_counts": (q_streaming_window_counts, _Q_STREAMING_WINDOW_COUNTS),
+    "dedup_exact_docs": (q_dedup_exact_docs, _Q_DEDUP_EXACT_DOCS),
+    "hyperplane_lsh_buckets": (q_hyperplane_lsh_buckets, _hyperplane_sql()),
+    "media_features": (q_media_features, _Q_MEDIA_FEATURES),
+    "salted_agg": (q_salted_agg, _Q_SALTED_AGG),
+    "weighted_timeseries": (q_weighted_timeseries, _Q_WEIGHTED_TIMESERIES),
+    "asof_join": (q_asof_join, _Q_ASOF_JOIN),
+    "range_join": (q_range_join, _Q_RANGE_JOIN),
+    "rolling_window": (q_rolling_window, _Q_ROLLING_WINDOW),
+    "percentiles": (q_percentiles, _Q_PERCENTILES),
+    "approx_distinct": (q_approx_distinct, _Q_APPROX_DISTINCT),
+    "json_extract": (q_json_extract, _Q_JSON_EXTRACT),
+    "date_parts": (q_date_parts, _Q_DATE_PARTS),
+    "string_funcs": (q_string_funcs, _Q_STRING_FUNCS),
+    "dedup_drop": (q_dedup_drop, _Q_DEDUP_DROP),
+}

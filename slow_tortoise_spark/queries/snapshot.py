@@ -1,15 +1,11 @@
-"""Snapshot time travel, driver-checked (round 6).  Formerly
-queries.py lines 5356-5431."""
+"""Snapshot time travel, incremental aggregate snapshots and the
+bucketed merge upsert."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
+    Callable,
     F,
     _t,
-)
-from slow_tortoise_spark.queries.catalog import ORACLE_SQL, QUERIES
-from slow_tortoise_spark.queries.verifier_core import (
-    VERIFIER_ORACLE_SQL,
-    VERIFIER_QUERIES,
 )
 
 # Snapshot time travel, driver-checked (round-5 verdict item 7: the
@@ -84,12 +80,6 @@ _Q_SNAPSHOT_TIME_TRAVEL = """
 """
 
 
-QUERIES["snapshot_time_travel"] = q_snapshot_time_travel
-ORACLE_SQL["snapshot_time_travel"] = _Q_SNAPSHOT_TIME_TRAVEL
-
-
-
-
 # Incremental aggregate snapshot, driver-checked (round-7 verdict item
 # 6: the algebraic-state maintenance layer — streaming_agg_snapshot —
 # was only ever tested against itself).  Three micro-batch commits,
@@ -158,12 +148,6 @@ _Q_AGG_SNAPSHOT_INCREMENTAL = """
   GROUP BY o_orderstatus
   ORDER BY o_orderstatus
 """
-
-
-QUERIES["agg_snapshot_incremental"] = q_agg_snapshot_incremental
-ORACLE_SQL["agg_snapshot_incremental"] = _Q_AGG_SNAPSHOT_INCREMENTAL
-
-
 
 
 # Bucketed merge-on-write, oracle-checked (round-8; closes the last
@@ -252,5 +236,14 @@ _Q_BUCKETED_MERGE_UPSERT = """
 """
 
 
-VERIFIER_QUERIES["bucketed_merge_upsert"] = q_bucketed_merge_upsert
-VERIFIER_ORACLE_SQL["bucketed_merge_upsert"] = _Q_BUCKETED_MERGE_UPSERT
+# ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
+
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "snapshot_time_travel": (q_snapshot_time_travel, _Q_SNAPSHOT_TIME_TRAVEL),
+    "agg_snapshot_incremental": (
+        q_agg_snapshot_incremental, _Q_AGG_SNAPSHOT_INCREMENTAL,
+    ),
+    "bucketed_merge_upsert": (q_bucketed_merge_upsert, _Q_BUCKETED_MERGE_UPSERT),
+}

@@ -1,8 +1,9 @@
 """Ad-hoc analytics over the star schema (joins, windows, set ops,
-sort/limit).  Formerly queries.py lines 85-363."""
+sort/limit)."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
+    Callable,
     F,
     _DSUM,
     _dsum,
@@ -288,3 +289,18 @@ _Q_HARMONIZED_UNION = """
 """
 
 
+# ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
+
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "pricing_summary": (q_pricing_summary, _Q_PRICING_SUMMARY),
+    "top_orders": (q_top_orders, _Q_TOP_ORDERS),
+    "region_revenue": (q_region_revenue, _Q_REGION_REVENUE),
+    "semi_join": (q_semi_join, _Q_SEMI_JOIN),
+    "anti_join": (q_anti_join, _Q_ANTI_JOIN),
+    "set_ops": (q_set_ops, _Q_SET_OPS),
+    "window_topn": (q_window_topn, _Q_WINDOW_TOPN),
+    "window_running": (q_window_running, _Q_WINDOW_RUNNING),
+    "harmonized_union": (q_harmonized_union, _Q_HARMONIZED_UNION),
+}

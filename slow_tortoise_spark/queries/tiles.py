@@ -1,8 +1,8 @@
-"""Tiling family (G1-G7) on synthesized coordinates.  Formerly
-queries.py lines 804-920."""
+"""Tiling family (G1-G7) on synthesized coordinates."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
+    Callable,
     F,
     _DSUM,
     _dsum,
@@ -126,3 +126,12 @@ _Q_GRID_STATS = f"""
 """
 
 
+# ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
+
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "tile_binning": (q_tile_binning, _Q_TILE_BINNING),
+    "tile_rollup": (q_tile_rollup, _Q_TILE_ROLLUP),
+    "grid_stats": (q_grid_stats, _Q_GRID_STATS),
+}

@@ -1,20 +1,18 @@
 """Training-data ops: dedup / text / similarity on documents +
-embeddings (catalog-core portion).  Formerly queries.py lines 921-1339."""
+embeddings (catalog-core portion)."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
+    Callable,
     F,
     _t,
     brute_force_topk,
     build_ivf_index,
-    cosine_col,
     fingerprint,
     ivf_topk,
-    jaccard_pairs,
     language_id,
     minhash_lsh_candidates,
     minhash_signature,
-    simhash16,
 )
 
 # ---------------------------------------------------------------------------
@@ -472,3 +470,18 @@ _Q_IVF_TOPK = """
 
 
 # ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
+
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "doc_fingerprints": (q_doc_fingerprints, _Q_DOC_FINGERPRINTS),
+    "token_stats": (q_token_stats, _Q_TOKEN_STATS),
+    "lang_id": (q_lang_id, _lang_id_sql()),
+    "minhash_signatures": (q_minhash_signatures, _Q_MINHASH_SIGNATURES),
+    "minhash_lsh_pairs": (q_minhash_lsh_pairs, _Q_MINHASH_LSH_PAIRS),
+    "jaccard_pairs": (q_jaccard_pairs, _Q_JACCARD_PAIRS),
+    "simhash": (q_simhash, _simhash_sql()),
+    "ann_cosine_topk": (q_ann_cosine_topk, _Q_ANN_COSINE_TOPK),
+    "embedding_near_dups": (q_embedding_near_dups, _embedding_near_dups_sql()),
+    "ivf_topk": (q_ivf_topk, _Q_IVF_TOPK),
+}

@@ -1,6 +1,5 @@
-"""Verifier tier (block 1 of 2): demoted/baseline variants and the
-first wave of locally-oracle-checked queries.  Formerly part of the
-single-file queries.py."""
+"""Verifier family (block 1 of 2): demoted/baseline variants and the
+first wave of locally-oracle-checked queries."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
@@ -8,72 +7,24 @@ from slow_tortoise_spark.queries._shared import (
     minhash_lsh_candidates,
     simhash16,
     Callable,
-    DataFrame,
     F,
-    SparkSession,
     _DSUM,
     _dsum,
     _t,
-    fingerprint,
-    language_id,
-    read_table,
-)
-from slow_tortoise_spark.queries.catalog import ORACLE_SQL, QUERIES
-from slow_tortoise_spark.queries.star import (
-    _Q_SEMI_JOIN,
-    _Q_SET_OPS,
-    _Q_WINDOW_RUNNING,
-    q_semi_join,
-    q_set_ops,
-    q_window_running,
-)
-from slow_tortoise_spark.queries.datacube import (
-    _Q_REGION_LISTS,
-    _Q_ROWS_PER_FEATURE,
-    _Q_TEMPORAL_AGG_ALL,
-    _Q_TEMPORAL_AGG_YEAR,
-    q_region_lists,
-    q_rows_per_feature,
-    q_temporal_agg_all,
-    q_temporal_agg_year,
 )
 from slow_tortoise_spark.queries.training import (
     _MH_COLS,
-    _Q_DOC_FINGERPRINTS,
     _Q_JACCARD_PAIRS,
     _Q_MINHASH_LSH_PAIRS,
-    _Q_MINHASH_SIGNATURES,
     _simhash_sql,
-    q_doc_fingerprints,
-    q_minhash_signatures,
-    q_simhash,
 )
-from slow_tortoise_spark.queries.extended import (
-    _Q_DATE_PARTS,
-    _Q_DEDUP_DROP,
-    _Q_STRING_FUNCS,
-    _hyperplane_sql,
-    _stream_events,
-    q_date_parts,
-    q_dedup_drop,
-    q_hyperplane_lsh_buckets,
-    q_string_funcs,
-)
+from slow_tortoise_spark.queries.extended import _stream_events
 
 # ---------------------------------------------------------------------------
-# Verifier tier — oracle-checked locally (tests/oracle_harness.py) but NOT
-# part of the driver catalog: the driver checks at most 50 queries per
-# round, so the catalog above is held at exactly 50 entries.  These are
-# either subsumed by a catalog entry (temporal_agg_all/_year ⊂ the month
-# pattern; minhash_signatures ⊂ minhash_lsh_pairs; hyperplane_lsh_buckets
-# ⊂ the banded embedding_near_dups; dedup_drop/doc_fingerprints ⊂
-# dedup_exact_docs; window_running ⊂ rolling_window; date_parts ⊂ the
-# temporal family; simhash16 ⊂ the 64-bit simhash) or the deliberately-
-# naive baseline tiers the scale-path catalog entries are verified against
-# in pytest.  Round 3 rotated quality_score, hash_split, contamination,
-# simhash_near_dups (64-bit) and window_lag_lead INTO the catalog
-# (displacing the subsumed entries above) so every first-class operator
-# earns a driver-checked CORRECTNESS row.
+# Verifier family, block 1: the deliberately naive baseline tiers the
+# scale-path queries are verified against in pytest, plus the first wave of
+# locally oracle-checked queries.  Which tier each query sits in is decided
+# by catalog.DRIVER_CATALOG, not here.
 # ---------------------------------------------------------------------------
 
 
@@ -778,23 +729,6 @@ def q_simhash16(spark, sf_dir):
     return simhash16(docs).orderBy("doc_id")
 
 
-# Round-3 rotation: first-class training-data operators move into the
-# 50-entry driver catalog (each now earns a CORRECTNESS row). Round 4
-# rotated quality_score/window_lag_lead/hash_split back to the verifier
-# tier (their families keep other driver rows) to make room.
-QUERIES.update(
-    {
-        "contamination": q_contamination,
-        "simhash_near_dups": q_simhash_near_dups,
-    }
-)
-ORACLE_SQL.update(
-    {
-        "contamination": _Q_CONTAMINATION,
-        "simhash_near_dups": _simhash_near_dups_sql(),
-    }
-)
-
 def q_temperature_mix(spark, sf_dir):
     """Temperature-0.5 corpus mixing over the 20 sources, weighted by
     n_chars, at a 60k-char budget: per-source keep fractions come from
@@ -1211,7 +1145,6 @@ _Q_INCREMENTAL_DEDUP = f"""
 """
 
 
-
 def q_bm25_rank(spark, sf_dir):
     """Okapi BM25 top-20 for a three-term query over the documents
     corpus (Robertson always-positive idf, k1=1.2, b=0.75) — the
@@ -1255,3 +1188,38 @@ _Q_BM25_RANK = """
   SELECT doc_id, CAST(round(s * 1e6) AS BIGINT) AS bm25_micros
   FROM scored ORDER BY bm25_micros DESC, doc_id LIMIT 20
 """
+
+
+# ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
+
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "jaccard_pairs_naive": (q_jaccard_pairs_naive, _Q_JACCARD_PAIRS),
+    "quality_score": (q_quality_score, _quality_score_sql()),
+    "window_lag_lead": (q_window_lag_lead, _Q_WINDOW_LAG_LEAD),
+    "unpivot_melt": (q_unpivot_melt, _Q_UNPIVOT_MELT),
+    "hash_split": (q_hash_split, _Q_HASH_SPLIT),
+    "repetition_ratio": (q_repetition_ratio, _Q_REPETITION_RATIO),
+    "contamination": (q_contamination, _Q_CONTAMINATION),
+    "simhash_near_dups": (q_simhash_near_dups, _simhash_near_dups_sql()),
+    "window_rank_surface": (q_window_rank_surface, _Q_WINDOW_RANK_SURFACE),
+    "pii_redact": (q_pii_redact, _pii_redact_sql()),
+    "unigram_logprob": (q_unigram_logprob, _Q_UNIGRAM_LOGPROB),
+    "stream_stream_join": (q_stream_stream_join, _Q_STREAM_STREAM_JOIN),
+    "sessionize_batch": (q_sessionize_batch, _Q_SESSIONIZE_BATCH),
+    "doc_chunks": (q_doc_chunks, _Q_DOC_CHUNKS),
+    "tfidf_terms": (q_tfidf_terms, _Q_TFIDF_TERMS),
+    "containment_pairs": (q_containment_pairs, _Q_CONTAINMENT_PAIRS),
+    "stratified_sample": (q_stratified_sample, _Q_STRATIFIED_SAMPLE),
+    "dedup_components": (q_dedup_components, _Q_DEDUP_COMPONENTS),
+    "simhash16": (q_simhash16, _simhash_sql(16)),
+    "temperature_mix": (q_temperature_mix, _Q_TEMPERATURE_MIX),
+    "semdedup_pairs": (q_semdedup_pairs, _Q_SEMDEDUP_PAIRS),
+    "semdedup_auto": (q_semdedup_auto, _Q_SEMDEDUP_AUTO),
+    "dup_ngram_stats": (q_dup_ngram_stats, _Q_DUP_NGRAM_STATS),
+    "bpe_pairs": (q_bpe_pairs, _Q_BPE_PAIRS),
+    "event_sequences": (q_event_sequences, _Q_EVENT_SEQUENCES),
+    "incremental_dedup": (q_incremental_dedup, _Q_INCREMENTAL_DEDUP),
+    "bm25_rank": (q_bm25_rank, _Q_BM25_RANK),
+}

@@ -1,116 +1,14 @@
-"""Verifier tier (block 2 of 2): LM scoring, profiling, index dedup,
-line dedup, funnels, provenance — and the VERIFIER_QUERIES /
-VERIFIER_ORACLE_SQL dict definitions (which reference both blocks).
-Formerly part of the single-file queries.py."""
+"""Verifier family (block 2 of 2): LM scoring, profiling, index dedup,
+line dedup, funnels, provenance."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
-    jaccard_pairs,
     minhash_lsh_candidates,
-    simhash16,
     Callable,
-    DataFrame,
     F,
-    SparkSession,
-    _DSUM,
-    _dsum,
     _t,
-    fingerprint,
-    language_id,
-    read_table,
 )
-from slow_tortoise_spark.queries.catalog import ORACLE_SQL, QUERIES
-from slow_tortoise_spark.queries.star import (
-    _Q_SEMI_JOIN,
-    _Q_SET_OPS,
-    _Q_WINDOW_RUNNING,
-    q_semi_join,
-    q_set_ops,
-    q_window_running,
-)
-from slow_tortoise_spark.queries.datacube import (
-    _Q_REGION_LISTS,
-    _Q_ROWS_PER_FEATURE,
-    _Q_TEMPORAL_AGG_ALL,
-    _Q_TEMPORAL_AGG_YEAR,
-    q_region_lists,
-    q_rows_per_feature,
-    q_temporal_agg_all,
-    q_temporal_agg_year,
-)
-from slow_tortoise_spark.queries.training import (
-    _MH_COLS,
-    _Q_DOC_FINGERPRINTS,
-    _Q_JACCARD_PAIRS,
-    _Q_MINHASH_LSH_PAIRS,
-    _Q_MINHASH_SIGNATURES,
-    _simhash_sql,
-    q_doc_fingerprints,
-    q_minhash_signatures,
-    q_simhash,
-)
-from slow_tortoise_spark.queries.extended import (
-    _Q_DATE_PARTS,
-    _Q_DEDUP_DROP,
-    _Q_STRING_FUNCS,
-    _hyperplane_sql,
-    _stream_events,
-    q_date_parts,
-    q_dedup_drop,
-    q_hyperplane_lsh_buckets,
-    q_string_funcs,
-)
-
-from slow_tortoise_spark.queries.verifier_base import (
-    _Q_BM25_RANK,
-    _Q_BPE_PAIRS,
-    _Q_CONTAINMENT_PAIRS,
-    _Q_DEDUP_COMPONENTS,
-    _Q_DOC_CHUNKS,
-    _Q_DUP_NGRAM_STATS,
-    _Q_EVENT_SEQUENCES,
-    _Q_HASH_SPLIT,
-    _Q_INCREMENTAL_DEDUP,
-    _Q_REPETITION_RATIO,
-    _Q_SEMDEDUP_AUTO,
-    _Q_SEMDEDUP_PAIRS,
-    _Q_SESSIONIZE_BATCH,
-    _Q_STRATIFIED_SAMPLE,
-    _Q_STREAM_STREAM_JOIN,
-    _Q_TEMPERATURE_MIX,
-    _Q_TFIDF_TERMS,
-    _Q_UNIGRAM_LOGPROB,
-    _Q_UNPIVOT_MELT,
-    _Q_WINDOW_LAG_LEAD,
-    _Q_WINDOW_RANK_SURFACE,
-    _pii_redact_sql,
-    _quality_score_sql,
-    q_bm25_rank,
-    q_bpe_pairs,
-    q_containment_pairs,
-    q_dedup_components,
-    q_doc_chunks,
-    q_dup_ngram_stats,
-    q_event_sequences,
-    q_hash_split,
-    q_incremental_dedup,
-    q_jaccard_pairs_naive,
-    q_semdedup_auto,
-    q_pii_redact,
-    q_quality_score,
-    q_repetition_ratio,
-    q_semdedup_pairs,
-    q_sessionize_batch,
-    q_simhash16,
-    q_stratified_sample,
-    q_stream_stream_join,
-    q_temperature_mix,
-    q_tfidf_terms,
-    q_unigram_logprob,
-    q_unpivot_melt,
-    q_window_lag_lead,
-    q_window_rank_surface,
-)
+from slow_tortoise_spark.queries.training import _Q_MINHASH_LSH_PAIRS
 
 
 def q_bigram_logprob(spark, sf_dir):
@@ -341,29 +239,6 @@ _Q_STREAMING_INDEX_DEDUP = """
     AND n.f NOT IN (SELECT f FROM fp WHERE doc_id % 5 != 0)
   ORDER BY n.doc_id
 """
-
-
-# Round-3 rotation: the training/mixing ops earn driver CORRECTNESS rows;
-# the displaced demo/subsumed entries stay oracle-checked in the verifier
-# tier below (rotation mechanism endorsed by the round-2 review).
-QUERIES.update(
-    {
-        "pii_redact": q_pii_redact,
-        "temperature_mix": q_temperature_mix,
-        "semdedup_pairs": q_semdedup_pairs,
-        "dup_ngram_stats": q_dup_ngram_stats,
-        "event_sequences": q_event_sequences,
-    }
-)
-ORACLE_SQL.update(
-    {
-        "pii_redact": _pii_redact_sql(),
-        "temperature_mix": _Q_TEMPERATURE_MIX,
-        "semdedup_pairs": _Q_SEMDEDUP_PAIRS,
-        "dup_ngram_stats": _Q_DUP_NGRAM_STATS,
-        "event_sequences": _Q_EVENT_SEQUENCES,
-    }
-)
 
 
 def q_dedup_lines(spark, sf_dir):
@@ -631,120 +506,22 @@ _Q_BLOCKLIST_FILTER = f"""
 """
 
 
-# Round-4 rotation: the stream-static dedup join, transitive-closure
-# clustering, bigram LM scoring, and BPE pair counting move into the
-# 50-entry driver catalog (each earns a CORRECTNESS row); the displaced
-# entries below stay oracle-checked in the verifier tier.
-QUERIES.update(
-    {
-        "streaming_index_dedup": q_streaming_index_dedup,
-        "dedup_components": q_dedup_components,
-        "bigram_logprob": q_bigram_logprob,
-        "bpe_pairs": q_bpe_pairs,
-    }
-)
-ORACLE_SQL.update(
-    {
-        "streaming_index_dedup": _Q_STREAMING_INDEX_DEDUP,
-        "dedup_components": _Q_DEDUP_COMPONENTS,
-        "bigram_logprob": _Q_BIGRAM_LOGPROB,
-        "bpe_pairs": _Q_BPE_PAIRS,
-    }
-)
+# ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
 
-
-VERIFIER_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dedup_lines": q_dedup_lines,
-    "domain_counts": q_domain_counts,
-    "blocklist_filter": q_blocklist_filter,
-    "edit_distance_verify": q_edit_distance_verify,
-    "lsh_edit_funnel": q_lsh_edit_funnel,
-    "source_cap": q_source_cap,
-    "simhash": q_simhash,
-    "quality_score": q_quality_score,
-    "window_lag_lead": q_window_lag_lead,
-    "hash_split": q_hash_split,
-    "temporal_agg_all": q_temporal_agg_all,
-    "temporal_agg_year": q_temporal_agg_year,
-    "minhash_signatures": q_minhash_signatures,
-    "hyperplane_lsh_buckets": q_hyperplane_lsh_buckets,
-    "jaccard_pairs_naive": q_jaccard_pairs_naive,
-    "unpivot_melt": q_unpivot_melt,
-    "repetition_ratio": q_repetition_ratio,
-    "window_rank_surface": q_window_rank_surface,
-    "window_running": q_window_running,
-    "date_parts": q_date_parts,
-    "dedup_drop": q_dedup_drop,
-    "doc_fingerprints": q_doc_fingerprints,
-    "simhash16": q_simhash16,
-    "unigram_logprob": q_unigram_logprob,
-    "stream_stream_join": q_stream_stream_join,
-    "sessionize_batch": q_sessionize_batch,
-    "doc_chunks": q_doc_chunks,
-    "tfidf_terms": q_tfidf_terms,
-    "containment_pairs": q_containment_pairs,
-    "stratified_sample": q_stratified_sample,
-    "semi_join": q_semi_join,
-    "set_ops": q_set_ops,
-    "region_lists": q_region_lists,
-    "rows_per_feature": q_rows_per_feature,
-    "string_funcs": q_string_funcs,
-    "incremental_dedup": q_incremental_dedup,
-    "xcorpus_logprob": q_xcorpus_logprob,
-    "profile_table": q_profile_table,
-    "skew_report": q_skew_report,
-    # the 100 TB auto-scaled SemDeDup convention (round-8 verdict item 5):
-    # n_cells=None pins cell SIZE, oracle replays the dynamic cell count
-    "semdedup_auto": q_semdedup_auto,
-    # BM25 retrieval ranking (round 9) — the term-stats family's
-    # doc-ranking completion
-    "bm25_rank": q_bm25_rank,
-}
-
-VERIFIER_ORACLE_SQL: dict[str, str] = {
-    "dedup_lines": _Q_DEDUP_LINES,
-    "domain_counts": _Q_DOMAIN_COUNTS,
-    "blocklist_filter": _Q_BLOCKLIST_FILTER,
-    "edit_distance_verify": _Q_EDIT_DISTANCE_VERIFY,
-    "lsh_edit_funnel": _Q_LSH_EDIT_FUNNEL.format(
-        lsh_sql=_Q_MINHASH_LSH_PAIRS
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "bigram_logprob": (q_bigram_logprob, _Q_BIGRAM_LOGPROB),
+    "xcorpus_logprob": (q_xcorpus_logprob, _Q_XCORPUS_LOGPROB),
+    "profile_table": (q_profile_table, _profile_sql()),
+    "skew_report": (q_skew_report, _Q_SKEW_REPORT),
+    "streaming_index_dedup": (q_streaming_index_dedup, _Q_STREAMING_INDEX_DEDUP),
+    "dedup_lines": (q_dedup_lines, _Q_DEDUP_LINES),
+    "lsh_edit_funnel": (
+        q_lsh_edit_funnel, _Q_LSH_EDIT_FUNNEL.format(lsh_sql=_Q_MINHASH_LSH_PAIRS),
     ),
-    "source_cap": _Q_SOURCE_CAP,
-    "simhash": _simhash_sql(),
-    "quality_score": _quality_score_sql(),
-    "window_lag_lead": _Q_WINDOW_LAG_LEAD,
-    "hash_split": _Q_HASH_SPLIT,
-    "temporal_agg_all": _Q_TEMPORAL_AGG_ALL,
-    "temporal_agg_year": _Q_TEMPORAL_AGG_YEAR,
-    "minhash_signatures": _Q_MINHASH_SIGNATURES,
-    "hyperplane_lsh_buckets": _hyperplane_sql(),
-    "jaccard_pairs_naive": _Q_JACCARD_PAIRS,
-    "unpivot_melt": _Q_UNPIVOT_MELT,
-    "repetition_ratio": _Q_REPETITION_RATIO,
-    "window_rank_surface": _Q_WINDOW_RANK_SURFACE,
-    "window_running": _Q_WINDOW_RUNNING,
-    "date_parts": _Q_DATE_PARTS,
-    "dedup_drop": _Q_DEDUP_DROP,
-    "doc_fingerprints": _Q_DOC_FINGERPRINTS,
-    "simhash16": _simhash_sql(16),
-    "unigram_logprob": _Q_UNIGRAM_LOGPROB,
-    "stream_stream_join": _Q_STREAM_STREAM_JOIN,
-    "sessionize_batch": _Q_SESSIONIZE_BATCH,
-    "doc_chunks": _Q_DOC_CHUNKS,
-    "tfidf_terms": _Q_TFIDF_TERMS,
-    "containment_pairs": _Q_CONTAINMENT_PAIRS,
-    "stratified_sample": _Q_STRATIFIED_SAMPLE,
-    "semi_join": _Q_SEMI_JOIN,
-    "set_ops": _Q_SET_OPS,
-    "region_lists": _Q_REGION_LISTS,
-    "rows_per_feature": _Q_ROWS_PER_FEATURE,
-    "string_funcs": _Q_STRING_FUNCS,
-    "incremental_dedup": _Q_INCREMENTAL_DEDUP,
-    "xcorpus_logprob": _Q_XCORPUS_LOGPROB,
-    "bm25_rank": _Q_BM25_RANK,
-    "profile_table": _profile_sql(),
-    "skew_report": _Q_SKEW_REPORT,
-    "semdedup_auto": _Q_SEMDEDUP_AUTO,
+    "source_cap": (q_source_cap, _Q_SOURCE_CAP),
+    "edit_distance_verify": (q_edit_distance_verify, _Q_EDIT_DISTANCE_VERIFY),
+    "domain_counts": (q_domain_counts, _Q_DOMAIN_COUNTS),
+    "blocklist_filter": (q_blocklist_filter, _Q_BLOCKLIST_FILTER),
 }
-
-

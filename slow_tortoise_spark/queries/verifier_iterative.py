@@ -1,17 +1,13 @@
-"""Verifier tier: iterative/trained operators (BPE training, span
-dedup, winnowing, gramian/PCA, Bloom contamination, k-means, logreg).
-Formerly queries.py lines 3855-4356."""
+"""Iterative/trained operators: BPE training, span dedup, winnowing,
+gramian/PCA, Bloom contamination, k-means, logreg, PQ/IVF-PQ, graph
+ranking and centrality, sequence packing and token budgets."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
+    Callable,
     build_ivf_index,
     F,
     _t,
-    read_table,
-)
-from slow_tortoise_spark.queries.verifier_core import (
-    VERIFIER_ORACLE_SQL,
-    VERIFIER_QUERIES,
 )
 
 # Iterative BPE training (verifier tier — the oracle replays every merge)
@@ -59,10 +55,6 @@ def _bpe_train_sql(k: int = 8) -> str:
         for i in range(k)
     )
     return f"WITH {', '.join(ctes)} SELECT * FROM ({unions}) ORDER BY rank"
-
-
-VERIFIER_QUERIES["bpe_train"] = q_bpe_train
-VERIFIER_ORACLE_SQL["bpe_train"] = _bpe_train_sql(8)
 
 
 # ---------------------------------------------------------------------------
@@ -192,12 +184,6 @@ _Q_WINNOW_FP = """
 """
 
 
-VERIFIER_QUERIES["dup_span_removal"] = q_dup_span_removal
-VERIFIER_ORACLE_SQL["dup_span_removal"] = _Q_DUP_SPAN_REMOVAL
-VERIFIER_QUERIES["winnow_fp"] = q_winnow_fp
-VERIFIER_ORACLE_SQL["winnow_fp"] = _Q_WINNOW_FP
-
-
 # ---------------------------------------------------------------------------
 # Embedding gramian + Bloom-filter contamination (verifier tier)
 # ---------------------------------------------------------------------------
@@ -322,12 +308,6 @@ def _bloom_sql(n: int = 5, k: int = 5) -> str:
 """
 
 
-VERIFIER_QUERIES["embedding_gramian"] = q_embedding_gramian
-VERIFIER_ORACLE_SQL["embedding_gramian"] = _Q_EMBEDDING_GRAMIAN
-VERIFIER_QUERIES["bloom_contamination"] = q_bloom_contamination
-VERIFIER_ORACLE_SQL["bloom_contamination"] = _bloom_sql(5, 5)
-
-
 def q_shuffle_rows(spark, sf_dir):
     """Deterministic epoch-shuffle order over documents: (bucket,
     bucket_rank) is a reproducible total order with no RNG state."""
@@ -357,10 +337,6 @@ _Q_SHUFFLE_ROWS = """
   FROM b
   ORDER BY bucket, bucket_rank
 """
-
-
-VERIFIER_QUERIES["shuffle_rows"] = q_shuffle_rows
-VERIFIER_ORACLE_SQL["shuffle_rows"] = _Q_SHUFFLE_ROWS
 
 
 # ---------------------------------------------------------------------------
@@ -429,10 +405,6 @@ def _kmeans_sql(n_cells: int = 4, iters: int = 2) -> str:
         "WITH " + ", ".join(ctes)
         + f" SELECT vec_id, cell FROM assign{iters} ORDER BY vec_id"
     )
-
-
-VERIFIER_QUERIES["kmeans_assign"] = q_kmeans_assign
-VERIFIER_ORACLE_SQL["kmeans_assign"] = _kmeans_sql(4, 2)
 
 
 # ---------------------------------------------------------------------------
@@ -510,12 +482,6 @@ def _logreg_sql(dim: int = 8, iters: int = 5, lr: float = 0.5) -> str:
         + f" SELECT j, CAST(round(wv * 1e6) AS BIGINT) AS w_micro"
         f" FROM w{iters} ORDER BY j"
     )
-
-
-VERIFIER_QUERIES["logreg_weights"] = q_logreg_weights
-VERIFIER_ORACLE_SQL["logreg_weights"] = _logreg_sql(8, 5, 0.5)
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -602,10 +568,6 @@ def _pq_codes_sql(m: int = 4, ksub: int = 4, dsub: int = 16,
     )
 
 
-VERIFIER_QUERIES["pq_codes"] = q_pq_codes
-VERIFIER_ORACLE_SQL["pq_codes"] = _pq_codes_sql(4, 4, 16, 1)
-
-
 def q_pq_topk(spark, sf_dir):
     """Asymmetric-distance PQ top-10 for corpus vector 0 as the query:
     the raw query subvectors score against the trained codebooks through
@@ -643,10 +605,6 @@ def _pq_topk_sql(m: int = 4, ksub: int = 4, dsub: int = 16,
           f" AS adc_dist_micros FROM scored"
           f" ORDER BY adc_dist_micros, vec_id LIMIT {k}"
     )
-
-
-VERIFIER_QUERIES["pq_topk"] = q_pq_topk
-VERIFIER_ORACLE_SQL["pq_topk"] = _pq_topk_sql(4, 4, 16, 1, 0, 10)
 
 
 # ---------------------------------------------------------------------------
@@ -820,10 +778,6 @@ def _ivfpq_sql(k: int = 10, **kw) -> str:
     )
 
 
-VERIFIER_QUERIES["ivfpq_topk"] = q_ivfpq_topk
-VERIFIER_ORACLE_SQL["ivfpq_topk"] = _ivfpq_sql()
-
-
 # ---------------------------------------------------------------------------
 # PageRank (verifier tier — the oracle replays every power iteration)
 # ---------------------------------------------------------------------------
@@ -931,10 +885,6 @@ def _pagerank_sql(iters: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["pagerank_graph"] = q_pagerank_graph
-VERIFIER_ORACLE_SQL["pagerank_graph"] = _pagerank_sql(3)
-
-
 def q_ivfpq_rerank(spark, sf_dir):
     """Two-stage IVFADC retrieval: ADC proposes 40 candidates over the
     compressed codes, then ONLY those rows' raw vectors are read for an
@@ -979,10 +929,6 @@ def _ivfpq_rerank_sql(rerank: int = 40, k: int = 10) -> str:
         + f" SELECT vec_id, round(dot / (nv * qn2.nq), 6) AS cosine"
           f" FROM rdots, qn2 ORDER BY cosine DESC, vec_id LIMIT {k}"
     )
-
-
-VERIFIER_QUERIES["ivfpq_rerank"] = q_ivfpq_rerank
-VERIFIER_ORACLE_SQL["ivfpq_rerank"] = _ivfpq_rerank_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -1064,10 +1010,6 @@ def _harmonic_sql(radius: int = 3) -> str:
         + f" SELECT n.node, CAST(ROUND(({fold}) * 1e6) AS BIGINT)"
           f" AS harmonic_micros FROM hnodes n{joins} ORDER BY n.node"
     )
-
-
-VERIFIER_QUERIES["harmonic_centrality"] = q_harmonic_centrality
-VERIFIER_ORACLE_SQL["harmonic_centrality"] = _harmonic_sql(3)
 
 
 # ---------------------------------------------------------------------------
@@ -1188,10 +1130,6 @@ def _hyperball_sql(radius: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["hyperball_harmonic"] = q_hyperball_harmonic
-VERIFIER_ORACLE_SQL["hyperball_harmonic"] = _hyperball_sql(3)
-
-
 # ---------------------------------------------------------------------------
 # k-core decomposition (verifier tier — the oracle unrolls the peeling
 # fixpoint, which is unique and order-independent, so generous extra
@@ -1247,10 +1185,6 @@ def _k_core_sql(k: int = 10, rounds: int = 16) -> str:
         + f" SELECT src AS node, COUNT(*) AS degree FROM adj{rounds}"
           f" GROUP BY src ORDER BY node"
     )
-
-
-VERIFIER_QUERIES["k_core"] = q_k_core
-VERIFIER_ORACLE_SQL["k_core"] = _k_core_sql(10)
 
 
 # ---------------------------------------------------------------------------
@@ -1328,10 +1262,6 @@ def _trustrank_sql(iters: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["trustrank"] = q_trustrank
-VERIFIER_ORACLE_SQL["trustrank"] = _trustrank_sql(3)
-
-
 # ---------------------------------------------------------------------------
 # HyperBall closeness centrality (verifier tier — same register replay
 # as hyperball_harmonic, closeness fold)
@@ -1375,10 +1305,6 @@ def _hyperball_closeness_sql(radius: int = 3) -> str:
           f" FROM hnodes n{_hb_oracle_joins(radius)})"
           f" ORDER BY node"
     )
-
-
-VERIFIER_QUERIES["hyperball_closeness"] = q_hyperball_closeness
-VERIFIER_ORACLE_SQL["hyperball_closeness"] = _hyperball_closeness_sql(3)
 
 
 # ---------------------------------------------------------------------------
@@ -1432,10 +1358,6 @@ def _label_propagation_sql(iters: int = 4) -> str:
         "WITH " + ", ".join(ctes)
         + f" SELECT node, label FROM lab{iters} ORDER BY node"
     )
-
-
-VERIFIER_QUERIES["label_propagation"] = q_label_propagation
-VERIFIER_ORACLE_SQL["label_propagation"] = _label_propagation_sql(4)
 
 
 # ---------------------------------------------------------------------------
@@ -1529,10 +1451,6 @@ def _pagerank_weighted_sql(iters: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["pagerank_weighted"] = q_pagerank_weighted
-VERIFIER_ORACLE_SQL["pagerank_weighted"] = _pagerank_weighted_sql(3)
-
-
 # ---------------------------------------------------------------------------
 # Core number / full degeneracy decomposition (verifier tier — the
 # oracle replays the engine's bucket-peeling loop step for step,
@@ -1613,10 +1531,6 @@ def _core_number_sql(steps: int = 16) -> str:
         f" SELECT node, CAST(core AS INT) AS core FROM ({union})"
         f" ORDER BY node"
     )
-
-
-VERIFIER_QUERIES["core_number"] = q_core_number
-VERIFIER_ORACLE_SQL["core_number"] = _core_number_sql(16)
 
 
 # ---------------------------------------------------------------------------
@@ -1716,9 +1630,6 @@ SELECT d.src AS node,
 FROM gdeg d LEFT JOIN gcorner c ON c.node = d.src
 ORDER BY node"""
 
-VERIFIER_QUERIES["triangle_counts"] = q_triangle_counts
-VERIFIER_ORACLE_SQL["triangle_counts"] = _Q_TRIANGLE_COUNTS
-
 
 # ---------------------------------------------------------------------------
 # Neighborhood function / effective diameter (verifier tier — same
@@ -1782,10 +1693,6 @@ def _neighborhood_sql(radius: int = 3) -> str:
     )
 
 
-VERIFIER_QUERIES["neighborhood_function"] = q_neighborhood_function
-VERIFIER_ORACLE_SQL["neighborhood_function"] = _neighborhood_sql(3)
-
-
 # ---------------------------------------------------------------------------
 # Global transitivity (verifier tier — one aggregation over the
 # replayed triangle pyramid)
@@ -1834,9 +1741,6 @@ SELECT CAST(c3 // 3 AS BIGINT) AS triangles,
 FROM (SELECT
   (SELECT CAST(COALESCE(SUM(t), 0) AS BIGINT) FROM gcorner) AS c3,
   (SELECT CAST(COALESCE(SUM(d * (d - 1)), 0) AS BIGINT) FROM gdeg) AS dd)"""
-
-VERIFIER_QUERIES["transitivity"] = q_transitivity
-VERIFIER_ORACLE_SQL["transitivity"] = _Q_TRANSITIVITY
 
 
 # ---------------------------------------------------------------------------
@@ -1909,12 +1813,6 @@ def _label_propagation_weighted_sql(iters: int = 4) -> str:
         "WITH " + ", ".join(ctes)
         + f" SELECT node, label FROM wlab{iters} ORDER BY node"
     )
-
-
-VERIFIER_QUERIES["label_propagation_weighted"] = q_label_propagation_weighted
-VERIFIER_ORACLE_SQL["label_propagation_weighted"] = (
-    _label_propagation_weighted_sql(4)
-)
 
 
 # ---------------------------------------------------------------------------
@@ -2088,20 +1986,6 @@ SELECT doc_id, bucket, tokens,
 FROM acum ORDER BY doc_id"""
 
 
-VERIFIER_QUERIES["pack_sequences"] = q_pack_sequences
-VERIFIER_ORACLE_SQL["pack_sequences"] = _pack_sequences_sql(64, 8)
-VERIFIER_QUERIES["pack_sequences_shuffled"] = q_pack_sequences_shuffled
-VERIFIER_ORACLE_SQL["pack_sequences_shuffled"] = _pack_sequences_sql(
-    64, 8, order_by_hash=True
-)
-VERIFIER_QUERIES["pack_sequences_append"] = q_pack_sequences_append
-VERIFIER_ORACLE_SQL["pack_sequences_append"] = _pack_sequences_append_sql(
-    64, 8
-)
-VERIFIER_QUERIES["sequence_index"] = q_sequence_index
-VERIFIER_ORACLE_SQL["sequence_index"] = _sequence_index_sql(64, 8)
-
-
 # ---------------------------------------------------------------------------
 # Budget-capped quality selection (verifier tier — the oracle IS the
 # naive global-window plan the distributed operator replaces)
@@ -2210,8 +2094,6 @@ WHERE (source = 'src0' AND ce <= 900)
 ORDER BY doc_id"""
 
 
-VERIFIER_QUERIES["token_budget_select"] = q_token_budget_select
-VERIFIER_ORACLE_SQL["token_budget_select"] = _Q_TOKEN_BUDGET_SELECT
 def q_token_budget_epochs(spark, sf_dir):
     """Data-constrained epoch plan: a 70k-token budget over a ~27-28k
     token corpus (max 4 epochs) — two full epochs for every doc plus a
@@ -2274,12 +2156,6 @@ SELECT doc_id, score, epoch FROM fullt
 UNION ALL
 SELECT doc_id, score, epoch FROM part
 ORDER BY doc_id, epoch"""
-
-
-VERIFIER_QUERIES["token_budget_mix"] = q_token_budget_mix
-VERIFIER_ORACLE_SQL["token_budget_mix"] = _Q_TOKEN_BUDGET_MIX
-VERIFIER_QUERIES["token_budget_epochs"] = q_token_budget_epochs
-VERIFIER_ORACLE_SQL["token_budget_epochs"] = _Q_TOKEN_BUDGET_EPOCHS
 
 
 def q_pack_sequences_epochs(spark, sf_dir):
@@ -2374,12 +2250,6 @@ SELECT doc_id, epoch, bucket, toks AS tokens,
 FROM pc ORDER BY doc_id, epoch"""
 
 
-VERIFIER_QUERIES["pack_sequences_epochs"] = q_pack_sequences_epochs
-VERIFIER_ORACLE_SQL["pack_sequences_epochs"] = (
-    _pack_sequences_epochs_sql(64, 8)
-)
-
-
 def q_pack_sequences_nosplit(spark, sf_dir):
     """NO-SPLIT packing manifest (greedy next-fit, oversize docs
     isolated): every document wholly inside one 64-token sequence of
@@ -2449,7 +2319,53 @@ SELECT doc_id, bucket, tokens, seq, seq_offset
 FROM chain ORDER BY doc_id"""
 
 
-VERIFIER_QUERIES["pack_sequences_nosplit"] = q_pack_sequences_nosplit
-VERIFIER_ORACLE_SQL["pack_sequences_nosplit"] = (
-    _pack_sequences_nosplit_sql(64, 8)
-)
+# ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
+
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "bpe_train": (q_bpe_train, _bpe_train_sql(8)),
+    "dup_span_removal": (q_dup_span_removal, _Q_DUP_SPAN_REMOVAL),
+    "winnow_fp": (q_winnow_fp, _Q_WINNOW_FP),
+    "embedding_gramian": (q_embedding_gramian, _Q_EMBEDDING_GRAMIAN),
+    "bloom_contamination": (q_bloom_contamination, _bloom_sql(5, 5)),
+    "shuffle_rows": (q_shuffle_rows, _Q_SHUFFLE_ROWS),
+    "kmeans_assign": (q_kmeans_assign, _kmeans_sql(4, 2)),
+    "logreg_weights": (q_logreg_weights, _logreg_sql(8, 5, 0.5)),
+    "pq_codes": (q_pq_codes, _pq_codes_sql(4, 4, 16, 1)),
+    "pq_topk": (q_pq_topk, _pq_topk_sql(4, 4, 16, 1, 0, 10)),
+    "ivfpq_topk": (q_ivfpq_topk, _ivfpq_sql()),
+    "pagerank_graph": (q_pagerank_graph, _pagerank_sql(3)),
+    "ivfpq_rerank": (q_ivfpq_rerank, _ivfpq_rerank_sql()),
+    "harmonic_centrality": (q_harmonic_centrality, _harmonic_sql(3)),
+    "hyperball_harmonic": (q_hyperball_harmonic, _hyperball_sql(3)),
+    "k_core": (q_k_core, _k_core_sql(10)),
+    "trustrank": (q_trustrank, _trustrank_sql(3)),
+    "hyperball_closeness": (q_hyperball_closeness, _hyperball_closeness_sql(3)),
+    "label_propagation": (q_label_propagation, _label_propagation_sql(4)),
+    "pagerank_weighted": (q_pagerank_weighted, _pagerank_weighted_sql(3)),
+    "core_number": (q_core_number, _core_number_sql(16)),
+    "triangle_counts": (q_triangle_counts, _Q_TRIANGLE_COUNTS),
+    "neighborhood_function": (q_neighborhood_function, _neighborhood_sql(3)),
+    "transitivity": (q_transitivity, _Q_TRANSITIVITY),
+    "label_propagation_weighted": (
+        q_label_propagation_weighted, _label_propagation_weighted_sql(4),
+    ),
+    "pack_sequences": (q_pack_sequences, _pack_sequences_sql(64, 8)),
+    "pack_sequences_shuffled": (
+        q_pack_sequences_shuffled, _pack_sequences_sql(64, 8, order_by_hash=True),
+    ),
+    "sequence_index": (q_sequence_index, _sequence_index_sql(64, 8)),
+    "pack_sequences_append": (
+        q_pack_sequences_append, _pack_sequences_append_sql(64, 8),
+    ),
+    "token_budget_select": (q_token_budget_select, _Q_TOKEN_BUDGET_SELECT),
+    "token_budget_mix": (q_token_budget_mix, _Q_TOKEN_BUDGET_MIX),
+    "token_budget_epochs": (q_token_budget_epochs, _Q_TOKEN_BUDGET_EPOCHS),
+    "pack_sequences_epochs": (
+        q_pack_sequences_epochs, _pack_sequences_epochs_sql(64, 8),
+    ),
+    "pack_sequences_nosplit": (
+        q_pack_sequences_nosplit, _pack_sequences_nosplit_sql(64, 8),
+    ),
+}

@@ -1,17 +1,11 @@
-"""Verifier tier: SQ similarity, DSIR, BPE encode, z-order, CDC,
-count-min, Gopher rules, NFC, HTML, bloom join, resampling.  Formerly
-queries.py lines 4386-4987."""
+"""SQ similarity, DSIR, BPE encode, z-order, CDC, count-min, Gopher
+rules, NFC, HTML, bloom join, resampling."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
+    Callable,
     F,
-    _DSUM,
     _t,
-    read_table,
-)
-from slow_tortoise_spark.queries.verifier_core import (
-    VERIFIER_ORACLE_SQL,
-    VERIFIER_QUERIES,
 )
 from slow_tortoise_spark.queries.tiles import (
     _TILE_SQL,
@@ -58,10 +52,6 @@ _Q_SQ_TOPK = """
   ORDER BY dist ASC, vec_id
   LIMIT 10
 """
-
-
-VERIFIER_QUERIES["sq_topk"] = q_sq_topk
-VERIFIER_ORACLE_SQL["sq_topk"] = _Q_SQ_TOPK
 
 
 # ---------------------------------------------------------------------------
@@ -132,10 +122,6 @@ _Q_DSIR_WEIGHTS = f"""
 """
 
 
-VERIFIER_QUERIES["dsir_weights"] = q_dsir_weights
-VERIFIER_ORACLE_SQL["dsir_weights"] = _Q_DSIR_WEIGHTS
-
-
 # ---------------------------------------------------------------------------
 # BPE document encoding (token budget under a corpus-trained tokenizer)
 # ---------------------------------------------------------------------------
@@ -198,10 +184,6 @@ def _bpe_encode_sql(k: int = 8) -> str:
   ORDER BY d.doc_id"""
 
 
-VERIFIER_QUERIES["bpe_encode"] = q_bpe_encode
-VERIFIER_ORACLE_SQL["bpe_encode"] = _bpe_encode_sql(8)
-
-
 # ---------------------------------------------------------------------------
 # Z-order (Morton) layout diagnostics
 # ---------------------------------------------------------------------------
@@ -250,10 +232,6 @@ _Q_ZORDER_STATS = f"""
 """
 
 
-VERIFIER_QUERIES["zorder_stats"] = q_zorder_stats
-VERIFIER_ORACLE_SQL["zorder_stats"] = _Q_ZORDER_STATS
-
-
 # ---------------------------------------------------------------------------
 # CDC compaction: latest-version-per-key view
 # ---------------------------------------------------------------------------
@@ -283,10 +261,6 @@ _Q_LATEST_ORDERS = """
     PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) = 1
   ORDER BY o_custkey
 """
-
-
-VERIFIER_QUERIES["latest_orders"] = q_latest_orders
-VERIFIER_ORACLE_SQL["latest_orders"] = _Q_LATEST_ORDERS
 
 
 # ---------------------------------------------------------------------------
@@ -350,10 +324,6 @@ def _cms_sql(width: int = 64, depth: int = 4) -> str:
   FROM p {joins}
   ORDER BY p.tok
 """
-
-
-VERIFIER_QUERIES["cms_token_counts"] = q_cms_token_counts
-VERIFIER_ORACLE_SQL["cms_token_counts"] = _cms_sql(64, 4)
 
 
 # ---------------------------------------------------------------------------
@@ -426,10 +396,6 @@ _Q_GOPHER_RULES = f"""
 """
 
 
-VERIFIER_QUERIES["gopher_rules"] = q_gopher_rules
-VERIFIER_ORACLE_SQL["gopher_rules"] = _Q_GOPHER_RULES
-
-
 # ---------------------------------------------------------------------------
 # Unicode NFC normalization (pre-dedup canonicalization)
 # ---------------------------------------------------------------------------
@@ -459,10 +425,6 @@ _Q_NFC_NORMALIZE = """
          CASE WHEN nfc_normalize(text) = text THEN 0 ELSE 1 END AS changed
   FROM documents ORDER BY doc_id
 """
-
-
-VERIFIER_QUERIES["nfc_normalize"] = q_nfc_normalize
-VERIFIER_ORACLE_SQL["nfc_normalize"] = _Q_NFC_NORMALIZE
 
 
 # ---------------------------------------------------------------------------
@@ -524,10 +486,6 @@ _Q_STRIP_HTML = """
 """
 
 
-VERIFIER_QUERIES["strip_html"] = q_strip_html
-VERIFIER_ORACLE_SQL["strip_html"] = _Q_STRIP_HTML
-
-
 # ---------------------------------------------------------------------------
 # Bloom-filtered join (semi-join reduction)
 # ---------------------------------------------------------------------------
@@ -560,10 +518,6 @@ _Q_BLOOM_JOIN = """
   WHERE c.c_mktsegment = 'BUILDING' AND c.c_acctbal > 9000
   ORDER BY o.o_orderkey
 """
-
-
-VERIFIER_QUERIES["bloom_join"] = q_bloom_join
-VERIFIER_ORACLE_SQL["bloom_join"] = _Q_BLOOM_JOIN
 
 
 # ---------------------------------------------------------------------------
@@ -619,7 +573,20 @@ _Q_RESAMPLE_FFILL = """
 """
 
 
-VERIFIER_QUERIES["resample_ffill"] = q_resample_ffill
-VERIFIER_ORACLE_SQL["resample_ffill"] = _Q_RESAMPLE_FFILL
+# ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
 
-
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "sq_topk": (q_sq_topk, _Q_SQ_TOPK),
+    "dsir_weights": (q_dsir_weights, _Q_DSIR_WEIGHTS),
+    "bpe_encode": (q_bpe_encode, _bpe_encode_sql(8)),
+    "zorder_stats": (q_zorder_stats, _Q_ZORDER_STATS),
+    "latest_orders": (q_latest_orders, _Q_LATEST_ORDERS),
+    "cms_token_counts": (q_cms_token_counts, _cms_sql(64, 4)),
+    "gopher_rules": (q_gopher_rules, _Q_GOPHER_RULES),
+    "nfc_normalize": (q_nfc_normalize, _Q_NFC_NORMALIZE),
+    "strip_html": (q_strip_html, _Q_STRIP_HTML),
+    "bloom_join": (q_bloom_join, _Q_BLOOM_JOIN),
+    "resample_ffill": (q_resample_ffill, _Q_RESAMPLE_FFILL),
+}

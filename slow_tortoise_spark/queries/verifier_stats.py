@@ -1,16 +1,12 @@
-"""Verifier tier: MAD outliers, PSI drift, weighted sampling,
-negative pairs, grouping sets, salted join.  Formerly queries.py lines
-5019-5355."""
+"""MAD outliers, PSI drift, weighted sampling, negative pairs, grouping
+sets, salted join, perplexity buckets, KN smoothing, file round trips."""
 from __future__ import annotations
 
 from slow_tortoise_spark.queries._shared import (
+    Callable,
     F,
     _DSUM,
     _t,
-)
-from slow_tortoise_spark.queries.verifier_core import (
-    VERIFIER_ORACLE_SQL,
-    VERIFIER_QUERIES,
 )
 from slow_tortoise_spark.queries.verifier_scalarops import (
     _dsir_nib_sql,
@@ -63,10 +59,6 @@ _Q_MAD_OUTLIERS = """
   FROM dev d JOIN mad m USING (event_type)
   GROUP BY d.event_type ORDER BY d.event_type
 """
-
-
-VERIFIER_QUERIES["mad_outliers"] = q_mad_outliers
-VERIFIER_ORACLE_SQL["mad_outliers"] = _Q_MAD_OUTLIERS
 
 
 # ---------------------------------------------------------------------------
@@ -122,10 +114,6 @@ _Q_PSI_DRIFT = f"""
 """
 
 
-VERIFIER_QUERIES["psi_drift"] = q_psi_drift
-VERIFIER_ORACLE_SQL["psi_drift"] = _Q_PSI_DRIFT
-
-
 # ---------------------------------------------------------------------------
 # Deterministic weighted sampling (Efraimidis–Spirakis, keyed-hash RNG)
 # ---------------------------------------------------------------------------
@@ -154,10 +142,6 @@ _Q_WEIGHTED_SAMPLE = f"""
   SELECT doc_id, n_chars FROM pri
   ORDER BY p DESC, doc_id LIMIT 150
 """
-
-
-VERIFIER_QUERIES["weighted_sample"] = q_weighted_sample
-VERIFIER_ORACLE_SQL["weighted_sample"] = _Q_WEIGHTED_SAMPLE
 
 
 def q_resample_linear(spark, sf_dir):
@@ -223,10 +207,6 @@ _Q_RESAMPLE_LINEAR = """
 """
 
 
-VERIFIER_QUERIES["resample_linear"] = q_resample_linear
-VERIFIER_ORACLE_SQL["resample_linear"] = _Q_RESAMPLE_LINEAR
-
-
 # ---------------------------------------------------------------------------
 # Deterministic negative-pair sampling (contrastive training)
 # ---------------------------------------------------------------------------
@@ -269,10 +249,6 @@ _Q_NEGATIVE_PAIRS = """
 """
 
 
-VERIFIER_QUERIES["negative_pairs"] = q_negative_pairs
-VERIFIER_ORACLE_SQL["negative_pairs"] = _Q_NEGATIVE_PAIRS
-
-
 # ---------------------------------------------------------------------------
 # Explicit GROUPING SETS (asymmetric grain combinations)
 # ---------------------------------------------------------------------------
@@ -313,10 +289,6 @@ _Q_GROUPING_SETS = f"""
 """
 
 
-VERIFIER_QUERIES["grouping_sets"] = q_grouping_sets
-VERIFIER_ORACLE_SQL["grouping_sets"] = _Q_GROUPING_SETS
-
-
 # ---------------------------------------------------------------------------
 # Salted join (hot-key skew mitigation)
 # ---------------------------------------------------------------------------
@@ -346,10 +318,6 @@ _Q_SALTED_JOIN = """
   FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
   ORDER BY o.o_orderkey
 """
-
-
-VERIFIER_QUERIES["salted_join"] = q_salted_join
-VERIFIER_ORACLE_SQL["salted_join"] = _Q_SALTED_JOIN
 
 
 # ---------------------------------------------------------------------------
@@ -419,10 +387,6 @@ _Q_PPL_BUCKETS = """
   FROM per_doc
   ORDER BY doc_id
 """
-
-
-VERIFIER_QUERIES["ppl_buckets"] = q_ppl_buckets
-VERIFIER_ORACLE_SQL["ppl_buckets"] = _Q_PPL_BUCKETS
 
 
 # ---------------------------------------------------------------------------
@@ -530,10 +494,6 @@ _Q_KN_LOGPROB = """
 """
 
 
-VERIFIER_QUERIES["kn_logprob"] = q_kn_logprob
-VERIFIER_ORACLE_SQL["kn_logprob"] = _Q_KN_LOGPROB
-
-
 # ---------------------------------------------------------------------------
 # JSONL / CSV ingest round-trips (sources/textio.py)
 # ---------------------------------------------------------------------------
@@ -613,7 +573,20 @@ def q_csv_roundtrip(spark, sf_dir):
     return out
 
 
-VERIFIER_QUERIES["jsonl_roundtrip"] = q_jsonl_roundtrip
-VERIFIER_ORACLE_SQL["jsonl_roundtrip"] = _Q_DOCS_IDENTITY
-VERIFIER_QUERIES["csv_roundtrip"] = q_csv_roundtrip
-VERIFIER_ORACLE_SQL["csv_roundtrip"] = _Q_DOCS_IDENTITY
+# ---------------------------------------------------------------------------
+# Catalog entries, merged by catalog.py: name -> (Spark callable, oracle SQL)
+# ---------------------------------------------------------------------------
+
+ENTRIES: dict[str, tuple[Callable, str]] = {
+    "mad_outliers": (q_mad_outliers, _Q_MAD_OUTLIERS),
+    "psi_drift": (q_psi_drift, _Q_PSI_DRIFT),
+    "weighted_sample": (q_weighted_sample, _Q_WEIGHTED_SAMPLE),
+    "resample_linear": (q_resample_linear, _Q_RESAMPLE_LINEAR),
+    "negative_pairs": (q_negative_pairs, _Q_NEGATIVE_PAIRS),
+    "grouping_sets": (q_grouping_sets, _Q_GROUPING_SETS),
+    "salted_join": (q_salted_join, _Q_SALTED_JOIN),
+    "ppl_buckets": (q_ppl_buckets, _Q_PPL_BUCKETS),
+    "kn_logprob": (q_kn_logprob, _Q_KN_LOGPROB),
+    "jsonl_roundtrip": (q_jsonl_roundtrip, _Q_DOCS_IDENTITY),
+    "csv_roundtrip": (q_csv_roundtrip, _Q_DOCS_IDENTITY),
+}

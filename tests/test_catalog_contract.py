@@ -5,6 +5,48 @@ driver's correctness run."""
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+
+SNAPSHOT = os.path.join(os.path.dirname(__file__), "data", "catalog_snapshot.json")
+
+
+def _catalog_snapshot() -> dict:
+    """The four catalog dicts reduced to JSON: driver keys in order, the
+    defining ``module.qualname`` of every callable, and the sha256 of
+    every oracle SQL string."""
+    from slow_tortoise_spark.queries import (
+        ORACLE_SQL,
+        QUERIES,
+        VERIFIER_ORACLE_SQL,
+        VERIFIER_QUERIES,
+    )
+
+    def fns(d):
+        return {k: f"{f.__module__}.{f.__qualname__}" for k, f in d.items()}
+
+    def shas(d):
+        return {k: hashlib.sha256(s.encode()).hexdigest() for k, s in d.items()}
+
+    return {
+        "QUERIES_ORDER": list(QUERIES),
+        "QUERIES": fns(QUERIES),
+        "ORACLE_SQL": shas(ORACLE_SQL),
+        "VERIFIER_QUERIES": fns(VERIFIER_QUERIES),
+        "VERIFIER_ORACLE_SQL": shas(VERIFIER_ORACLE_SQL),
+    }
+
+
+def test_catalog_snapshot():
+    """Catalog membership, tier, order, callables and oracle text are
+    pinned by ``tests/data/catalog_snapshot.json``.  Moving a query
+    between tiers or editing an oracle is a deliberate change: rewrite
+    the fixture with ``json.dump(_catalog_snapshot(), fh, indent=1,
+    sort_keys=True)`` in the same commit."""
+    with open(SNAPSHOT) as fh:
+        assert _catalog_snapshot() == json.load(fh)
+
 
 def test_driver_catalog_is_complete_and_capped():
     import __spark_entry__ as e
@@ -25,6 +67,23 @@ def test_driver_catalog_is_complete_and_capped():
     # every entry is callable / SQL text
     assert all(callable(f) for f in q.values())
     assert all(isinstance(s, str) and s.strip() for s in o.values())
+
+    # membership is declared once: 50 unique driver names, and every
+    # family entry lands in exactly one tier (none silently shadowed)
+    from slow_tortoise_spark.queries.catalog import DRIVER_CATALOG, FAMILIES
+
+    assert len(DRIVER_CATALOG) == len(set(DRIVER_CATALOG)) == 50
+    assert list(q) == list(DRIVER_CATALOG)
+    sizes = [len(f.ENTRIES) for f in FAMILIES]
+    assert sum(sizes) == 150 == len(q) + len(VERIFIER_QUERIES), sizes
+    # each family declares only the queries it defines
+    misplaced = {
+        name: (fam.__name__, fn.__module__)
+        for fam in FAMILIES
+        for name, (fn, _) in fam.ENTRIES.items()
+        if fn.__module__ != fam.__name__
+    }
+    assert not misplaced, misplaced
 
 
 def test_rotation_staleness_invariant():

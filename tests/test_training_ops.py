@@ -4052,6 +4052,52 @@ def test_pagerank_releases_storage(spark):
     assert after <= base + 1  # the returned frame itself was the last holder
 
 
+@pytest.mark.parametrize("failing_call", [2, 3])
+def test_pagerank_releases_caches_on_every_path(spark, monkeypatch,
+                                                failing_call):
+    """A normal run leaves nothing in the cache manager; a run whose
+    round fails (call 2 = round 1's checkpoint, call 3 = round 2's,
+    after the edge cache is already dropped) re-raises with every cache
+    and the live rank checkpoint released."""
+    from pyspark.sql import Row
+
+    from slow_tortoise_spark.operators import graph
+    from slow_tortoise_spark.operators.cachectl import (
+        free_local_checkpoint,
+        tracked_checkpoint_count,
+    )
+
+    def cache_empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    spark.catalog.clearCache()
+    df = spark.createDataFrame(
+        [Row(src=f"n{i}", dst=f"n{(i * 7) % 50}", w=1 + i % 3)
+         for i in range(200)]
+    )
+    for weight_col in (None, "w"):
+        out = graph.pagerank(df, iters=3, weight_col=weight_col)
+        assert out.count() == 200
+        assert cache_empty()
+        free_local_checkpoint(out)
+
+    base = tracked_checkpoint_count()
+    real = graph.tracked_local_checkpoint
+    calls = []
+
+    def failing_checkpoint(frame, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == failing_call:
+            raise RuntimeError("round failed")
+        return real(frame, *args, **kwargs)
+
+    monkeypatch.setattr(graph, "tracked_local_checkpoint", failing_checkpoint)
+    with pytest.raises(RuntimeError, match="round failed"):
+        graph.pagerank(df, iters=3)
+    assert cache_empty()
+    assert tracked_checkpoint_count() == base
+
+
 def test_harmonic_centrality_hand_derived(spark):
     """Path graph a→b→c→d, radius 3 (reverse-BFS distances):
     H(a)=0 (no incoming), H(b)=1/1, H(c)=1/1+1/2, H(d)=1/1+1/2+1/3.
