@@ -1,44 +1,46 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark harness, the one timing path for catalog queries.
 
-Each query is materialized with a noop-format write (df.write.format
-("noop")), which computes EVERY output column and row without collecting
-to the driver. A count() action is deliberately not used: Catalyst prunes
-everything count doesn't need, so map-only projections, window expressions
-and sorts would be deleted from the measured plan (round-4 verdict:
-window_running measured 0.58s as a count vs 4.5s fully computed). The
-session is warmed with a trivial job first so JVM startup isn't attributed
-to the first query.
+    python bench.py [--plans DIR] [query ...]
 
-Fixed host-noise witnesses run between timed regions and land in the
-JSON line: a CPU spin after each query (``cpu_probe_sec`` min/med/max),
-a 64 MB memory-bandwidth probe after every third query
-(``mem_probe_sec``), and an 8-way parallel spin in a fresh subprocess
-before and after the suite (``par_probe_sec`` — aggregate parallel
-throughput, the dimension single-threaded probes miss under host vCPU
-oversubscription).  Load-average accounting cannot witness HOST-level
-oversubscription (cycles or the memory bus slow down with no
-guest-visible load or steal) — the probes can; see _cpu_probe /
-_mem_probe.  Sustained in-run CPU-probe variance (3rd-slowest ≥ 2× the
-fastest) and an ≥1.8× before/after parallel-throughput shift also set
-``contaminated``.
+Runs the 18 headline queries (or the named ones, from ``QUERIES`` or
+``VERIFIER_QUERIES``) at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+"sf": ..., "layers": {...}, "head": ..., <load and probe fields>,
+"contaminated": ...}.  For a scaled run, point $SPARK_GRAFT_SF_DIR at
+the copy from tools/make_sf_scale.py.
 
-``python bench.py --sidecar`` additionally runs the whole suite three
-times and writes ``BENCH_LOCAL.json``: per-repetition timings with the
-1-minute load average captured before and after each repetition, plus the
-min-composite.  Two rounds in a row the recorded driver bench was
-mis-read because the driver's CORRECTNESS run contended for the same 32
-cores; the sidecar gives the judge a machine-readable isolated baseline
-(and the load columns to tell contention from regression) without having
-to re-run anything.
+Each query is materialized with a noop-format write, which computes
+EVERY output column and row without collecting to the driver (a count()
+lets Catalyst prune map-only projections, windows and sorts: round 4
+measured window_running at 0.58 s as a count vs 4.5 s fully computed).
+The session is warmed first so JVM startup isn't attributed to the
+first query.  ``queries[q]`` is the min-of-3 wall of build plus write;
+``layers[q]`` splits it into ``build_s`` and ``exec_s`` (each the min
+over the reps), ``jobs`` (every Spark job of the last rep, eager build
+jobs included) and ``first_s`` (rep 0's wall).  ``--plans DIR`` writes
+each query's ``explain("formatted")`` to ``DIR/<query>.txt``.  After
+each query its operator caches and checkpoints are released, outside
+timing, so a sweep over the whole catalog stays bounded.
+
+Fixed host-noise witnesses run between timed regions: a CPU spin after
+each query (``cpu_probe_sec``), a 64 MB memory-bandwidth probe after
+every third query (``mem_probe_sec``), and an 8-way parallel spin in a
+fresh subprocess before and after the suite (``par_probe_sec``).  Load
+averages cannot witness HOST-level oversubscription (cycles or the
+memory bus slow down with no guest-visible load or steal); the probes
+can.  Load above a core-scaled threshold, sustained CPU-probe variance
+and a parallel-throughput shift each set ``contaminated``.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import subprocess
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -104,16 +106,10 @@ def _tree_cpu_seconds() -> float:
 
 def _cpu_probe() -> float:
     """Fixed pure-Python spin (~0.1 s on an uncontended core): a direct
-    witness of the guest's EFFECTIVE CPU speed.  Guest load averages and
-    the tree's own CPU-seconds cannot see host-level oversubscription —
-    cycles get slower, not visibly stolen (steal% stayed ~3 while suite
-    totals doubled) — but a fixed spin can: the same loop on the same
-    box measured 0.08 s in quiet windows and 0.23 s inside windows where
-    identical-code suite totals went 12.4 → 28.9 s (r14 variance
-    record).  One probe runs after each query, OUTSIDE the timed
-    region, so per-query timings are untouched; the stats land in the
-    JSON line so a reader can tell host noise from a plan regression
-    without re-running anything."""
+    witness of the guest's EFFECTIVE CPU speed, which load averages
+    cannot see (the same loop measured 0.08 s in quiet windows and
+    0.23 s in windows where identical-code suite totals went 12.4 →
+    28.9 s, r14 variance record).  Runs OUTSIDE the timed region."""
     t0 = time.perf_counter()
     x = 0
     for i in range(2_000_000):
@@ -126,9 +122,8 @@ def _mem_probe() -> float:
     (~192 MB of traffic, ~0.11 s here).  Complements _cpu_probe — a
     register-bound spin cannot see a co-tenant saturating the host's
     memory bus, which slows shuffle/scan-heavy suites while the spin
-    stays fast (observed: stable 0.08 s spins during a rep 21% above
-    the sealed floor).  Recorded for adjudication only; not wired into
-    the contaminated verdict."""
+    stays fast.  Recorded for adjudication only; not wired into the
+    contaminated verdict."""
     t0 = time.perf_counter()
     ba = bytearray(64 * 1024 * 1024)
     b = bytes(ba)
@@ -159,7 +154,6 @@ if __name__ == "__main__":
 def _par_probe() -> float:
     """8-way parallel spin wall-seconds (~0.26 s uncontended here), or
     0.0 if the subprocess fails (the field then reads as 'no data')."""
-    import subprocess
     try:
         out = subprocess.run(
             [sys.executable, "-c", _PAR_PROBE_SCRIPT],
@@ -177,6 +171,36 @@ def _probe_stats(probes: list[float]) -> dict[str, float]:
         "med": round(s[len(s) // 2], 4),
         "max": round(s[-1], 4),
     }
+
+
+def _host_noise_arm(probes: list[float]) -> bool:
+    """The 3rd-slowest CPU probe at ≥2× the fastest means the cycle rate
+    moved for a sustained part of the run (one GC/page-fault blip can
+    spike only the max) — the r14 false-negative case where a 23.4 s
+    total printed clean with load ≈ 0.  Fewer than 3 probes (a short
+    query list) give no verdict from this arm."""
+    return len(probes) >= 3 and sorted(probes)[-3] >= 2.0 * min(probes)
+
+
+def _par_probe_arm(before: float, after: float) -> bool:
+    """An ≥1.8× before/after shift in the 8-way probe means aggregate
+    host capacity moved mid-run (measured alongside first-queries 3×
+    their floor with BOTH scalar probes stable); probe noise on a
+    steady box is ~1.1–1.3×.  0.0 = subprocess failed, no verdict."""
+    return (min(before, after) > 0.0
+            and max(before, after) >= 1.8 * min(before, after))
+
+
+def _git_head() -> str | None:
+    """``git rev-parse HEAD`` of this checkout, or None outside one."""
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
+            cwd=os.path.dirname(os.path.abspath(__file__)), timeout=30,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return out.stdout.strip() if out.returncode == 0 else None
 
 
 def _make_session(sf_dir: str):
@@ -200,183 +224,98 @@ def _make_session(sf_dir: str):
     return spark
 
 
-def run_suite(spark, sf_dir: str, report_rows: bool = True,
-              cpu_probes: list[float] | None = None,
-              mem_probes: list[float] | None = None) -> dict[str, float]:
-    """One suite pass: min-of-3 noop-write timing per headline query.
-    When ``cpu_probes``/``mem_probes`` are lists, probe readings are
-    appended after queries (between timed regions): one CPU spin per
-    query, one memory probe per three queries."""
+def run_suite(spark, sf_dir: str, names: list[str],
+              plans_dir: str | None = None):
+    """One suite pass over ``names``: min-of-3 noop-write timing per
+    query plus its layer split.  Returns (timings, layers, cpu_probes,
+    mem_probes); the probes run between timed regions, one CPU spin per
+    query and one memory probe per three queries."""
+    from slow_tortoise_spark.operators.cachectl import (
+        release_local_checkpoints,
+        release_operator_caches,
+    )
     from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
 
-    timings: dict[str, float] = {}
-    # The bench set is held stable round-over-round; catalog↔verifier
-    # rotations (round 3) don't change what gets measured.
+    sc = spark.sparkContext
     catalog = {**VERIFIER_QUERIES, **QUERIES}
-    for name in BENCH_QUERIES:
+    timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
+    probes: list[float] = []
+    mprobes: list[float] = []
+    for name in names:
         fn = catalog[name]
-        best = None
+        walls: list[float] = []
+        builds: list[float] = []
+        execs: list[float] = []
         # min-of-3: the first iteration absorbs cold page-cache + codegen
         # for this query's tables (measured: first isolated suite run 15.0s
         # vs 11.4s steady state), the min over the rest damps shared-
         # machine jitter — the round-3 18.1s record was contention, not a
         # plan regression (same code measured 11.4s alone).
-        for _ in range(3):
+        for rep in range(3):
+            # the job group tags every job of the rep, eager build jobs
+            # included; it is set and cleared outside the timed region
+            group = f"bench-{name}-{rep}"
+            sc.setJobGroup(group, name)
             t0 = time.time()
             df = fn(spark, sf_dir)
+            t1 = time.time()
             # noop write: computes every column (windows, regexes, sorts
             # survive in the plan — count() would prune them) yet ships
             # nothing to the driver and writes nothing to disk.
             df.write.format("noop").mode("overwrite").save()
-            elapsed = time.time() - t0
-            best = elapsed if best is None else min(best, elapsed)
-        timings[name] = round(best, 3)
-        if cpu_probes is not None:
-            cpu_probes.append(_cpu_probe())
-            if mem_probes is not None and len(cpu_probes) % 3 == 1:
-                mem_probes.append(_mem_probe())
-        if report_rows:
-            n = df.count()  # row count for the report only — untimed
-            print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
-        else:
-            print(f"# {name}: {timings[name]}s", file=sys.stderr)
-    return timings
+            t2 = time.time()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            walls.append(t2 - t0)
+            builds.append(t1 - t0)
+            execs.append(t2 - t1)
+        timings[name] = round(min(walls), 3)
+        probes.append(_cpu_probe())
+        if len(probes) % 3 == 1:
+            mprobes.append(_mem_probe())
+        n = df.count()  # row count for the report only — untimed
+        print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
+        if plans_dir:
+            plan = sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
+                df._jdf.queryExecution(), "formatted"
+            )
+            with open(os.path.join(plans_dir, f"{name}.txt"), "w") as fh:
+                fh.write(plan)
+        release_operator_caches()
+        release_local_checkpoints()
+        # job events reach the status store through the async listener
+        # bus; drain it before counting the last rep's group
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        layers[name] = {
+            "build_s": round(min(builds), 3),
+            "exec_s": round(min(execs), 3),
+            "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+            "first_s": round(walls[0], 3),
+        }
+    return timings, layers, probes, mprobes
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def run_bench(spark, sf_dir: str, names: list[str] | None = None,
+              plans_dir: str | None = None) -> dict:
+    """The bench record: one suite pass over ``names`` (default the
+    headline set) with load, probe and contamination fields around it."""
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    spark = _make_session(sf_dir)
-
-    if "--sidecar" in sys.argv:
-        # Three FULL suite repetitions (each itself min-of-3 per query),
-        # load average bracketing each: a loaded box shows up in the
-        # load columns, so a later reader can separate "the machine was
-        # busy" from "the plan regressed".
-        reps = []
-        for i in range(3):
-            load_before = os.getloadavg()[0]
-            par_before = _par_probe()
-            probes: list[float] = []
-            mprobes: list[float] = []
-            t0 = time.time()
-            timings = run_suite(spark, sf_dir, report_rows=False,
-                                cpu_probes=probes, mem_probes=mprobes)
-            wall = round(time.time() - t0, 3)
-            load_after = os.getloadavg()[0]
-            reps.append({
-                "queries": timings,
-                "total": round(sum(timings.values()), 3),
-                "suite_wall_sec": wall,
-                "load_1m_before": round(load_before, 2),
-                "load_1m_after": round(load_after, 2),
-                "cpu_probe_sec": _probe_stats(probes),
-                "mem_probe_sec": _probe_stats(mprobes),
-                "par_probe_sec": {"before": par_before,
-                                  "after": _par_probe()},
-            })
-            print(f"# sidecar rep {i}: total={reps[-1]['total']}s "
-                  f"load={load_before:.1f}->{load_after:.1f}",
-                  file=sys.stderr)
-        composite = {
-            q: min(r["queries"][q] for r in reps) for q in BENCH_QUERIES
-        }
-        sidecar = {
-            "metric": "headline_queries_total_isolated",
-            "value": round(sum(composite.values()), 3),
-            "unit": "sec",
-            "queries": composite,
-            "sf": sf_val,
-            "repetitions": reps,
-            "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-            "generated_unix": int(time.time()),
-            "note": (
-                "Isolated steady-state triple (min across 3 full suite "
-                "repetitions, each min-of-3 per query). Compare against "
-                "the driver's BENCH_r{N}.json: if the driver total is "
-                "well above `value` and its run overlapped the driver's "
-                "CORRECTNESS pass, the delta is core contention, not a "
-                "plan regression. load_1m_* columns witness this run's "
-                "own isolation."
-            ),
-        }
-        out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_LOCAL.json")
-        if os.path.exists(out):  # keep the recorded scale section across
-            with open(out) as fh:  # sidecar refreshes
-                prev = json.load(fh)
-            if "scale" in prev:
-                sidecar["scale"] = prev["scale"]
-        with open(out, "w") as fh:
-            json.dump(sidecar, fh, indent=1)
-        print(json.dumps({k: sidecar[k] for k in
-                          ("metric", "value", "unit", "queries", "sf")}))
-        return
-
-    if "--scale-section" in sys.argv:
-        # One suite pass at a SCALED dataset (tools/make_sf_scale.py;
-        # argv value after the flag, default /tmp/sfdata/sf1) merged
-        # into BENCH_LOCAL.json as a "scale" section — the >sf0.1
-        # datapoint the 100×-scale claims rest on.  Ratios vs the
-        # isolated sf0.1 composite are recorded per query so SCALE.md
-        # can name anything growing super-linearly (data grew 10×;
-        # a ratio well above ~15 means the plan is not scaling).
-        i = sys.argv.index("--scale-section")
-        scale_dir = (sys.argv[i + 1] if len(sys.argv) > i + 1
-                     else "/tmp/sfdata/sf1")
-        spark.stop()
-        spark = _make_session(scale_dir)
-        load_before = os.getloadavg()[0]
-        t0 = time.time()
-        timings = run_suite(spark, scale_dir, report_rows=False)
-        wall = round(time.time() - t0, 3)
-        out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_LOCAL.json")
-        with open(out) as fh:
-            sidecar = json.load(fh)
-        base = sidecar.get("queries", {})
-        section = {
-            "sf_dir": scale_dir,
-            "total": round(sum(timings.values()), 3),
-            "queries": timings,
-            "ratio_vs_sf0_1": {
-                q: round(timings[q] / base[q], 1)
-                for q in timings if base.get(q)
-            },
-            "suite_wall_sec": wall,
-            "load_1m_before": round(load_before, 2),
-            "load_1m_after": round(os.getloadavg()[0], 2),
-            "generated_unix": int(time.time()),
-        }
-        sidecar["scale"] = section
-        with open(out, "w") as fh:
-            json.dump(sidecar, fh, indent=1)
-        print(json.dumps({"metric": "headline_queries_total_scaled",
-                          "value": section["total"], "unit": "sec",
-                          "queries": timings, "sf_dir": scale_dir}))
-        return
-
+    if plans_dir:
+        os.makedirs(plans_dir, exist_ok=True)
     # 1-min load average before/after makes contamination self-
-    # documenting: a driver run overlapping other work (the r07/r09
-    # pattern — +22% "regressions" that vanished on a quiet box) now
-    # carries its own adjudication in the recorded JSON line.  The
-    # "contaminated" flag is the one-word verdict (three rounds
-    # running, a judge had to re-run the bench to dismiss a phantom
-    # regression): load ≥ ~2 before this process starts its own work
-    # means other runnable tasks already held cores, so the timings
-    # measure contention, not plans — compare against BENCH_LOCAL.json
-    # (the isolated min-of-N sidecar) instead.
-    import threading
-
+    # documenting: a run overlapping other work (the r07/r09 pattern —
+    # +22% "regressions" that vanished on a quiet box) carries its own
+    # adjudication in the recorded JSON line.  Load ≥ the threshold
+    # before this process starts its own work means other runnable tasks
+    # already held cores, so the timings measure contention, not plans.
     load_before = round(os.getloadavg()[0], 2)
     cpu0, t0 = _tree_cpu_seconds(), time.time()
-    # Sample the tree's CPU every ~15 s so the self-load estimate can
-    # be computed over only the TRAILING minute of the suite.  The
-    # 1-min load EMA is dominated by the last ~60 s, so a run-average
-    # of a front-loaded suite (heavy early, idle at the end) would
-    # OVER-count our share of the final EMA and mask external
-    # contention that began mid-run (the r12 ADVICE case).
+    # Sample the tree's CPU every ~15 s so the self-load estimate covers
+    # only the TRAILING minute (the 1-min EMA is dominated by the last
+    # ~60 s; a run-average would over-count a front-loaded suite's share
+    # and mask contention that began mid-run).
     samples: list[tuple[float, float]] = [(t0, cpu0)]
     stop = threading.Event()
 
@@ -387,93 +326,74 @@ def main() -> None:
     sampler = threading.Thread(target=_sample_loop, daemon=True)
     sampler.start()
     par_before = _par_probe()
-    probes: list[float] = []
-    mprobes: list[float] = []
-    timings = run_suite(spark, sf_dir, cpu_probes=probes,
-                        mem_probes=mprobes)
+    timings, layers, probes, mprobes = run_suite(
+        spark, sf_dir, list(names or BENCH_QUERIES), plans_dir)
     par_after = _par_probe()
     stop.set()
     sampler.join(timeout=2.0)
-    # Snapshot before appending: if the join timed out (a /proc tree
-    # walk can exceed 2 s on a loaded box) the daemon thread may still
-    # append to the shared list while we iterate it below — benign in
-    # CPython today, but an avoidable race (r13 ADVICE).
+    # snapshot: after a join timeout the sampler may still append
     samples = list(samples)
-    total = round(sum(timings.values()), 3)
     load_after = round(os.getloadavg()[0], 2)
     t_end, cpu_end = time.time(), _tree_cpu_seconds()
     samples.append((t_end, cpu_end))
-    # Our OWN suite inflates load_1m_after (BENCH_r11 on a busy box:
-    # 6.19 → 8.28), so the after-sample enters the verdict net of a
-    # measured estimate of this tree's contribution to the final EMA:
-    # CPU-seconds the tree burned in the TRAILING ~60 s (earliest
-    # sample at/after t_end−60 — a window ⊆ the last minute, so the
-    # delta can only UNDER-count), divided by 60.  Both the ≤15 s
-    # sampling slack and the short-suite case (window = whole run,
-    # still ÷60) under-count our share, so the net value leans toward
-    # flagging, never toward missing contention — and both raw loads
-    # plus the estimate are recorded for adjudication.
+    # Our OWN suite inflates load_1m_after, so the after-sample enters
+    # the verdict net of a measured estimate of this tree's contribution
+    # to the final EMA: CPU-seconds the tree burned in the TRAILING ~60 s
+    # (earliest sample at/after t_end−60 — a window ⊆ the last minute,
+    # so the delta can only UNDER-count), divided by 60.  The net value
+    # leans toward flagging, never toward missing contention, and both
+    # raw loads plus the estimate are recorded for adjudication.
     target = t_end - 60.0
     ref_cpu = min(
         (s for s in samples if s[0] >= target), key=lambda s: s[0]
     )[1]
     self_load = round((cpu_end - ref_cpu) / 60.0, 2)
-    # threshold scales with core count BOTH ways (r11 ADVICE: the old
-    # max(2.0, ...) floor meant 2 cores at load 1.9 — saturated —
-    # read as clean); 0.5 only absorbs scheduler noise on tiny boxes
+    # threshold scales with core count both ways; 0.5 only absorbs
+    # scheduler noise on tiny boxes
     threshold = max(0.5, 0.1 * (os.cpu_count() or 32))
-    record = {
+    return {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
+        "layers": layers,
+        "head": _git_head(),
         "load_1m_before": load_before,
         "load_1m_after": load_after,
         "self_load_est": self_load,
-        # Effective-CPU-speed witness (see _cpu_probe): load accounting
+        # Effective-CPU-speed witnesses (see _cpu_probe): load accounting
         # cannot see host-level oversubscription, so the probe stats are
-        # recorded alongside it.  max/min ≳ 2 within one run means the
-        # guest's cycle rate moved mid-suite; compare the absolute
-        # numbers against BENCH_LOCAL.json's per-repetition
-        # cpu_probe_sec to adjudicate a uniformly slow window.
+        # recorded alongside it.
         "cpu_probe_sec": _probe_stats(probes),
         "mem_probe_sec": _probe_stats(mprobes),
         "par_probe_sec": {"before": par_before, "after": par_after},
         "contaminated": (
             load_before > threshold
             or (load_after - self_load) > threshold
-            # host-noise arm: the 3rd-slowest of 18 probes at ≥2× the
-            # fastest means the cycle rate moved for a sustained part
-            # of the run (one GC/page-fault blip can spike only the
-            # max) — the r14 false-negative case where a 23.4 s total
-            # printed clean with load ≈ 0.
-            or sorted(probes)[-3] >= 2.0 * min(probes)
-            # parallel-throughput arm: an ≥1.8× before/after shift in
-            # the 8-way probe means aggregate host capacity moved
-            # mid-run (measured alongside first-queries 3× their
-            # floor with BOTH scalar probes stable); probe noise on a
-            # steady box is ~1.1–1.3×.  0.0 = subprocess failed, no
-            # verdict from this arm.
-            or (min(par_before, par_after) > 0.0
-                and max(par_before, par_after)
-                >= 1.8 * min(par_before, par_after))
+            or _host_noise_arm(probes)
+            or _par_probe_arm(par_before, par_after)
         ),
     }
-    # a contaminated reading carries the isolated sidecar floor next
-    # to it so the recorded JSON line holds BOTH numbers (the r11
-    # adjudication the judge had to assemble by hand)
-    if record["contaminated"]:
-        local = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_LOCAL.json")
-        if os.path.exists(local):
-            try:
-                with open(local) as fh:
-                    record["isolated_sidecar_value"] = json.load(fh).get(
-                        "value")
-            except (OSError, ValueError):
-                pass
-    print(json.dumps(record))
+
+
+def main() -> None:
+    from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
+
+    parser = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    parser.add_argument("--plans", metavar="DIR",
+                        help="write each query's formatted plan here")
+    parser.add_argument("names", nargs="*", metavar="query",
+                        help="catalog or verifier query names "
+                             "(default: the headline set)")
+    args = parser.parse_args()
+    unknown = [n for n in args.names
+               if n not in QUERIES and n not in VERIFIER_QUERIES]
+    if unknown:
+        parser.error(f"unknown queries: {', '.join(unknown)}")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = _make_session(sf_dir)
+    print(json.dumps(run_bench(spark, sf_dir, args.names, args.plans)))
 
 
 if __name__ == "__main__":

@@ -61,15 +61,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
 
 
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of whitespace-normalized, lowercased text —
-    the single-expression form.  Prefer projecting ``tokens_col`` into
-    its own column and calling :func:`shingles_from_tokens` on the
-    attribute: used inline, the captured tokenizer re-runs per shingle
-    (see that function's docstring)."""
-    return shingles_from_tokens(tokens_col(F.lower(text)), n)
-
-
 def doc_shingles(
     df: DataFrame, text_col: str = "text", n: int = 3, distinct: bool = True
 ) -> DataFrame:

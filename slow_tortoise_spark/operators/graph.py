@@ -1049,52 +1049,64 @@ def personalized_pagerank(
         .cache()
     )
     is_seed = F.col("node").isin(s)
-    ranks = tracked_local_checkpoint(
-        nodes.withColumn(
-            "rank",
-            F.when(is_seed, F.lit(1.0 / len(s))).otherwise(F.lit(0.0)),
-        )
-    )
-    for _ in range(iters):
-        dangling = (
-            ranks.filter(F.col("_dang"))
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("s"))
-            .first()["s"]
-        )
-        share = (
-            F.col("_r") / F.col("_d") if weight_col is None
-            else F.col("_r") * F.col("_w") / F.col("_d")
-        )
-        contrib = (
-            ed.join(
-                ranks.select(F.col("node").alias("src"),
-                             F.col("rank").alias("_r")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.sum(share).alias("_c"))
-        )
-        new_ranks = tracked_local_checkpoint(
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                "_dang",
-                (
-                    F.lit(damping)
-                    * F.coalesce(F.col("_c"), F.lit(0.0))
-                    + F.when(
-                        is_seed,
-                        (F.lit(1.0 - damping)
-                         + F.lit(damping) * F.lit(float(dangling)))
-                        / F.lit(float(len(s))),
-                    ).otherwise(F.lit(0.0))
-                ).alias("rank"),
+    ranks = None
+    try:
+        ranks = tracked_local_checkpoint(
+            nodes.withColumn(
+                "rank",
+                F.when(is_seed, F.lit(1.0 / len(s))).otherwise(F.lit(0.0)),
             )
         )
-        free_local_checkpoint(ranks)
-        ranks = new_ranks
-    e.unpersist()
-    deg.unpersist()
-    ed.unpersist()
-    nodes.unpersist()
-    return ranks.select("node", "rank")
+        for i in range(iters):
+            dangling = (
+                ranks.filter(F.col("_dang"))
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("s"))
+                .first()["s"]
+            )
+            share = (
+                F.col("_r") / F.col("_d") if weight_col is None
+                else F.col("_r") * F.col("_w") / F.col("_d")
+            )
+            contrib = (
+                ed.join(
+                    ranks.select(F.col("node").alias("src"),
+                                 F.col("rank").alias("_r")),
+                    "src",
+                )
+                .groupBy("dst")
+                .agg(F.sum(share).alias("_c"))
+            )
+            new_ranks = tracked_local_checkpoint(
+                nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
+                .select(
+                    "node",
+                    "_dang",
+                    (
+                        F.lit(damping)
+                        * F.coalesce(F.col("_c"), F.lit(0.0))
+                        + F.when(
+                            is_seed,
+                            (F.lit(1.0 - damping)
+                             + F.lit(damping) * F.lit(float(dangling)))
+                            / F.lit(float(len(s))),
+                        ).otherwise(F.lit(0.0))
+                    ).alias("rank"),
+                )
+            )
+            free_local_checkpoint(ranks)
+            ranks = new_ranks
+            if i == 0:
+                # round 1 materialized ``ed`` (``nodes`` already was):
+                # the raw edge list need not stay cached beside it
+                e.unpersist()
+        return ranks.select("node", "rank")
+    except BaseException:
+        if ranks is not None:
+            free_local_checkpoint(ranks)
+        raise
+    finally:
+        # every path, a failing round included, releases the four caches
+        e.unpersist()
+        deg.unpersist()
+        ed.unpersist()
+        nodes.unpersist()

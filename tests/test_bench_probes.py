@@ -1,16 +1,26 @@
-"""Host-noise witness probes in bench.py (r14 optimization round).
+"""bench.py, the one timing harness for catalog queries.
 
-Pure-Python: no Spark session.  Pins the probe plumbing and the
-contamination arm added after the r14 variance record (a 23.4 s suite —
-2.7x the sealed floor, identical code — printed ``contaminated: false``
-because load accounting cannot see host-level oversubscription).
+The probe tests are pure Python: they pin the host-noise witnesses and
+the contamination arms added after the r14 variance record (a 23.4 s
+suite — 2.7x the sealed floor, identical code — printed
+``contaminated: false`` because load accounting cannot see host-level
+oversubscription).  ``test_run_bench_record`` drives the harness itself
+on the session Spark fixture.
 """
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _cpu_probe, _mem_probe, _par_probe, _probe_stats  # noqa: E402
+from bench import (  # noqa: E402
+    _cpu_probe,
+    _host_noise_arm,
+    _mem_probe,
+    _par_probe,
+    _par_probe_arm,
+    _probe_stats,
+    run_bench,
+)
 
 
 def test_probes_return_positive_seconds():
@@ -40,10 +50,9 @@ def test_probe_stats_shape_and_order():
 def test_host_noise_arm_needs_sustained_variance():
     """The contaminated arm fires on sorted(probes)[-3] >= 2*min: a
     single blip (GC pause, page fault) must NOT flag a clean run; three
-    elevated probes of 18 must."""
-    def arm(probes):
-        return sorted(probes)[-3] >= 2.0 * min(probes)
-
+    elevated probes of 18 must.  Below 3 probes (a short query list)
+    the arm gives no verdict instead of raising."""
+    arm = _host_noise_arm
     quiet = [0.08] * 18
     assert not arm(quiet)
     one_blip = [0.08] * 17 + [0.30]
@@ -54,14 +63,14 @@ def test_host_noise_arm_needs_sustained_variance():
     assert arm(slow_window)
     uniformly_slow_half = [0.08] * 9 + [0.20] * 9
     assert arm(uniformly_slow_half)
+    assert not arm([0.08])
+    assert not arm([0.08, 0.30])
 
 
 def test_parallel_throughput_arm():
     """The par-probe arm fires on an >=1.8x before/after shift and
     stays silent on steady-box noise (~1.1-1.3x) or a failed probe."""
-    def arm(before, after):
-        return (min(before, after) > 0.0
-                and max(before, after) >= 1.8 * min(before, after))
+    arm = _par_probe_arm
 
     assert not arm(0.26, 0.29)          # steady-box noise
     assert not arm(0.26, 0.33)          # 1.27x, still noise
@@ -69,3 +78,37 @@ def test_parallel_throughput_arm():
     assert arm(0.25, 0.50)              # contended end, same verdict
     assert not arm(0.0, 0.26)           # failed probe: no verdict
     assert not arm(0.26, 0.0)
+
+
+def test_run_bench_record(spark, sf_dir, tmp_path):
+    """The record main() prints, for a two-query run: the driver-contract
+    keys, a full layer split per query, no stale sidecar cross-read,
+    one plan file per query, and nothing left cached or checkpointed."""
+    from slow_tortoise_spark.operators.cachectl import (
+        tracked_checkpoint_count,
+    )
+
+    names = ["pricing_summary", "jaccard_pairs"]
+    base = tracked_checkpoint_count()
+    rec = run_bench(spark, sf_dir, names, plans_dir=str(tmp_path))
+    for key in ("metric", "value", "unit", "queries", "sf",
+                "load_1m_before", "load_1m_after", "self_load_est",
+                "cpu_probe_sec", "mem_probe_sec", "par_probe_sec",
+                "contaminated", "layers", "head"):
+        assert key in rec, key
+    assert "isolated_sidecar_value" not in rec
+    assert list(rec["queries"]) == names
+    assert isinstance(rec["contaminated"], bool)
+    for q in names:
+        lay = rec["layers"][q]
+        assert set(lay) == {"build_s", "exec_s", "jobs", "first_s"}
+        assert lay["jobs"] >= 1
+        # min(build) + min(exec) <= min(build + exec); each of the three
+        # figures is rounded to the millisecond, so allow 1.5 ms
+        assert lay["build_s"] + lay["exec_s"] <= rec["queries"][q] + 0.0015
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert tracked_checkpoint_count() == base
+    files = sorted(os.listdir(tmp_path))
+    assert files == sorted(f"{q}.txt" for q in names)
+    for f in files:
+        assert os.path.getsize(tmp_path / f) > 0

@@ -4053,12 +4053,14 @@ def test_pagerank_releases_storage(spark):
 
 
 @pytest.mark.parametrize("failing_call", [2, 3])
-def test_pagerank_releases_caches_on_every_path(spark, monkeypatch,
+@pytest.mark.parametrize("op", ["pagerank", "personalized_pagerank"])
+def test_pagerank_releases_caches_on_every_path(spark, monkeypatch, op,
                                                 failing_call):
     """A normal run leaves nothing in the cache manager; a run whose
     round fails (call 2 = round 1's checkpoint, call 3 = round 2's,
     after the edge cache is already dropped) re-raises with every cache
-    and the live rank checkpoint released."""
+    and the live rank checkpoint released.  Personalized PageRank
+    (TrustRank's operator) shares the loop shape and the contract."""
     from pyspark.sql import Row
 
     from slow_tortoise_spark.operators import graph
@@ -4066,6 +4068,12 @@ def test_pagerank_releases_caches_on_every_path(spark, monkeypatch,
         free_local_checkpoint,
         tracked_checkpoint_count,
     )
+
+    def run(df, **kwargs):
+        if op == "pagerank":
+            return graph.pagerank(df, iters=3, **kwargs)
+        return graph.personalized_pagerank(df, seeds=["n0"], iters=3,
+                                           **kwargs)
 
     def cache_empty():
         return spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -4076,7 +4084,7 @@ def test_pagerank_releases_caches_on_every_path(spark, monkeypatch,
          for i in range(200)]
     )
     for weight_col in (None, "w"):
-        out = graph.pagerank(df, iters=3, weight_col=weight_col)
+        out = run(df, weight_col=weight_col)
         assert out.count() == 200
         assert cache_empty()
         free_local_checkpoint(out)
@@ -4093,7 +4101,7 @@ def test_pagerank_releases_caches_on_every_path(spark, monkeypatch,
 
     monkeypatch.setattr(graph, "tracked_local_checkpoint", failing_checkpoint)
     with pytest.raises(RuntimeError, match="round failed"):
-        graph.pagerank(df, iters=3)
+        run(df)
     assert cache_empty()
     assert tracked_checkpoint_count() == base
 
