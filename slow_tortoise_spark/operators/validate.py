@@ -15,9 +15,9 @@ P7  ±inf value → null                      → when(isin(±inf), null)
 P8  region '//' sanitization               → regexp_replace
 P9  out-of-range timestamp drop            → filter(ts < MAX_TIMESTAMP_MS)
 
-One extra full pass is needed for the column-level null scan (P1) and one
-for the drop counts — both are single aggregations over the scan, so the
-cost at 100 TB is two map-side-combined passes, no shuffles.
+One extra full pass serves both the column-level null scan (P1) and the
+missing/invalid counts (P5): a single aggregation over the scan, so the
+cost at 100 TB is one map-side-combined pass, no shuffles.
 """
 
 from __future__ import annotations
@@ -47,18 +47,23 @@ class ValidationStats:
     weight_column: str = ""
 
 
-def get_null_or_empty_cols(df: DataFrame) -> list[str]:
-    """P1: columns whose every value is null or whitespace-only.
-
-    Single aggregation pass: for each column count non-(null|blank) values.
-    """
+def _non_empty_counts(df: DataFrame) -> list:
+    """P1 probes: per column, the number of non-(null|blank) values."""
     probes = []
     for c in df.columns:
         col = F.col(c)
         is_empty = col.isNull() | col.cast("string").rlike(r"^\s*$")
         probes.append(F.sum(F.when(is_empty, 0).otherwise(1)).alias(c))
-    counts = df.agg(*probes).first().asDict()
-    return [c for c, n in counts.items() if (n or 0) == 0]
+    return probes
+
+
+def get_null_or_empty_cols(df: DataFrame) -> list[str]:
+    """P1: columns whose every value is null or whitespace-only.
+
+    Single aggregation pass: for each column count non-(null|blank) values.
+    """
+    counts = df.agg(*_non_empty_counts(df)).first()
+    return [c for c, n in zip(df.columns, counts) if (n or 0) == 0]
 
 
 def get_qualifier_columns(df: DataFrame, weight_column: str = "") -> list[str]:
@@ -75,13 +80,32 @@ def validate_and_fix(
     """Normalize a raw datacube into the canonical schema.
 
     Returns the cleaned DataFrame plus counters for the run summary. The
-    returned plan is lazy; the two counting actions (null scan + drop
-    counts) execute eagerly because the reference reports them up front.
+    returned plan is lazy; one counting action (null scan + missing and
+    invalid counts) executes eagerly because the reference reports them
+    up front.
     """
     stats = ValidationStats(weight_column=weight_column)
 
-    # P1+P2 — drop fully-empty columns (never the protected trio).
-    null_cols = [c for c in get_null_or_empty_cols(df) if c not in PROTECTED_COLS]
+    # P1 + P5 counts — one eager aggregate over the raw scan: the null
+    # scan of every column, then the missing/invalid counts.  P5 reads the
+    # raw timestamp (P2-P4 leave it as is) and the P3-coerced value.
+    row = df.agg(
+        *_non_empty_counts(df),
+        F.sum(F.when(F.col("timestamp").isNull(), 1).otherwise(0)),
+        F.sum(F.when(F.col("value").try_cast("double").isNull(), 1).otherwise(0)),
+        F.sum(
+            F.when(F.col("timestamp") >= F.lit(MAX_TIMESTAMP_MS), 1).otherwise(0)
+        ),
+    ).first()
+    non_empty = row[:len(df.columns)]
+    missing_ts, missing_value, invalid_ts = row[len(df.columns):]
+    stats.missing_timestamp = int(missing_ts or 0)
+    stats.missing_value = int(missing_value or 0)
+    stats.invalid_timestamp = int(invalid_ts or 0)
+
+    # P2 — drop fully-empty columns (never the protected trio).
+    null_cols = [c for c, n in zip(df.columns, non_empty)
+                 if (n or 0) == 0 and c not in PROTECTED_COLS]
     if null_cols:
         df = df.drop(*null_cols)
         stats.dropped_columns = null_cols
@@ -107,17 +131,7 @@ def validate_and_fix(
     for c in qualifiers + [r for r in REGION_LEVELS if r in df.columns]:
         df = df.withColumn(c, F.coalesce(F.col(c).cast("string"), F.lit(NULL_TOKEN)))
 
-    # P5 — missing-count scan + timestamp fill (single agg action).
-    counts = df.agg(
-        F.sum(F.when(F.col("timestamp").isNull(), 1).otherwise(0)).alias("ts"),
-        F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias("val"),
-        F.sum(
-            F.when(F.col("timestamp") >= F.lit(MAX_TIMESTAMP_MS), 1).otherwise(0)
-        ).alias("bad_ts"),
-    ).first()
-    stats.missing_timestamp = int(counts["ts"] or 0)
-    stats.missing_value = int(counts["val"] or 0)
-    stats.invalid_timestamp = int(counts["bad_ts"] or 0)
+    # P5 — timestamp fill (the counts came with the P1 scan).
     df = df.withColumn(
         "timestamp",
         F.coalesce(F.col("timestamp").try_cast("long"), F.lit(int(fill_timestamp))),

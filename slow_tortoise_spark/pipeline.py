@@ -4,23 +4,29 @@ layer is replaced by Catalyst planning + explicit cache()/unpersist()).
 
 Dataflow spine (matches /root/reference/flows/data_pipeline.py:977-1137):
 
-    read → validate_and_fix → [raw passthrough, region/qualifier lists]
+    read → validate_and_fix → one per-feature count action (row guard,
+      rows per feature, qualifier counts)
+    → [all-time summary, raw passthrough, region/qualifier lists]
     → for time_res in (month, year):
-        temporal_aggregation → global timeseries, regional rollups,
-        extrema, qualifier pivots → subtile_aggregation → tiles + stats
-    → temporal_aggregation("all") → output summary → results.json
+        temporal_aggregation → tiles + grid stats, global timeseries,
+        regional rollups, extrema, qualifier pivots
+    → output summary → results.json
 
 Caching policy: the validated cube feeds every branch → cache it; each
 temporal aggregate feeds 4+ branches → cache. Artifact sinks do not run
 one after another on the driver thread: each is queued on a driver pool
 of ``defaultParallelism`` threads, so their Spark jobs overlap with one
-another and with the eager decision actions (row counts, the approximate
-group count, extrema collects) that stay on the driver thread.  A
-resolution's cached frames are released once its queued sinks have
-drained.  On every path, errors included, the run cancels or waits for
-its queued sinks and releases every frame it cached.  At 100 TB replace
-cache() with a checkpoint to fast storage if executor memory can't hold
-the working set.
+another and with the eager decision actions (the per-feature counts, the
+approximate group count, extrema collects) that stay on the driver
+thread.  The all-time summary (temporal_aggregation("all") → output
+summary) is queued on the same pool before any sink, so it overlaps
+the whole run instead of running after the last sink; each
+resolution queues its tile branch first, so its longest sink starts
+earliest.  A resolution's cached frames are released once its queued
+sinks have drained.  On every path, errors included, the run cancels or
+waits for its queued sinks and releases every frame it cached.  At
+100 TB replace cache() with a checkpoint to fast storage if executor
+memory can't hold the working set.
 """
 
 from __future__ import annotations
@@ -63,7 +69,7 @@ from slow_tortoise_spark.sinks.writers import (
     write_json,
     write_tiles,
 )
-from slow_tortoise_spark.sources.reader import assert_non_empty, read_datacube
+from slow_tortoise_spark.sources.reader import read_datacube
 
 
 @dataclass
@@ -193,6 +199,12 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
         run.close()
 
 
+def _all_time_summary(df, weight_column: str) -> list[dict[str, Any]]:
+    """A6: the all-time per-feature summary rows of results.json."""
+    t_all = temporal_aggregation(df, "all", weight_column=weight_column)
+    return [r.asDict() for r in output_summary(t_all).collect()]
+
+
 def _run_pipeline(
     spark: SparkSession, params: PipelineParams, run: _RunScope
 ) -> dict[str, Any]:
@@ -226,8 +238,6 @@ def _run_pipeline(
         raw, weight_column=params.weight_column, fill_timestamp=params.fill_timestamp
     )
     df = run.persist(df)
-    results["rows"] = assert_non_empty(df)
-    results["validation"] = stats.__dict__
 
     all_qualifiers = [
         c
@@ -235,21 +245,43 @@ def _run_pipeline(
         if c not in ("timestamp", "value", "lat", "lng")
         and c not in extract_region_columns(df)
     ]
+    # One action answers the row-count guard (S3), the rows per feature
+    # (A9) and the per-feature qualifier counts (A8): the two aggregates
+    # are unioned, not joined, so each keeps the row order it has alone
+    # (results.json lists features in that order) and a union adds no
+    # shuffle.
+    per_feature = rows_per_feature(df)
+    if all_qualifiers:
+        counts = qualifier_counts(df, all_qualifiers)
+        per_feature = per_feature.unionByName(counts, allowMissingColumns=True)
+    per_feature = per_feature.collect()
+    feature_rows = {r["feature"]: r["n_rows"] for r in per_feature
+                    if r["n_rows"] is not None}
+    count_rows = [r for r in per_feature if r["n_rows"] is None]
+    if not feature_rows:
+        raise ValueError("datacube is empty — nothing to process")
+    results["rows"] = sum(feature_rows.values())
+    results["validation"] = stats.__dict__
+    weight = stats.weight_column
+    # All-time summary (A6): queued before any sink, so it overlaps the
+    # whole run.  Queued after the per-feature action, not beside it: the
+    # row order of an aggregate collected while other jobs run is not
+    # stable, and results.json lists features in that order.
+    summary = run.sink(_all_time_summary, df, weight)
+
     qualifiers: list[str] = []
     # Qualifier cardinality gate (R4) — PER FEATURE, matching the
     # reference: a qualifier can stay broken out for one feature while
-    # suppressed for another whose cardinality blows the cap. One count
-    # pass feeds the gate and the qualifier_counts.json artifacts below.
-    per_feature_qcounts = []
+    # suppressed for another whose cardinality blows the cap. The counts
+    # feed the gate and the qualifier_counts.json artifacts below.
     qualifier_map: dict[str, list[str]] = {}
     feature_counts: dict[str, dict[str, int]] = {}
     if all_qualifiers:
-        per_feature_qcounts = qualifier_counts(df, all_qualifiers).collect()
         feature_counts = {
             r["feature"]: {
                 q: int(r[f"{q}_count"] or 0) for q in all_qualifiers
             }
-            for r in per_feature_qcounts
+            for r in count_rows
         }
         qualifier_map, qualifiers = apply_qualifier_thresholds(
             {f: list(all_qualifiers) for f in feature_counts},
@@ -268,7 +300,6 @@ def _run_pipeline(
         return feats
 
     # Raw passthrough for small features (S7).
-    feature_rows = {r["feature"]: r["n_rows"] for r in rows_per_feature(df).collect()}
     small = [f for f, n in feature_rows.items() if n <= params.raw_count_threshold]
     if small:
         run.sink(
@@ -286,8 +317,8 @@ def _run_pipeline(
     # raw/{feature}/info/{region_lists,qualifiers/*,qualifier_counts}.json),
     # written executor-side: a single feature's distinct region set can
     # reach millions of ids at scale, so the lists are never collected to
-    # the driver — each feature's distinct rows land in one applyInPandas
-    # group whose task writes the JSON directly.
+    # the driver — each feature's distinct rows form one group of the sink's
+    # group walker, and the task that holds it writes the JSON directly.
     region_cols = extract_region_columns(df)
     from slow_tortoise_spark.operators.regional import join_region_columns
     from slow_tortoise_spark.schema import REGION_LEVELS
@@ -333,7 +364,7 @@ def _run_pipeline(
                 v for v in pdf[qq].tolist() if v is not None
             ),
         )
-    for r in per_feature_qcounts:
+    for r in count_rows:
         write_json(
             {
                 "thresholds": {
@@ -346,13 +377,69 @@ def _run_pipeline(
             writer,
         )
 
-    weight = stats.weight_column
     agg_cols = ["s_sum_t_sum", "s_mean_t_sum", "s_sum_t_mean", "s_mean_t_mean"]
 
     for time_res in params.time_resolutions:
         mark = len(run.cached)
         n_tiles: Future | None = None
         t = run.persist(temporal_aggregation(df, time_res, weight_column=weight))
+
+        # Tiling family (G5–G8) — only when coordinates exist.  Queued
+        # first: the tile sink is the resolution's longest.
+        if (task_on("compute_tiles") and params.compute_tiles
+                and "lat" in df.columns and "lng" in df.columns):
+            sub = run.persist(subtile_aggregation(t))
+            n_subtiles = sub.count()
+            tile_mode = params.tile_sink
+            if tile_mode == "auto":
+                # max-precision subtile rows upper-bound the finest
+                # level's tile count — the dominant share of the tile
+                # tree (each coarser zoom has ~1/4 as many)
+                tile_mode = ("bundles"
+                             if n_subtiles > params.sink_bundle_threshold
+                             else "files")
+            if n_subtiles > 0:
+                tiles = tiles_all_levels(sub)
+                ext = ".txt" if params.tile_debug else ".tile"
+                if tile_mode == "bundles":
+                    from slow_tortoise_spark.sinks.writers import (
+                        write_tile_bundles,
+                    )
+
+                    n_tiles = run.sink(
+                        write_tile_bundles,
+                        tiles,
+                        bundle_path_fn=lambda pid, tr=time_res: (
+                            f"{prefix}/tiles/{tr}/bundle-{pid:05d}"
+                        ),
+                        writer=writer,
+                    )
+                else:
+                    n_tiles = run.sink(
+                        write_tiles,
+                        tiles,
+                        path_fn=lambda r, tr=time_res, ex=ext: (
+                            f"{prefix}/tiles/{tr}/{r['feature']}/"
+                            f"{r['timestamp']}-{r['tile']['z']}-{r['tile']['x']}-"
+                            f"{r['tile']['y']}{ex}"
+                        ),
+                        writer=writer,
+                        debug=params.tile_debug,
+                    )
+                # the key takes its place in results.json now; the count
+                # replaces the future once the resolution's sinks drain
+                results[f"tiles_{time_res}"] = n_tiles
+                gs = grid_stats(sub)
+                run.sink(
+                    write_grouped_csv,
+                    gs,
+                    group_cols=["feature", "timestamp"],
+                    path_fn=lambda k, tr=time_res: (
+                        f"{prefix}/stats/{tr}/{k['feature']}/{k['timestamp']}.csv"
+                    ),
+                    writer=writer,
+                    sort_cols=["zoom"],
+                )
 
         # Global timeseries CSV per feature.
         if task_on("compute_global_timeseries"):
@@ -564,74 +651,16 @@ def _run_pipeline(
                     sort_cols=["timestamp"],
                 )
 
-        # Tiling family (G5–G8) — only when coordinates exist.
-        if (task_on("compute_tiles") and params.compute_tiles
-                and "lat" in df.columns and "lng" in df.columns):
-            sub = run.persist(subtile_aggregation(t))
-            n_subtiles = sub.count()
-            tile_mode = params.tile_sink
-            if tile_mode == "auto":
-                # max-precision subtile rows upper-bound the finest
-                # level's tile count — the dominant share of the tile
-                # tree (each coarser zoom has ~1/4 as many)
-                tile_mode = ("bundles"
-                             if n_subtiles > params.sink_bundle_threshold
-                             else "files")
-            if n_subtiles > 0:
-                tiles = tiles_all_levels(sub)
-                ext = ".txt" if params.tile_debug else ".tile"
-                if tile_mode == "bundles":
-                    from slow_tortoise_spark.sinks.writers import (
-                        write_tile_bundles,
-                    )
-
-                    n_tiles = run.sink(
-                        write_tile_bundles,
-                        tiles,
-                        bundle_path_fn=lambda pid, tr=time_res: (
-                            f"{prefix}/tiles/{tr}/bundle-{pid:05d}"
-                        ),
-                        writer=writer,
-                    )
-                else:
-                    n_tiles = run.sink(
-                        write_tiles,
-                        tiles,
-                        path_fn=lambda r, tr=time_res, ex=ext: (
-                            f"{prefix}/tiles/{tr}/{r['feature']}/"
-                            f"{r['timestamp']}-{r['tile']['z']}-{r['tile']['x']}-"
-                            f"{r['tile']['y']}{ex}"
-                        ),
-                        writer=writer,
-                        debug=params.tile_debug,
-                    )
-                # the key takes its place in results.json now; the count
-                # replaces the future once the resolution's sinks drain
-                results[f"tiles_{time_res}"] = n_tiles
-                gs = grid_stats(sub)
-                run.sink(
-                    write_grouped_csv,
-                    gs,
-                    group_cols=["feature", "timestamp"],
-                    path_fn=lambda k, tr=time_res: (
-                        f"{prefix}/stats/{tr}/{k['feature']}/{k['timestamp']}.csv"
-                    ),
-                    writer=writer,
-                    sort_cols=["zoom"],
-                )
         run.drain()
         if n_tiles is not None:
             results[f"tiles_{time_res}"] = n_tiles.result()
         run.release_since(mark)
 
-    # All-time summary (A6).
-    t_all = temporal_aggregation(df, "all", weight_column=weight)
-    summary = output_summary(t_all)
-    results["output_agg_values"] = [r.asDict() for r in summary.collect()]
+    run.drain()
+    results["output_agg_values"] = summary.result()
     # results.json only on full runs — partial (selected-task) runs must
     # not clobber a complete run's record (reference record_results
     # gating, data_pipeline.py:264-276, 1140-1141).
-    run.drain()
     if full_run:
         write_json(results, f"{prefix}/results.json", writer)
     return results

@@ -3,8 +3,10 @@
 The reference materializes many small artifacts (one CSV per region, one
 protobuf per tile) to S3/Minio or local disk from inside worker-side
 ``groupby().apply`` lambdas. The Spark-native equivalent: executors write
-inside ``applyInPandas`` / ``foreachPartition`` after a repartition on the
-grouping keys, through a destination object small enough to pickle.
+from one ``mapInArrow`` pass, through a destination object small enough
+to pickle.  Every grouped sink runs on one group walker (``_walk_groups``)
+and the tile sinks on its per-partition pass (``_each_partition``); each
+partition returns one count row that the driver sums from ``collect()``.
 
 Writers:
     FileWriter  — local filesystem (dirs auto-created)
@@ -20,7 +22,6 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterable
 
 
 class FileWriter:
@@ -94,28 +95,142 @@ WRITE_TYPES = {"file": FileWriter, "s3": S3Writer, "null": NullWriter}
 
 
 # ---------------------------------------------------------------------------
-# Grouped sinks
+# Grouped sinks: one Arrow group walker
 # ---------------------------------------------------------------------------
 
 
-def _escape_dotted(df, *col_lists):
-    """Shim for PySpark's plain-string column resolution: ``groupBy`` /
-    ``applyInPandas`` resolve names like ``"1.0"`` (a pivoted qualifier
-    value — the reference's pandas pipeline produces such headers freely)
-    as the multi-part path ```1`.`0``` and fail. Rename offending columns
-    to positional placeholders for the Spark-side shuffle and hand back a
-    restore map so the pandas side (and the written artifact headers)
-    keeps the original names. Returns (df, restore_map, mapped_col_lists).
-    """
-    safe = {
-        c: f"__dotted_{i}"
-        for i, c in enumerate(df.columns)
-        if "." in c or "`" in c
-    }
-    if safe:
-        df = df.toDF(*[safe.get(c, c) for c in df.columns])
-    mapped = [[safe.get(c, c) for c in cols] for cols in col_lists]
-    return df, {v: k for k, v in safe.items()}, mapped
+def _each_partition(df, emit_partition) -> int:
+    """Run ``emit_partition(partition_id, batches, to_pandas) -> int`` once
+    per partition of ``df`` in one ``mapInArrow`` job.  ``batches`` are the
+    partition's Arrow record batches; ``to_pandas(rows)`` converts a table
+    or batch column by column the way PySpark converts an ``applyInPandas``
+    group (same dtypes, structs as dicts).  Each partition yields one count
+    row; the driver returns their sum from ``collect()``.  ``mapInArrow``
+    resolves columns by plain name (``"1.0"`` would be a nested path), so
+    they cross into Python under positional names."""
+    import pyarrow as pa
+
+    names = df.columns
+    timezone = df.sparkSession.conf.get("spark.sql.session.timeZone")
+
+    def run(batches):
+        import pandas as pd
+        from pyspark import TaskContext
+        from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
+
+        convert = ArrowStreamPandasSerializer(timezone, False, False).arrow_to_pandas
+
+        def to_pandas(rows):
+            frame = pd.concat([convert(c, i) for i, c in enumerate(rows.itercolumns())],
+                              axis=1)
+            frame.columns = names
+            return frame
+
+        named = (pa.RecordBatch.from_arrays(b.columns, names=names) for b in batches)
+        n = emit_partition(TaskContext.get().partitionId(), named, to_pandas)
+        yield pa.RecordBatch.from_arrays([pa.array([n], pa.int64())], ["n"])
+
+    positional = df.toDF(*[f"_{i}" for i in range(len(names))])
+    return sum(r["n"] for r in positional.mapInArrow(run, "n long").collect())
+
+
+def _split_groups(batches, keys: list[str]):
+    """Yield each group of a key-sorted stream of Arrow record batches as
+    one ``pa.Table``; a group that straddles batches is carried until its
+    last row arrives.  Nulls equal nulls and NaN equals NaN, as in Spark's
+    grouping."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    carried: list = []
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        # the carried group's last row leads, so a cut at 0 closes it
+        lead = carried[-1].slice(carried[-1].num_rows - 1) if carried else batch.slice(0, 0)
+        rows = pa.Table.from_batches([lead, batch])
+        n = rows.num_rows
+        same = np.ones(n - 1, bool)
+        for k in keys:
+            prev, cur = rows.column(k).slice(0, n - 1), rows.column(k).slice(1)
+            eq = pc.or_(pc.fill_null(pc.equal(prev, cur), False),
+                        pc.and_(pc.is_null(prev), pc.is_null(cur)))
+            if pa.types.is_floating(prev.type):
+                eq = pc.or_(eq, pc.fill_null(pc.and_(pc.is_nan(prev), pc.is_nan(cur)), False))
+            same &= eq.to_numpy()
+        start = 0
+        for cut in (np.flatnonzero(~same) + 1 - lead.num_rows).tolist():
+            if cut:
+                carried.append(batch.slice(start, cut - start))
+            yield pa.Table.from_batches(carried)
+            carried, start = [], cut
+        carried.append(batch.slice(start))
+    if carried:
+        yield pa.Table.from_batches(carried)
+
+
+def _walk_groups(df, group_cols: list[str], emit) -> int:
+    """The group walker behind every grouped sink: ``repartition`` on the
+    group columns puts each group whole in one partition,
+    ``sortWithinPartitions`` makes its rows adjacent, and one
+    ``mapInArrow`` pass cuts the batches at the group boundaries.
+    ``emit(partition_id, groups) -> int`` consumes the partition's ``(key
+    dict, pandas frame)`` pairs.  Each group is converted by itself, so it
+    gets the dtypes ``applyInPandas`` would give it, and one group, not one
+    partition, is the unit of Python memory.  Returns the summed counts."""
+    from pyspark.sql import functions as F
+
+    keys = [F.col("`" + c.replace("`", "``") + "`") for c in group_cols]
+
+    def emit_partition(pid, batches, to_pandas):
+        frames = map(to_pandas, _split_groups(batches, group_cols))
+        return emit(pid, (({c: pdf[c].iloc[0] for c in group_cols}, pdf)
+                          for pdf in frames))
+
+    return _each_partition(
+        df.repartition(*keys).sortWithinPartitions(*keys), emit_partition)
+
+
+def _write_per_group(df, group_cols: list[str], path_fn, writer, body_fn) -> int:
+    """One artifact per group: ``body_fn(pdf)`` at ``path_fn(key dict)``."""
+
+    def emit(_pid, groups) -> int:
+        n = 0
+        for key, pdf in groups:
+            writer.write(body_fn(pdf), path_fn(key))
+            n += 1
+        return n
+
+    return _walk_groups(df, group_cols, emit)
+
+
+def _write_bundle(writer, base: str, bodies: dict[str, bytes]) -> int:
+    """Write ``bodies`` as one ``<base>.bundle`` object plus a
+    ``<base>.idx.json`` index ({key: [offset, len]}), or nothing when
+    there are none; returns the number of entries."""
+    if bodies:
+        index, offset = {}, 0
+        for key, body in bodies.items():
+            index[key] = [offset, len(body)]
+            offset += len(body)
+        writer.write(b"".join(bodies.values()), base + ".bundle")
+        writer.write(json.dumps(index), base + ".idx.json")
+    return len(bodies)
+
+
+def _csv_body(df, group_cols: list[str], sort_cols, drop_group_cols: bool = True):
+    """``body(pdf) -> str``: a group's CSV, rows stably sorted on
+    ``sort_cols``, without the group columns unless ``drop_group_cols`` is
+    false."""
+    value_cols = [c for c in df.columns if c not in group_cols]
+
+    def body(pdf):
+        if sort_cols:
+            pdf = pdf.sort_values(sort_cols, kind="mergesort")
+        return (pdf[value_cols] if drop_group_cols else pdf).to_csv(index=False)
+
+    return body
 
 
 def write_grouped_csv(
@@ -128,30 +243,15 @@ def write_grouped_csv(
 ) -> int:
     """S7-style sink: one CSV artifact per distinct group.
 
-    ``path_fn(group_key_dict) -> rel_path``. Executes as ``applyInPandas``
-    over a hash-repartition on the group columns, so each group is
-    serialized exactly once, executor-side. Returns number of files.
-    ``sort_cols`` orders rows inside each artifact (group row order
-    otherwise follows shuffle partitioning, which varies with cluster
-    layout — sorted artifacts are byte-stable across runs).
+    ``path_fn(group_key_dict) -> rel_path``.  Runs on the group walker,
+    so each group is serialized exactly once, executor-side.  Returns the
+    number of files.  ``sort_cols`` orders rows inside each artifact (a
+    stable sort; group row order otherwise follows shuffle partitioning,
+    which varies with cluster layout — sorted artifacts are byte-stable
+    across runs).
     """
-    import pandas as pd
-
-    value_cols = [c for c in df.columns if c not in group_cols]
-    df, restore, (g_cols,) = _escape_dotted(df, group_cols)
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        if restore:
-            pdf = pdf.rename(columns=restore)
-        key = {c: pdf.iloc[0][c] for c in group_cols}
-        if sort_cols:
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        body = pdf[value_cols].to_csv(index=False) if drop_group_cols else pdf.to_csv(index=False)
-        writer.write(body, path_fn(key))
-        return pd.DataFrame({"n": [len(pdf)]})
-
-    out = df.groupBy(*g_cols).applyInPandas(emit, schema="n long")
-    return out.count()
+    return _write_per_group(df, group_cols, path_fn, writer,
+                            _csv_body(df, group_cols, sort_cols, drop_group_cols))
 
 
 def write_grouped_csv_bundles(
@@ -170,55 +270,17 @@ def write_grouped_csv_bundles(
     store objects; a serving layer reads ``<bundle>.idx.json``
     ({key: [offset, len]}) and range-reads the bundle.  ``key_fn(group
     key dict) -> index key``; ``bundle_path_fn(partition_id) -> path``.
-    A repartition on the group columns guarantees each group lands whole
-    in exactly one partition; rows are buffered per partition (size that
-    with AQE/shuffle-partition settings).  Returns number of groups.
+    Runs on the group walker, so each entry is byte-equal to the
+    ``write_grouped_csv`` artifact of its group.  Returns the number of
+    groups.
     """
-    import json as _json
+    body = _csv_body(df, group_cols, sort_cols)
 
-    import pandas as pd
-    from pyspark.sql import functions as F
+    def emit(pid, groups) -> int:
+        bodies = {key_fn(key): body(pdf).encode() for key, pdf in groups}
+        return _write_bundle(writer, bundle_path_fn(pid), bodies)
 
-    value_cols = [c for c in df.columns if c not in group_cols]
-    df, restore, (g_cols,) = _escape_dotted(df, group_cols)
-
-    def emit(batches):
-        frames: list[pd.DataFrame] = []
-        pid = None
-        for pdf in batches:
-            if restore:
-                pdf = pdf.rename(columns=restore)
-            if len(pdf) and pid is None:
-                pid = int(pdf["_pid"].iloc[0])
-            frames.append(pdf)
-        if not frames or pid is None:
-            yield pd.DataFrame({"n": [0]})
-            return
-        whole = pd.concat(frames, ignore_index=True)
-        chunks: list[bytes] = []
-        index: dict[str, list[int]] = {}
-        offset = 0
-        for key_vals, g in whole.groupby(group_cols, sort=True, dropna=False):
-            if not isinstance(key_vals, tuple):
-                key_vals = (key_vals,)
-            key = key_fn(dict(zip(group_cols, key_vals)))
-            if sort_cols:
-                g = g.sort_values(sort_cols, kind="mergesort")
-            body = g[value_cols].to_csv(index=False).encode()
-            index[key] = [offset, len(body)]
-            chunks.append(body)
-            offset += len(body)
-        base = bundle_path_fn(pid)
-        writer.write(b"".join(chunks), base + ".bundle")
-        writer.write(_json.dumps(index), base + ".idx.json")
-        yield pd.DataFrame({"n": [len(index)]})
-
-    out = (
-        df.repartition(*[F.col(c) for c in g_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .mapInPandas(emit, schema="n long")
-    )
-    return out.agg(F.sum("n")).first()[0] or 0
+    return _walk_groups(df, group_cols, emit)
 
 
 def write_json(obj, rel_path: str, writer) -> None:
@@ -231,25 +293,40 @@ def write_grouped_json(df, group_cols: list[str], path_fn, writer,
     """Executor-side JSON artifacts, one per distinct group.
 
     The streaming analogue of ``write_json`` for payloads that scale with
-    the data (per-feature region inventories, qualifier value lists): the
-    group's rows arrive as one pandas frame inside ``applyInPandas``,
-    ``payload_fn(pdf) -> obj`` shapes the JSON body, and the write happens
-    on the executor — group contents never transit the driver, so driver
-    memory stays flat no matter how many distinct values a feature has.
-    Returns the number of artifacts written.
+    the data (per-feature region inventories, qualifier value lists):
+    ``payload_fn(pdf) -> obj`` shapes the JSON body from the group's rows
+    on the group walker, and the write happens on the executor — group
+    contents never transit the driver, so driver memory stays flat no
+    matter how many distinct values a feature has.  Returns the number of
+    artifacts written.
     """
-    import pandas as pd
+    return _write_per_group(df, group_cols, path_fn, writer,
+                            lambda pdf: json.dumps(payload_fn(pdf), default=str))
 
-    df, restore, (g_cols,) = _escape_dotted(df, group_cols)
 
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        if restore:
-            pdf = pdf.rename(columns=restore)
-        key = {c: pdf.iloc[0][c] for c in group_cols}
-        writer.write(json.dumps(payload_fn(pdf), default=str), path_fn(key))
-        return pd.DataFrame({"n": [1]})
+def _tile_bodies(batches, to_pandas, debug: bool = False):
+    """Yield ``(row dict, body)`` per tile row: the tile's protobuf bytes,
+    or with ``debug`` its human-readable dict repr."""
+    from slow_tortoise_spark.sinks.tile_proto import encode_tile
 
-    return df.groupBy(*g_cols).applyInPandas(emit, schema="n long").count()
+    for batch in batches:
+        pdf = to_pandas(batch)
+        for values in pdf.itertuples(index=False, name=None):
+            row = dict(zip(pdf.columns, values))
+            tile = row["tile"]
+            bins = {
+                b["bin"]: (b["s_sum_t_sum"], b["s_sum_t_mean"], float(b["weight"]))
+                for b in row["bins"]
+            }
+            if debug:
+                yield row, str({
+                    "coord": {"z": tile["z"], "x": tile["x"], "y": tile["y"]},
+                    "total_bins": row["total_bins"],
+                    "bins": bins,
+                })
+            else:
+                yield row, encode_tile(tile["z"], tile["x"], tile["y"],
+                                       row["total_bins"], bins)
 
 
 def write_tile_bundles(
@@ -267,49 +344,16 @@ def write_tile_bundles(
     and range-reads the bundle. ``bundle_path_fn(partition_id) -> path``.
     Repartition upstream to hit ``tiles_per_partition_hint``.
     """
-    import json as _json
 
-    import pandas as pd
-    from pyspark.sql import functions as F
+    def emit(pid, batches, to_pandas) -> int:
+        bodies = {
+            f"{r['feature']}/{r['timestamp']}-{r['tile']['z']}-"
+            f"{r['tile']['x']}-{r['tile']['y']}": body
+            for r, body in _tile_bodies(batches, to_pandas)
+        }
+        return _write_bundle(writer, bundle_path_fn(pid), bodies)
 
-    from slow_tortoise_spark.sinks.tile_proto import encode_tile
-
-    # Arrow-batched executor-side sink: structs arrive as plain dicts, no
-    # JVM→Python Row deserialization; the partition id rides along as a
-    # column because mapInPandas doesn't expose one.
-    def emit(batches):
-        chunks: list[bytes] = []
-        index: dict[str, list[int]] = {}
-        offset = 0
-        pid = None
-        for pdf in batches:
-            if len(pdf) and pid is None:
-                pid = int(pdf["_pid"].iloc[0])
-            for row in pdf.itertuples(index=False):
-                bins = {
-                    b["bin"]: (
-                        b["s_sum_t_sum"], b["s_sum_t_mean"], float(b["weight"])
-                    )
-                    for b in row.bins
-                }
-                tile = row.tile
-                buf = encode_tile(tile["z"], tile["x"], tile["y"],
-                                  row.total_bins, bins)
-                key = (f"{row.feature}/{row.timestamp}-{tile['z']}-"
-                       f"{tile['x']}-{tile['y']}")
-                index[key] = [offset, len(buf)]
-                chunks.append(buf)
-                offset += len(buf)
-        if chunks:
-            base = bundle_path_fn(pid)
-            writer.write(b"".join(chunks), base + ".bundle")
-            writer.write(_json.dumps(index), base + ".idx.json")
-        yield pd.DataFrame({"n": [len(chunks)]})
-
-    out = tiles_df.withColumn("_pid", F.spark_partition_id()).mapInPandas(
-        emit, schema="n long"
-    )
-    return out.agg(F.sum("n")).first()[0] or 0
+    return _each_partition(tiles_df, emit)
 
 
 def write_tiles(tiles_df, path_fn, writer, debug: bool = False) -> int:
@@ -320,42 +364,18 @@ def write_tiles(tiles_df, path_fn, writer, debug: bool = False) -> int:
     writes the human-readable dict repr instead of protobuf bytes (the
     reference's ``save_tile(debug=True)`` ``.txt`` variant,
     /root/reference/flows/common.py:291-309) — pair it with a ``.txt``
-    path convention in ``path_fn``.
+    path convention in ``path_fn``.  Tile bytes never reach the driver:
+    each partition returns one count.
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
 
-    from slow_tortoise_spark.sinks.tile_proto import encode_tile
+    def emit(_pid, batches, to_pandas) -> int:
+        n = 0
+        for row, body in _tile_bodies(batches, to_pandas, debug):
+            writer.write(body, path_fn(row))
+            n += 1
+        return n
 
-    cols = tiles_df.columns
-
-    # Arrow-batched, executor-side; the only job output is one count per
-    # batch, aggregated below — tile bytes never reach the driver.
-    def emit(batches) -> Iterable:
-        for pdf in batches:
-            for i in range(len(pdf)):
-                row = {c: pdf[c].iloc[i] for c in cols}
-                bins = {
-                    b["bin"]: (
-                        b["s_sum_t_sum"], b["s_sum_t_mean"], float(b["weight"])
-                    )
-                    for b in row["bins"]
-                }
-                tile = row["tile"]
-                if debug:
-                    body = str({
-                        "coord": {"z": tile["z"], "x": tile["x"], "y": tile["y"]},
-                        "total_bins": row["total_bins"],
-                        "bins": bins,
-                    })
-                else:
-                    body = encode_tile(tile["z"], tile["x"], tile["y"],
-                                       row["total_bins"], bins)
-                writer.write(body, path_fn(row))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    out = tiles_df.mapInPandas(emit, schema="n long")
-    return out.agg(F.sum("n")).first()[0] or 0
+    return _each_partition(tiles_df, emit)
 
 
 def write_webdataset_shards(

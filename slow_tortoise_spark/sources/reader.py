@@ -84,14 +84,6 @@ def read_datacube(
     return df
 
 
-def assert_non_empty(df: DataFrame) -> int:
-    """Row-count guard (reference S3): fail on an empty datacube."""
-    n = df.count()
-    if n == 0:
-        raise ValueError("datacube is empty — nothing to process")
-    return n
-
-
 # ---------------------------------------------------------------------------
 # Star-schema convenience loader for the ad-hoc query surface
 # ---------------------------------------------------------------------------

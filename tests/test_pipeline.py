@@ -730,3 +730,188 @@ def test_concurrent_sinks_are_deterministic_and_inherit_job_group(
     assert digests[0] == digests[1]
     assert any(p.endswith("results.json") for p in digests[0])
     assert any("/qualifiers/" in p for p in digests[0])
+
+
+# ---------------------------------------------------------------------------
+# The group walker behind every grouped sink
+# ---------------------------------------------------------------------------
+
+
+def _same_partition_keys(spark, n: int = 2) -> list[str]:
+    """``n`` group keys that hash to one shuffle partition, so a sink's
+    repartition on them puts their groups side by side in one task."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    by_bucket: dict[int, list[str]] = {}
+    for r in spark.createDataFrame([(f"k{i}",) for i in range(64)], "g string") \
+            .selectExpr("g", f"pmod(hash(g), {parts}) AS b").collect():
+        by_bucket.setdefault(r["b"], []).append(r["g"])
+    return next(keys[:n] for keys in by_bucket.values() if len(keys) >= n)
+
+
+def test_grouped_sink_converts_each_group_by_itself(spark, tmp_path):
+    """An integer column that is null in a neighbouring group of the same
+    partition still renders as an integer: each group gets the dtypes
+    ``applyInPandas`` would give it, not those of a whole batch."""
+    from slow_tortoise_spark.sinks.writers import FileWriter, write_grouped_csv
+
+    full, empty = _same_partition_keys(spark)
+    df = spark.createDataFrame(
+        [(full, 1, 100), (full, 2, 7), (empty, 1, None)],
+        "g string, t long, x long")
+    out = str(tmp_path / "dtypes")
+    n = write_grouped_csv(df, ["g"], path_fn=lambda k: f"{k['g']}.csv",
+                          writer=FileWriter(out), sort_cols=["t"])
+    assert n == 2
+    assert open(f"{out}/{full}.csv").read() == "t,x\n1,100\n2,7\n"
+    assert open(f"{out}/{empty}.csv").read() == "t,x\n1,\n"
+
+
+def test_grouped_sink_carries_groups_across_arrow_batches(spark, tmp_path):
+    """With two-row Arrow batches most groups straddle batches: each is
+    still written once, with all its rows, byte-identical to a run at the
+    default batch size."""
+    from slow_tortoise_spark.sinks.writers import (
+        FileWriter,
+        write_grouped_csv,
+        write_grouped_json,
+    )
+
+    keys = _same_partition_keys(spark, 3)
+    rows = [(g, t, float(t) / 3) for i, g in enumerate(keys)
+            for t in range(2 * i + 1)] + [(None, 0, 0.5), (None, 1, 1.5)]
+    df = spark.createDataFrame(rows, "g string, t long, v double")
+
+    def write(out: str) -> tuple[int, int]:
+        return (
+            write_grouped_csv(df, ["g"], path_fn=lambda k: f"csv/{k['g']}.csv",
+                              writer=FileWriter(out), sort_cols=["t"]),
+            write_grouped_json(df, ["g"], path_fn=lambda k: f"json/{k['g']}.json",
+                               writer=FileWriter(out),
+                               payload_fn=lambda pdf: sorted(pdf["t"].tolist())),
+        )
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(conf)
+    assert write(str(tmp_path / "default")) == (4, 4)
+    spark.conf.set(conf, "2")
+    try:
+        assert write(str(tmp_path / "small")) == (4, 4)
+    finally:
+        spark.conf.set(conf, default)
+    small = _tree_digest(str(tmp_path / "small"))
+    assert small == _tree_digest(str(tmp_path / "default")) and len(small) == 8
+    assert json.load(open(tmp_path / "small" / "json" / f"{keys[2]}.json")) == [
+        0, 1, 2, 3, 4]
+
+
+def test_grouped_sinks_on_empty_input_write_nothing(spark, tmp_path):
+    from slow_tortoise_spark.sinks.writers import (
+        FileWriter,
+        write_grouped_csv,
+        write_grouped_csv_bundles,
+        write_grouped_json,
+    )
+
+    df = spark.createDataFrame([], "g string, t long")
+    writer = FileWriter(str(tmp_path / "empty"))
+    assert write_grouped_csv(df, ["g"], lambda k: "x.csv", writer) == 0
+    assert write_grouped_json(df, ["g"], lambda k: "x.json", writer,
+                              payload_fn=len) == 0
+    assert write_grouped_csv_bundles(df, ["g"], key_fn=str,
+                                     bundle_path_fn=lambda pid: f"b{pid}",
+                                     writer=writer) == 0
+    assert not os.path.exists(tmp_path / "empty")
+
+
+# ---------------------------------------------------------------------------
+# Whole-run parity and round trips
+# ---------------------------------------------------------------------------
+
+DIGEST = os.path.join(os.path.dirname(__file__), "data",
+                      "pipeline_tree_digest.json")
+
+
+def _weighted_cube(path: str) -> str:
+    """A weighted cube over two years: five features, two countries with
+    three admin1 each, coordinates, and two qualifiers whose values
+    differ by feature (so pivoted qualifier columns are null for some
+    features)."""
+    import pandas as pd
+
+    rows = []
+    for i in range(240):
+        feature = f"f{i % 5}"
+        rows.append({
+            "timestamp": _ms(2019 + i % 2, 1 + i % 12, 1 + i % 27),
+            "country": ("Ethiopia", "Kenya")[i % 2],
+            "admin1": f"adm{i % 3}",
+            "admin2": None,
+            "admin3": None,
+            "lat": 10.0 + (i % 11) * 0.013,
+            "lng": 40.0 + (i % 7) * 0.017,
+            "feature": feature,
+            "value": float((i * 37) % 101) / 4,
+            "w": 1.0 + (i % 4),
+            "qual1": ("qa", "qb", "qc")[i % (2 + i % 5 // 3)],
+            "qual2": f"{feature}-{i % 2}",
+        })
+    pd.DataFrame(rows).to_parquet(path)
+    return path
+
+
+def _parity_params(cube: str, out: str) -> PipelineParams:
+    return PipelineParams(
+        data_id="dp", run_id="rp", data_paths=[cube], dest_root=out,
+        weight_column="w", time_resolutions=("month", "year"),
+    )
+
+
+def test_pipeline_tree_matches_parent_digest(spark, tmp_path):
+    """A weighted month+year run with qualifiers open and tiles on
+    writes, byte for byte, the tree pinned in
+    ``tests/data/pipeline_tree_digest.json`` (sha256 of every file,
+    results.json included).  The fixture was written by the code before
+    the sinks moved onto the group walker; a deliberate change of any
+    artifact rewrites it with ``json.dump(_tree_digest(out), fh,
+    indent=1, sort_keys=True)`` in the same commit."""
+    cube = _weighted_cube(str(tmp_path / "cube.parquet"))
+    out = str(tmp_path / "tree")
+    run_pipeline(spark, _parity_params(cube, out))
+    with open(DIGEST) as fh:
+        expected = json.load(fh)
+    actual = _tree_digest(out)
+    assert sorted(actual) == sorted(expected)
+    assert {p for p in actual if actual[p] != expected[p]} == set()
+
+
+#: Spark jobs of one ``_pipeline_jobs`` run on ``cube_path``, counted
+#: when the grouped sinks moved onto the group walker; the code before
+#: that ran ``PARENT_JOBS``.
+PIPELINE_JOBS = 48
+PARENT_JOBS = 61
+
+
+def _pipeline_jobs(spark, cube: str, out: str) -> int:
+    """Spark jobs of one run in the benchmark's shape: month only, the
+    qualifier gate closed, tiles on."""
+    sc = spark.sparkContext
+    group = f"pipeline-jobs-{os.path.basename(out)}"
+    sc.setJobGroup(group, "pipeline job count")
+    try:
+        run_pipeline(spark, PipelineParams(
+            data_id="dc", run_id="rc", data_paths=[cube], dest_root=out,
+            time_resolutions=("month",), qualifier_max_count=0,
+        ))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pipeline_job_count_is_pinned(spark, cube_path, tmp_path):
+    """Round trips bound the datacube run, so its Spark job count is
+    pinned: a change that adds a job fails here, a change that saves one
+    lowers ``PIPELINE_JOBS``."""
+    assert _pipeline_jobs(spark, cube_path, str(tmp_path / "jobs")) \
+        <= PIPELINE_JOBS < PARENT_JOBS
