@@ -18,11 +18,24 @@ entries a repeated op compiles zero new classes: 204/257 -> 0 per op,
 counted with Spark's ``CodegenMetrics`` source-size counter in a 4-vCPU
 ``local[4]`` session. Entries scale with distinct plan shapes, not with
 rows.
+
+The driver JVM caps G1's young generation at a quarter of its heap.
+Uncapped, G1 grows the young generation adaptively up to 60% of the
+heap, and how far it gets depends on measured pause times, so the same
+run touched a different share of the heap each time: one datacube
+``run_pipeline`` repeated in fresh ``local[4]`` sessions with a fixed
+2 GB heap (the benchmark's ``datacube_artifacts`` run, 4 vCPUs) left
+the driver's peak resident memory anywhere between 2,055 and 2,468 MB
+(8 runs).  Capped, 8 runs stayed between 1,513 and 1,590 MB, and op
+time stayed within its run-to-run noise.  The cap goes into
+``spark.driver.defaultJavaOptions``, so ``spark.driver.extraJavaOptions``
+still applies and a ``-XX:MaxNewSize`` there overrides it.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import time
 
 from pyspark.sql import SparkSession
@@ -30,6 +43,18 @@ from pyspark.sql import SparkSession
 #: compiled whole-stage codegen classes the session keeps (see the module
 #: docstring for how the size was chosen)
 CODEGEN_CACHE_ENTRIES = 1024
+#: the driver's young generation may use at most 1/N of its heap (module
+#: docstring)
+YOUNG_GEN_HEAP_FRACTION = 4
+
+_MEMORY_UNITS_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def _memory_mb(size: str) -> int | None:
+    """MiB in a Spark memory string (``8g``, ``2048m``, ``2048`` = MiB),
+    or None when it does not parse."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", size.strip().lower())
+    return int(int(m.group(1)) * _MEMORY_UNITS_MB[m.group(2) or "m"]) if m else None
 
 
 def pin_process_utc() -> None:
@@ -61,6 +86,9 @@ def get_spark(
     to ``local[N]`` with N from $SPARK_GRAFT_CPUS (fallback: all cores).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    extra_conf = extra_conf or {}
+    driver_memory = extra_conf.get(
+        "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -84,7 +112,7 @@ def get_spark(
         # truncation at stage boundaries remains the real fix, this is
         # the engine-wide safety net.
         .config("spark.sql.maxPlanStringLength", str(16 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", driver_memory)
         # static: compiled classes kept across actions (module docstring)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
@@ -92,7 +120,13 @@ def get_spark(
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
-    for k, v in (extra_conf or {}).items():
+    heap_mb = _memory_mb(driver_memory)
+    if heap_mb:
+        # young-generation cap (module docstring); extra_conf may replace it
+        builder = builder.config(
+            "spark.driver.defaultJavaOptions",
+            f"-XX:MaxNewSize={heap_mb // YOUNG_GEN_HEAP_FRACTION}m")
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     pin_process_utc()
     spark = builder.getOrCreate()
