@@ -56,14 +56,6 @@ def qualifier_counts(df: DataFrame, qualifier_columns: list[str]) -> DataFrame:
     return df.groupBy("feature").agg(*exprs)
 
 
-def qualifier_values(df: DataFrame, qualifier: str) -> DataFrame:
-    """A8: sorted distinct values of one qualifier, per feature."""
-    return df.groupBy("feature").agg(
-        F.array_sort(F.collect_set(qualifier)).alias("values"),
-        F.countDistinct(qualifier).alias("count"),
-    )
-
-
 def rows_per_feature(df: DataFrame) -> DataFrame:
     """A9: row counts per feature (gates the raw-CSV passthrough)."""
     return df.groupBy("feature").agg(F.count("*").alias("n_rows"))

@@ -16,17 +16,22 @@ Caching policy: the validated cube feeds every branch → cache it; each
 temporal aggregate feeds 4+ branches → cache. Artifact sinks do not run
 one after another on the driver thread: each is queued on a driver pool
 of ``defaultParallelism`` threads, so their Spark jobs overlap with one
-another and with the eager decision actions (the per-feature counts, the
-approximate group count, extrema collects) that stay on the driver
-thread.  The all-time summary (temporal_aggregation("all") → output
-summary) is queued on the same pool before any sink, so it overlaps
-the whole run instead of running after the last sink; each
-resolution queues its tile branch first, so its longest sink starts
-earliest.  A resolution's cached frames are released once its queued
-sinks have drained.  On every path, errors included, the run cancels or
-waits for its queued sinks and releases every frame it cached.  At
-100 TB replace cache() with a checkpoint to fast storage if executor
-memory can't hold the working set.
+another and with the eager decision actions (the per-feature counts,
+extrema collects) that stay on the driver thread.  The all-time summary
+(temporal_aggregation("all") → output summary) is queued on the same
+pool before any sink, so it overlaps the whole run instead of running
+after the last sink; each resolution queues its tile branch first, so
+its longest sink starts earliest.  A resolution's cached frames are
+released once its queued sinks have drained.  On every path, errors
+included, the run cancels or waits for its queued sinks and releases
+every frame it cached.  At 100 TB replace cache() with a checkpoint to
+fast storage if executor memory can't hold the working set.
+
+Sink layout: the tile and per-region timeseries families are written
+one object per artifact (the reference layout) up to ``BUNDLE_THRESHOLD``
+artifacts and bundled above it; the counts come from cache builds the run
+makes anyway (the subtile rows, the region inventory), so the choice
+costs no job.
 """
 
 from __future__ import annotations
@@ -43,9 +48,13 @@ from slow_tortoise_spark.operators.extrema import regional_extrema
 from slow_tortoise_spark.operators.pivot import qualifier_timeseries_pivot
 from slow_tortoise_spark.operators.regional import (
     extract_region_columns,
+    join_region_columns,
     regional_aggregation_all_levels,
 )
-from slow_tortoise_spark.operators.spatial import global_timeseries
+from slow_tortoise_spark.operators.spatial import (
+    global_timeseries,
+    spatial_aggregation,
+)
 from slow_tortoise_spark.operators.summary import (
     apply_qualifier_thresholds,
     output_summary,
@@ -62,14 +71,22 @@ from slow_tortoise_spark.operators.validate import (
     get_qualifier_columns,
     validate_and_fix,
 )
+from slow_tortoise_spark.schema import REGION_LEVELS
 from slow_tortoise_spark.sinks.writers import (
     WRITE_TYPES,
     write_grouped_csv,
+    write_grouped_csv_bundles,
     write_grouped_json,
     write_json,
+    write_tile_bundles,
     write_tiles,
 )
 from slow_tortoise_spark.sources.reader import read_datacube
+
+#: Past this many artifacts a family is written as one bundle + JSON index
+#: per partition, not one object each: the reference's per-tile layout
+#: was upload-bound at ~400k objects per precision-15 run.
+BUNDLE_THRESHOLD = 10_000
 
 
 @dataclass
@@ -98,29 +115,8 @@ class PipelineParams:
     # compute_tiles. results.json is recorded only on full runs, like the
     # reference's record_results gating (data_pipeline.py:264-276).
     selected_output_tasks: tuple[str, ...] | None = None
-    # "files": one protobuf object per tile (reference layout).
-    # "bundles": one bundle object + JSON index per partition — the scale
-    # path for object stores (the reference's per-tile layout was
-    # upload-bound at ~400k objects/precision-15).
-    # "auto" (default): bundles when the tile-count estimate exceeds
-    # sink_bundle_threshold, reference layout otherwise — small runs keep
-    # byte-for-byte reference parity, large runs never hit the
-    # object-store upload wall.
-    tile_sink: str = "auto"
     # reference save_tile(debug=True): human-readable .txt tiles.
     tile_debug: bool = False
-    # "files": one CSV object per group (reference layout). "bundles":
-    # pack the per-REGION timeseries family (the many-small-files hot
-    # spot: one CSV per (feature, level, region)) into one bundle +
-    # JSON index per partition — O(partitions) store objects.
-    # "auto" (default): decided per run from an approx distinct-group
-    # count against sink_bundle_threshold, like tile_sink.
-    csv_sink: str = "auto"
-    # group/tile count above which "auto" sinks switch to bundles. The
-    # default keeps every reference-scale fixture on the per-file layout
-    # while a production-scale run (the reference's ~400k-object tiling
-    # anecdote) bundles.
-    sink_bundle_threshold: int = 10_000
     # When set, the reused intermediates (validated cube, per-resolution
     # temporal aggregates, regional rollup) are CHECKPOINTED to this
     # directory instead of cache()d: lineage truncates and the working
@@ -170,15 +166,30 @@ class _RunScope:
         or checkpoint it eagerly when the run has a checkpoint dir
         (checkpointed frames need no unpersist: nothing is pinned in
         executor memory).  Built here, a cache costs one job: sinks that
-        first read it concurrently would each submit a job to build it."""
+        first read it concurrently would each submit a job to build it.
+        The build job also counts the rows it caches; ``rows`` reads
+        that count."""
         if self.checkpoint_dir:
             return frame.checkpoint(eager=True)
         self.cached.append(frame.cache())
         # the job adaptive execution runs for a cache's first reader
-        self.spark._jsparkSession.sharedState().cacheManager() \
-            .lookupCachedData(frame._jdf).get().cachedRepresentation() \
-            .cacheBuilder().cachedColumnBuffers().count()
+        self._cache_builder(frame).cachedColumnBuffers().count()
         return frame
+
+    def rows(self, frame) -> int:
+        """The row count of a frame ``persist`` returned.  A cache's
+        builder summed it in a row-count accumulator while its build job
+        ran, so reading it costs no job; a checkpoint is counted from its
+        files.  Read it right after ``persist``: a cached block that is
+        evicted and rebuilt later counts its rows again."""
+        if self.checkpoint_dir:
+            return frame.count()
+        return self._cache_builder(frame).rowCountStats().value()
+
+    def _cache_builder(self, frame):
+        return self.spark._jsparkSession.sharedState().cacheManager() \
+            .lookupCachedData(frame._jdf).get().cachedRepresentation() \
+            .cacheBuilder()
 
     def release_since(self, mark: int) -> None:
         """Unpersist the frames cached after the first ``mark``."""
@@ -199,10 +210,18 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
         run.close()
 
 
+def _by_feature(rows: list) -> list:
+    """Collected per-feature rows in feature order, null first as Spark
+    sorts it: results.json lists features in the order of its rows, and
+    an aggregate's collected row order is not stable."""
+    return sorted(rows, key=lambda r: (r["feature"] is not None,
+                                       r["feature"] or ""))
+
+
 def _all_time_summary(df, weight_column: str) -> list[dict[str, Any]]:
     """A6: the all-time per-feature summary rows of results.json."""
     t_all = temporal_aggregation(df, "all", weight_column=weight_column)
-    return [r.asDict() for r in output_summary(t_all).collect()]
+    return [r.asDict() for r in _by_feature(output_summary(t_all).collect())]
 
 
 def _run_pipeline(
@@ -246,15 +265,13 @@ def _run_pipeline(
         and c not in extract_region_columns(df)
     ]
     # One action answers the row-count guard (S3), the rows per feature
-    # (A9) and the per-feature qualifier counts (A8): the two aggregates
-    # are unioned, not joined, so each keeps the row order it has alone
-    # (results.json lists features in that order) and a union adds no
-    # shuffle.
+    # (A9) and the per-feature qualifier counts (A8): a union of the two
+    # aggregates adds no shuffle.
     per_feature = rows_per_feature(df)
     if all_qualifiers:
         counts = qualifier_counts(df, all_qualifiers)
         per_feature = per_feature.unionByName(counts, allowMissingColumns=True)
-    per_feature = per_feature.collect()
+    per_feature = _by_feature(per_feature.collect())
     feature_rows = {r["feature"]: r["n_rows"] for r in per_feature
                     if r["n_rows"] is not None}
     count_rows = [r for r in per_feature if r["n_rows"] is None]
@@ -264,9 +281,7 @@ def _run_pipeline(
     results["validation"] = stats.__dict__
     weight = stats.weight_column
     # All-time summary (A6): queued before any sink, so it overlaps the
-    # whole run.  Queued after the per-feature action, not beside it: the
-    # row order of an aggregate collected while other jobs run is not
-    # stable, and results.json lists features in that order.
+    # whole run.
     summary = run.sink(_all_time_summary, df, weight)
 
     qualifiers: list[str] = []
@@ -319,10 +334,11 @@ def _run_pipeline(
     # reach millions of ids at scale, so the lists are never collected to
     # the driver — each feature's distinct rows form one group of the sink's
     # group walker, and the task that holds it writes the JSON directly.
+    # The inventory is cached: its rows are the distinct (feature, level,
+    # region) groups, one per-region timeseries CSV each, so its build
+    # counts them for the sink layout of every resolution.
     region_cols = extract_region_columns(df)
-    from slow_tortoise_spark.operators.regional import join_region_columns
-    from slow_tortoise_spark.schema import REGION_LEVELS
-
+    n_regions = 0
     if region_cols:
         parts = [
             join_region_columns(df, level)
@@ -333,6 +349,8 @@ def _run_pipeline(
         all_regions = parts[0]
         for p in parts[1:]:
             all_regions = all_regions.unionByName(p)
+        all_regions = run.persist(all_regions)
+        n_regions = run.rows(all_regions)
 
         def region_payload(pdf):
             lists = {r: [] for r in REGION_LEVELS}
@@ -389,23 +407,14 @@ def _run_pipeline(
         if (task_on("compute_tiles") and params.compute_tiles
                 and "lat" in df.columns and "lng" in df.columns):
             sub = run.persist(subtile_aggregation(t))
-            n_subtiles = sub.count()
-            tile_mode = params.tile_sink
-            if tile_mode == "auto":
-                # max-precision subtile rows upper-bound the finest
-                # level's tile count — the dominant share of the tile
-                # tree (each coarser zoom has ~1/4 as many)
-                tile_mode = ("bundles"
-                             if n_subtiles > params.sink_bundle_threshold
-                             else "files")
+            # max-precision subtile rows upper-bound the finest level's
+            # tile count — the dominant share of the tile tree (each
+            # coarser zoom has ~1/4 as many)
+            n_subtiles = run.rows(sub)
             if n_subtiles > 0:
                 tiles = tiles_all_levels(sub)
                 ext = ".txt" if params.tile_debug else ".tile"
-                if tile_mode == "bundles":
-                    from slow_tortoise_spark.sinks.writers import (
-                        write_tile_bundles,
-                    )
-
+                if n_subtiles > BUNDLE_THRESHOLD:
                     n_tiles = run.sink(
                         write_tile_bundles,
                         tiles,
@@ -514,23 +523,7 @@ def _run_pipeline(
             # region), rows over timestamps; qualifier breakdowns only for
             # levels ≤ regional_timeseries_max_level and qualifiers whose
             # cardinality fits regional_timeseries_count.
-            csv_mode = params.csv_sink
-            if csv_mode == "auto":
-                # one cheap pass over the CACHED rollup: HLL distinct of
-                # the group key ≈ number of per-region CSV objects the
-                # files layout would create
-                n_groups = regional.agg(
-                    F.approx_count_distinct(
-                        F.concat_ws("|", "feature", "level", "region_id")
-                    ).alias("n")
-                ).first()["n"]
-                csv_mode = ("bundles" if n_groups > params.sink_bundle_threshold
-                            else "files")
-            if csv_mode == "bundles":
-                from slow_tortoise_spark.sinks.writers import (
-                    write_grouped_csv_bundles,
-                )
-
+            if n_regions > BUNDLE_THRESHOLD:
                 run.sink(
                     write_grouped_csv_bundles,
                     regional.withColumnRenamed("region_id", "id"),
@@ -624,8 +617,6 @@ def _run_pipeline(
         # reference's semantics — and no extra scan of the raw cube runs.
         # Family-gated with the global timeseries (the reference emits its
         # qualifier timeseries from compute_global_timeseries).
-        from slow_tortoise_spark.operators.spatial import spatial_aggregation
-
         for q in (qualifiers if task_on("compute_global_timeseries") else []):
             feats = _active_features(q)
             if not feats:

@@ -226,59 +226,64 @@ def test_weighted_pipeline_end_to_end(spark, weighted_cube_path, tmp_path):
     assert rts and "s_wavg_t_sum" in read_csv(rts[0])[0]
 
 
-def test_pipeline_bundled_and_debug_tile_sinks(spark, cube_path, tmp_path):
-    """tile_sink='bundles' emits bundle+index objects holding every tile;
-    tile_debug=True emits human-readable .txt tiles."""
-    out = str(tmp_path / "bundled")
-    params = PipelineParams(
-        data_id="d3", run_id="r3", data_paths=[cube_path],
-        dest_root=out, time_resolutions=("month",), tile_sink="bundles",
-    )
-    results = run_pipeline(spark, params)
-    root = os.path.join(out, "d3/r3")
-    bundles = glob.glob(f"{root}/tiles/month/bundle-*.bundle")
-    indexes = glob.glob(f"{root}/tiles/month/bundle-*.idx.json")
-    assert bundles and len(bundles) == len(indexes)
-    assert not glob.glob(f"{root}/tiles/month/*/*.tile")
-    total = sum(len(json.load(open(i))) for i in indexes)
-    assert total == results["tiles_month"] > 0
+def test_pipeline_sink_layout_follows_artifact_counts(spark, cube_path,
+                                                      tmp_path, monkeypatch):
+    """Up to ``BUNDLE_THRESHOLD`` artifacts the tile and per-region
+    timeseries families are written one file each (``tile_debug`` → .txt
+    tiles); past it both are bundled, the tile indexes hold every tile
+    and the timeseries indexes hold exactly the per-file layout's CSVs."""
+    from slow_tortoise_spark import pipeline
 
-    out2 = str(tmp_path / "debugtiles")
-    params2 = PipelineParams(
-        data_id="d4", run_id="r4", data_paths=[cube_path],
-        dest_root=out2, time_resolutions=("month",), tile_debug=True,
-    )
-    run_pipeline(spark, params2)
-    txts = glob.glob(f"{out2}/d4/r4/tiles/month/*/*.txt")
-    assert txts
+    def run(out: str, **kw) -> dict:
+        return run_pipeline(spark, PipelineParams(
+            data_id="dl", run_id="rl", data_paths=[cube_path], dest_root=out,
+            time_resolutions=("month",), **kw))
+
+    files = str(tmp_path / "files")
+    run(files, tile_debug=True)
+    txts = glob.glob(f"{files}/dl/rl/tiles/month/*/*.txt")
+    assert txts and not glob.glob(f"{files}/dl/rl/tiles/month/bundle-*")
     body = open(txts[0]).read()
     assert body.startswith("{'coord':") and "total_bins" in body
+    per_region = {
+        os.path.relpath(p, files)
+        for p in glob.glob(f"{files}/dl/rl/regional-timeseries/month/*/*/*.csv")
+    }
+    assert per_region
 
-
-def test_auto_sink_selection(spark, cube_path, tmp_path):
-    """tile_sink/csv_sink='auto' (the default) picks the per-file
-    reference layout under the threshold — every other test in this file
-    relies on that — and flips BOTH families to bundles when the
-    group-count estimate exceeds it, without touching the parameters."""
-    out = str(tmp_path / "auto_small")
-    params = PipelineParams(
-        data_id="da", run_id="ra", data_paths=[cube_path], dest_root=out,
-        time_resolutions=("month",), sink_bundle_threshold=0,
-    )
-    results = run_pipeline(spark, params)
-    root = os.path.join(out, "da/ra")
-    # tiles bundled
-    assert glob.glob(f"{root}/tiles/month/bundle-*.bundle")
+    monkeypatch.setattr(pipeline, "BUNDLE_THRESHOLD", 0)
+    bundled = str(tmp_path / "bundled")
+    results = run(bundled)
+    root = os.path.join(bundled, "dl/rl")
     assert not glob.glob(f"{root}/tiles/month/*/*.tile")
-    idx = glob.glob(f"{root}/tiles/month/bundle-*.idx.json")
-    assert sum(len(json.load(open(i))) for i in idx) == results["tiles_month"]
-    # regional timeseries bundled
-    assert glob.glob(f"{root}/regional-timeseries/month/bundle-*.bundle")
-    assert not glob.glob(
-        f"{root}/regional-timeseries/month/*/level-0/*.csv"
-    )
-    # default threshold on the same cube keeps reference layout
-    # (test_run_pipeline_artifacts pins that), so nothing more to assert.
+    tile_idx = glob.glob(f"{root}/tiles/month/bundle-*.idx.json")
+    assert len(tile_idx) == len(glob.glob(f"{root}/tiles/month/bundle-*.bundle"))
+    assert sum(len(json.load(open(i))) for i in tile_idx) \
+        == results["tiles_month"] > 0
+    assert not glob.glob(f"{root}/regional-timeseries/month/*/*/*.csv")
+    keys = set()
+    for i in glob.glob(f"{root}/regional-timeseries/month/bundle-*.idx.json"):
+        keys.update(json.load(open(i)))
+    assert keys == per_region
+    # qualifier-gated per-region breakdowns still write per-file
+    assert glob.glob(f"{root}/regional-timeseries/month/*/level-0/"
+                     "qualifiers/qual1/*/*.csv")
+
+
+def test_run_scope_reports_rows_it_persisted(spark, tmp_path):
+    """The row count a persisted frame reports is its ``count()``, read
+    from the cache build in cache mode and counted in checkpoint mode."""
+    from slow_tortoise_spark.pipeline import _RunScope
+
+    frame = spark.range(1000).selectExpr("id % 37 AS k").distinct()
+    ckpt = str(tmp_path / "ckpt")
+    spark.sparkContext.setCheckpointDir(ckpt)
+    for checkpoint_dir in ("", ckpt):
+        run = _RunScope(spark, checkpoint_dir)
+        try:
+            assert run.rows(run.persist(frame)) == frame.count() == 37
+        finally:
+            run.close()
 
 
 def test_per_feature_qualifier_gating(spark, tmp_path):
@@ -535,28 +540,6 @@ def test_grouped_csv_bundles_match_per_file_sink(spark, cube_path, tmp_path):
             assert body == open(os.path.join(out_files, key), "rb").read(), key
             seen += 1
     assert seen == n_files
-
-
-def test_pipeline_csv_bundle_sink(spark, cube_path, tmp_path):
-    """csv_sink='bundles' replaces the per-region timeseries files with
-    bundle+index objects covering the same groups."""
-    import json as _json
-
-    out = str(tmp_path / "csvbundles")
-    params = PipelineParams(
-        data_id="d7", run_id="r7", data_paths=[cube_path], dest_root=out,
-        time_resolutions=("month",), compute_tiles=False, csv_sink="bundles",
-    )
-    run_pipeline(spark, params)
-    root = os.path.join(out, "d7/r7")
-    idxs = glob.glob(f"{root}/regional-timeseries/month/bundle-*.idx.json")
-    assert idxs
-    assert not glob.glob(f"{root}/regional-timeseries/month/*/level-0/*.csv")
-    keys = set()
-    for i in idxs:
-        keys.update(_json.load(open(i)))
-    # qualifier-gated per-region breakdowns still write per-file
-    assert any("/level-0/" in k and k.endswith(".csv") for k in keys)
 
 
 def test_grouped_sinks_accept_dotted_column_names(spark, tmp_path):
@@ -870,13 +853,21 @@ def test_pipeline_tree_matches_parent_digest(spark, tmp_path):
     """A weighted month+year run with qualifiers open and tiles on
     writes, byte for byte, the tree pinned in
     ``tests/data/pipeline_tree_digest.json`` (sha256 of every file,
-    results.json included).  The fixture was written by the code before
-    the sinks moved onto the group walker; a deliberate change of any
+    results.json included), and results.json lists its features in
+    order.  The fixture was written by the code before the sinks moved
+    onto the group walker, except results.json's entry, rewritten when
+    its per-feature entries were sorted; a deliberate change of any
     artifact rewrites it with ``json.dump(_tree_digest(out), fh,
     indent=1, sort_keys=True)`` in the same commit."""
     cube = _weighted_cube(str(tmp_path / "cube.parquet"))
     out = str(tmp_path / "tree")
     run_pipeline(spark, _parity_params(cube, out))
+    with open(os.path.join(out, "dp/rp/results.json")) as fh:
+        results = json.load(fh)
+    features = [f"f{i}" for i in range(5)]
+    assert list(results["rows_per_feature"]) == features
+    assert list(results["qualifier_counts"]) == features
+    assert [r["feature"] for r in results["output_agg_values"]] == features
     with open(DIGEST) as fh:
         expected = json.load(fh)
     actual = _tree_digest(out)
@@ -885,10 +876,10 @@ def test_pipeline_tree_matches_parent_digest(spark, tmp_path):
 
 
 #: Spark jobs of one ``_pipeline_jobs`` run on ``cube_path``, counted
-#: when the grouped sinks moved onto the group walker; the code before
-#: that ran ``PARENT_JOBS``.
-PIPELINE_JOBS = 48
-PARENT_JOBS = 61
+#: when the sink layout decision stopped running jobs of its own; the
+#: code before that ran ``PARENT_JOBS``.
+PIPELINE_JOBS = 45
+PARENT_JOBS = 48
 
 
 def _pipeline_jobs(spark, cube: str, out: str) -> int:
