@@ -19,6 +19,17 @@ counted with Spark's ``CodegenMetrics`` source-size counter in a 4-vCPU
 ``local[4]`` session. Entries scale with distinct plan shapes, not with
 rows.
 
+Generated class names leave out the whole-stage codegen stage id
+(``spark.sql.codegen.useIdInClassName=false``).  The cache is keyed by
+source text, and with the id in the class name the same pipeline
+compiled under a different id is a new class.  Adaptive execution
+numbers a query's stages in the order they are planned, and that order
+follows which shuffles finish first, so under CPU contention a repeated
+``run_pipeline`` compiled 1-4 classes again whose code differed only in
+that id (seen with the ``CodegenMetrics`` counter and the generated
+sources, 4 vCPUs busy with other processes).  Without the id such
+classes share one cache entry.
+
 The driver JVM caps G1's young generation at a quarter of its heap.
 Uncapped, G1 grows the young generation adaptively up to 60% of the
 heap, and how far it gets depends on measured pause times, so the same
@@ -115,6 +126,9 @@ def get_spark(
         .config("spark.driver.memory", driver_memory)
         # static: compiled classes kept across actions (module docstring)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # cache generated code by what it does, not by its stage number
+        # (module docstring)
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if master:
         builder = builder.master(master)

@@ -226,46 +226,68 @@ def test_weighted_pipeline_end_to_end(spark, weighted_cube_path, tmp_path):
     assert rts and "s_wavg_t_sum" in read_csv(rts[0])[0]
 
 
-def test_pipeline_sink_layout_follows_artifact_counts(spark, cube_path,
-                                                      tmp_path, monkeypatch):
-    """Up to ``BUNDLE_THRESHOLD`` artifacts the tile and per-region
-    timeseries families are written one file each (``tile_debug`` → .txt
-    tiles); past it both are bundled, the tile indexes hold every tile
-    and the timeseries indexes hold exactly the per-file layout's CSVs."""
+@pytest.fixture(scope="module")
+def sink_layouts(spark, cube_path, tmp_path_factory):
+    """One month run per layout: the default threshold with
+    ``tile_debug`` (every family per-file, .txt tiles), then
+    ``pipeline.BUNDLE_THRESHOLD`` = 0 (both families bundled)."""
     from slow_tortoise_spark import pipeline
 
-    def run(out: str, **kw) -> dict:
+    def run(out: str) -> dict:
         return run_pipeline(spark, PipelineParams(
             data_id="dl", run_id="rl", data_paths=[cube_path], dest_root=out,
-            time_resolutions=("month",), **kw))
+            time_resolutions=("month",), tile_debug=out.endswith("files")))
 
-    files = str(tmp_path / "files")
-    run(files, tile_debug=True)
+    files = str(tmp_path_factory.mktemp("layout") / "files")
+    run(files)
+    bundled = str(tmp_path_factory.mktemp("layout") / "bundled")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "BUNDLE_THRESHOLD", 0)
+        results = run(bundled)
+    return files, os.path.join(bundled, "dl/rl"), results
+
+
+def test_pipeline_bundled_and_debug_tile_sinks(sink_layouts):
+    """Past the threshold the tiles are bundle+index objects holding every
+    tile; tile_debug=True emits human-readable .txt tiles."""
+    files, root, results = sink_layouts
+    bundles = glob.glob(f"{root}/tiles/month/bundle-*.bundle")
+    indexes = glob.glob(f"{root}/tiles/month/bundle-*.idx.json")
+    assert bundles and len(bundles) == len(indexes)
+    assert not glob.glob(f"{root}/tiles/month/*/*.tile")
+    total = sum(len(json.load(open(i))) for i in indexes)
+    assert total == results["tiles_month"] > 0
+
     txts = glob.glob(f"{files}/dl/rl/tiles/month/*/*.txt")
     assert txts and not glob.glob(f"{files}/dl/rl/tiles/month/bundle-*")
     body = open(txts[0]).read()
     assert body.startswith("{'coord':") and "total_bins" in body
+
+
+def test_auto_sink_selection(sink_layouts):
+    """Under ``BUNDLE_THRESHOLD`` both families keep the per-file
+    reference layout — every other test in this file relies on that —
+    and past it BOTH flip to bundles, with no parameter set."""
+    files, root, _ = sink_layouts
+    assert glob.glob(f"{files}/dl/rl/regional-timeseries/month/*/level-0/*.csv")
+    assert not glob.glob(f"{files}/dl/rl/regional-timeseries/month/bundle-*")
+    assert glob.glob(f"{root}/tiles/month/bundle-*.bundle")
+    assert glob.glob(f"{root}/regional-timeseries/month/bundle-*.bundle")
+    assert not glob.glob(f"{root}/regional-timeseries/month/*/level-0/*.csv")
+
+
+def test_pipeline_csv_bundle_sink(sink_layouts):
+    """The per-region timeseries bundles index exactly the CSVs the
+    per-file layout writes; qualifier-gated breakdowns stay per-file."""
+    files, root, _ = sink_layouts
     per_region = {
         os.path.relpath(p, files)
         for p in glob.glob(f"{files}/dl/rl/regional-timeseries/month/*/*/*.csv")
     }
-    assert per_region
-
-    monkeypatch.setattr(pipeline, "BUNDLE_THRESHOLD", 0)
-    bundled = str(tmp_path / "bundled")
-    results = run(bundled)
-    root = os.path.join(bundled, "dl/rl")
-    assert not glob.glob(f"{root}/tiles/month/*/*.tile")
-    tile_idx = glob.glob(f"{root}/tiles/month/bundle-*.idx.json")
-    assert len(tile_idx) == len(glob.glob(f"{root}/tiles/month/bundle-*.bundle"))
-    assert sum(len(json.load(open(i))) for i in tile_idx) \
-        == results["tiles_month"] > 0
-    assert not glob.glob(f"{root}/regional-timeseries/month/*/*/*.csv")
     keys = set()
     for i in glob.glob(f"{root}/regional-timeseries/month/bundle-*.idx.json"):
         keys.update(json.load(open(i)))
-    assert keys == per_region
-    # qualifier-gated per-region breakdowns still write per-file
+    assert keys == per_region and per_region
     assert glob.glob(f"{root}/regional-timeseries/month/*/level-0/"
                      "qualifiers/qual1/*/*.csv")
 

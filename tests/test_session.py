@@ -23,3 +23,19 @@ def test_driver_young_generation_is_capped(spark):
     flag = f"-XX:MaxNewSize={heap_mb // YOUNG_GEN_HEAP_FRACTION}m"
     runtime = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
     assert flag in list(runtime.getInputArguments())
+
+
+def test_generated_code_is_cached_whatever_its_stage_id(spark):
+    """A pipeline compiled once is reused when a later plan numbers its
+    codegen stage differently: ``a ∪ b`` then ``b ∪ a`` compiles nothing
+    the second time, though ``a`` and ``b`` swap stage ids."""
+    import time
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    n = time.time_ns()  # plans no earlier test compiled
+    a = spark.range(5).selectExpr(f"id * {n} AS x")
+    b = spark.range(5).selectExpr(f"id + {n} AS x")
+    a.union(b).collect()
+    before = metrics.METRIC_SOURCE_CODE_SIZE().getCount()
+    assert sorted(b.union(a).collect()) == sorted(a.union(b).collect())
+    assert metrics.METRIC_SOURCE_CODE_SIZE().getCount() == before
