@@ -23,6 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from slow_tortoise_spark.operators.cachectl import scoped, tracked_cache
 from slow_tortoise_spark.operators.multimodal import extract_image_features
 from slow_tortoise_spark.operators.similarity import (
     lsh_near_duplicates,
@@ -63,18 +64,21 @@ class MediaParams:
     star_passes: int = 2
 
 
+@scoped
 def run_media_pipeline(
     spark: SparkSession, media: DataFrame, params: MediaParams
 ) -> dict[str, Any]:
     """Run the gates over ``media`` (media_id, content, ...); returns
     the stage manifest and writes surviving (media_id, sha, features)
-    plus the kept blobs to ``out_dir``."""
+    plus the kept blobs to ``out_dir``.  The run owns one cachectl
+    scope, so every cache it and its operators made is released on
+    every path, failures included."""
     import numpy as np
 
     manifest: dict[str, Any] = {}
     manifest["input_media"] = media.count()
 
-    feats = extract_image_features(media).cache()  # consumers: both tiers
+    feats = tracked_cache(extract_image_features(media))  # both tiers read it
     kept = feats
     if params.dedup in ("exact", "lsh"):
         keepers = feats.groupBy("sha").agg(
@@ -104,10 +108,6 @@ def run_media_pipeline(
                 # chance to share its family's signature (see
                 # star_passes).  cache(): each pass's drops feed two
                 # anti-joins + the manifest count.
-                from slow_tortoise_spark.operators.cachectl import (
-                    tracked_cache,
-                )
-
                 star_total = 0
                 for p_i in range(max(1, params.star_passes)):
                     pass_planes = planes if p_i == 0 else [
@@ -160,12 +160,4 @@ def run_media_pipeline(
     FileWriter(params.out_dir).write(
         json.dumps(manifest, default=str), "manifest.json"
     )
-    feats.unpersist()
-    # Release caches owned by invoked operators (LSH band stacks etc.) —
-    # everything consumed is already written out above.
-    from slow_tortoise_spark.operators.cachectl import (
-        release_operator_caches,
-    )
-
-    release_operator_caches()
     return manifest

@@ -1,190 +1,266 @@
-"""Operator-owned cache registry (caller-releasable).
+"""One owner for everything a run or an operator caches or checkpoints.
 
-Several operators cache an intermediate frame that their RETURNED (lazy)
-result consumes on multiple subtrees — e.g. a shingle frame feeding both
-sides of a self-join, where AQE never ReuseExchange's across a DataFrame
-self-join, so without the cache the expensive upstream pipeline runs
-once per subtree.  The operator cannot unpersist before returning (the
-cache must still be live when the CALLER evaluates the result — round-5
-ADVICE showed an unpersist-before-evaluation turning a documented
-two-aggregation plan into four), so the lifecycle has to be the
-caller's.
+A :class:`Scope` is a context manager that owns the frames cached or
+checkpointed while it is open.  On exit, on every path (errors and
+early returns included), it releases all of them: caches are
+unpersisted, local checkpoint blocks are freed, parquet checkpoint
+directories are deleted, and so is the checkpoint directory itself when
+the scope created it.  Scopes nest: a pipeline run opens one, each
+datacube resolution opens one inside it, and each iterative graph
+operator opens its own for its per-round frames.
 
-This module makes that contract explicit and cheap to honor:
+Operators route their caches through :func:`tracked_cache` and their
+lineage cuts through :func:`tracked_local_checkpoint`; both register
+into the innermost open scope.  A frame an operator RETURNS must outlive
+the operator's own scope, so the operator hands it on with
+:meth:`Scope.keep`, and the enclosing owner releases it.  With no scope
+open, the owner is a process-wide root registry that is never exited:
+code outside a scope (the bench harness, ``tools/``, catalog queries)
+drops it with :func:`release_operator_caches` and
+:func:`release_local_checkpoints` after the consuming action.
 
-- operators route every such cache through :func:`tracked_cache`;
-- a long-lived driver calls :func:`release_operator_caches` at stage
-  boundaries (after the consuming action — a write, collect, or count)
-  to drop every operator-pinned block at once;
-- short-lived sessions may skip the call: Spark's LRU block eviction
-  bounds the cost, which is the pre-existing behavior, now opt-out
-  instead of unavoidable.
+Why caches outlive the operator at all: several operators cache an
+intermediate that their returned (lazy) result reads on more than one
+subtree, e.g. a shingle frame feeding both sides of a self-join.  An
+unpersist before the caller evaluates the result turns a documented
+two-aggregation plan into four, so the release belongs to the caller.
 
-``corpus_pipeline`` releases at its final write; the oracle/bench
-harnesses release between queries only if memory pressure ever demands
-it (sf0.1 frames are small).  Re-caching an identical logical plan is a
-CacheManager no-op, so double-registration of the same plan just means
-two harmless unpersist calls at release time.
+A checkpoint is stronger than a cache: it truncates lineage, so a
+released checkpoint cannot be recomputed.  Release only what every
+consumer is finished with.
+
+The scope stack is process-global, like the registries it replaced: a
+frame registered from another thread lands in whatever scope is
+innermost.  The datacube's sink threads cache nothing.
 """
 
 from __future__ import annotations
 
+import functools
+import uuid
+
 from pyspark.sql import DataFrame
 
-#: Strong refs to every operator-cached frame not yet released.  A
-#: registry, not a leak: one release_operator_caches() call empties it.
-_TRACKED: list[DataFrame] = []
+
+#: How an owned frame is released: a cache is unpersisted, a local
+#: checkpoint (``None``) has its blocks freed, a parquet one (its path)
+#: has its directory deleted.
+_CACHE = object()
 
 
-def tracked_cache(frame: DataFrame) -> DataFrame:
-    """``frame.cache()`` + registration for bulk release."""
-    out = frame.cache()
-    _TRACKED.append(out)
-    return out
+class Scope:
+    """Owns caches and checkpoints until it exits.
 
+    ``checkpoint_dir`` makes :meth:`checkpoint` write parquet under that
+    directory (any Hadoop-reachable URI: durable across executor loss,
+    one extra scan per boundary).  Without it a scope checkpoints the
+    way its enclosing scope does, and the outermost default is local
+    checkpoint blocks (fastest, lost with their executor)."""
 
-def release_operator_caches() -> int:
-    """Unpersist every tracked operator cache; returns how many frames
-    were released.  Safe to call at any time — results computed from a
-    released cache stay correct (the plan recomputes), only reuse speed
-    is affected — but the intended call site is AFTER the action that
-    consumed the operator results (stage boundary / final write)."""
-    n = 0
-    for f in _TRACKED:
-        try:
-            f.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing left to pin
-    _TRACKED.clear()
-    return n
+    def __init__(self, checkpoint_dir: str | None = None):
+        self._dir = checkpoint_dir or None
+        self._parent: Scope | None = None
+        #: (frame, _CACHE | parquet path | None for local blocks)
+        self._owned: list[tuple[DataFrame, object]] = []
+        #: the session that first wrote under ``_dir``, if this scope
+        #: created that directory (deleted again on exit)
+        self._made_dir_in = None
 
+    def __enter__(self) -> Scope:
+        self._parent = _STACK[-1]
+        _STACK.append(self)
+        return self
 
-def tracked_count() -> int:
-    """How many operator caches are currently registered (test hook)."""
-    return len(_TRACKED)
+    def __exit__(self, *exc) -> None:
+        _STACK.remove(self)
+        self.release()
 
-
-# ---------------------------------------------------------------------------
-# Checkpoints (lineage-truncating, NOT recomputable after release)
-# ---------------------------------------------------------------------------
-
-#: (frame, parquet_path_or_None) for every checkpoint not yet freed.
-_TRACKED_CHECKPOINTS: list[tuple[DataFrame, str | None]] = []
-
-#: "local" (localCheckpoint: executor block store — fast, but LOST on
-#: executor failure, so a long cluster soak restarts from zero) or
-#: "parquet" (write/read through ``_CKPT_DIR``: one extra scan per
-#: boundary, survives any executor loss — the mode to run on a real
-#: cluster where a multi-hour pipeline cannot afford a restart).
-_CKPT_MODE: str = "local"
-_CKPT_DIR: str | None = None
-_CKPT_SEQ: int = 0
-
-
-def set_checkpoint_mode(mode: str, directory: str | None = None) -> tuple[str, str | None]:
-    """Select how :func:`tracked_local_checkpoint` truncates lineage.
-
-    ``mode="local"`` is the default (executor-memory/disk blocks via
-    ``localCheckpoint`` — cheapest, not durable).  ``mode="parquet"``
-    makes every checkpoint a parquet write + read under ``directory``
-    (any Hadoop-reachable URI: HDFS, S3A, local path): durable across
-    executor loss, the documented cluster mode for long soaks.  Returns
-    the previous (mode, directory) so callers can restore it."""
-    global _CKPT_MODE, _CKPT_DIR
-    if mode not in ("local", "parquet"):
-        raise ValueError(f"checkpoint mode must be local|parquet, got {mode!r}")
-    if mode == "parquet" and not directory:
-        raise ValueError("parquet checkpoint mode needs a directory")
-    prev = (_CKPT_MODE, _CKPT_DIR)
-    _CKPT_MODE, _CKPT_DIR = mode, directory
-    return prev
-
-
-def checkpoint_mode() -> tuple[str, str | None]:
-    """Current (mode, directory) — test/diagnostic hook."""
-    return (_CKPT_MODE, _CKPT_DIR)
-
-
-def _delete_path(frame: DataFrame, path: str) -> None:
-    """Recursive delete through the session's Hadoop FS (works for any
-    scheme the cluster can write — local, HDFS, S3A)."""
-    spark = frame.sparkSession
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-
-
-def tracked_local_checkpoint(frame: DataFrame, eager: bool = True) -> DataFrame:
-    """Lineage-truncating checkpoint + registration for explicit release.
-
-    In "local" mode this is ``frame.localCheckpoint(eager)``;
-    ``unpersist()`` on the returned DataFrame has no handle on
-    checkpoint blocks — without this registry they linger until the JVM
-    garbage-collects the internal RDD (the residual ~28 MB a
-    corpus-pipeline run used to leave behind).  In "parquet" mode (see
-    :func:`set_checkpoint_mode`) the frame is written to a fresh
-    directory and read back — always eager, durable across executor
-    loss; release deletes the directory."""
-    global _CKPT_SEQ
-    if _CKPT_MODE == "parquet":
-        path = f"{_CKPT_DIR}/ckpt_{_CKPT_SEQ:05d}"
-        _CKPT_SEQ += 1
-        frame.write.mode("overwrite").parquet(path)
-        out = frame.sparkSession.read.parquet(path)
-        _TRACKED_CHECKPOINTS.append((out, path))
+    def cache(self, frame: DataFrame, eager: bool = False) -> DataFrame:
+        """``frame.cache()``, owned by this scope.  ``eager`` builds the
+        cache now, on the calling thread, with one job: readers that first
+        reach it concurrently would each submit a job to build it.  The
+        build also counts the rows it caches (see :func:`row_count`)."""
+        out = frame.cache()
+        self._owned.append((out, _CACHE))
+        if eager:
+            # the job adaptive execution runs for a cache's first reader
+            _cache_builder(out).cachedColumnBuffers().count()
         return out
-    out = frame.localCheckpoint(eager=eager)
-    _TRACKED_CHECKPOINTS.append((out, None))
-    return out
+
+    def checkpoint(self, frame: DataFrame, eager: bool = True) -> DataFrame:
+        """Truncate ``frame``'s lineage and own the result: local
+        checkpoint blocks, or a parquet write and read (always eager)
+        under the nearest scope's ``checkpoint_dir``."""
+        owner = self
+        while owner is not None and owner._dir is None:
+            owner = owner._parent
+        if owner is None:
+            out = frame.localCheckpoint(eager=eager)
+            self._owned.append((out, None))
+            return out
+        spark = frame.sparkSession
+        if owner._made_dir_in is None:
+            fs, root = _fs(spark, owner._dir)
+            if not fs.exists(root):
+                owner._made_dir_in = spark
+        path = f"{owner._dir}/ckpt_{uuid.uuid4().hex}"
+        frame.write.parquet(path)
+        out = spark.read.parquet(path)
+        self._owned.append((out, path))
+        return out
+
+    def _find(self, frame: DataFrame) -> tuple[Scope | None, int]:
+        """The scope, this one or an enclosing one, that owns ``frame``,
+        and its index there."""
+        owner: Scope | None = self
+        while owner is not None:
+            for i, (f, _) in enumerate(owner._owned):
+                if f is frame:
+                    return owner, i
+            owner = owner._parent
+        return None, -1
+
+    def keep(self, frame: DataFrame) -> DataFrame:
+        """Hand ``frame`` to the enclosing owner, so it outlives this
+        scope: what an operator returns.  Returns ``frame``."""
+        owner, i = self._find(frame)
+        if owner is not self:
+            raise ValueError("keep: frame is not owned by this scope")
+        (self._parent or _ROOT)._owned.append(self._owned.pop(i))
+        return frame
+
+    def free(self, frame: DataFrame) -> bool:
+        """Release ONE frame now, wherever it is owned in this scope or
+        an enclosing one: for iterative operators, round N can go once
+        round N+1 is built and the convergence check has read both, so
+        live storage stays O(1) in rounds.  Returns whether anything was
+        freed."""
+        owner, i = self._find(frame)
+        if owner is None:  # a local checkpoint made outside any scope
+            return _release(frame, None)
+        return _release(*owner._owned.pop(i))
+
+    def release(self, caches: bool = True, checkpoints: bool = True) -> int:
+        """Release everything this scope owns; returns how many frames."""
+        n = 0
+        for i in reversed(range(len(self._owned))):
+            if caches if self._owned[i][1] is _CACHE else checkpoints:
+                n += _release(*self._owned.pop(i))
+        if self._made_dir_in is not None and not self._owned:
+            try:
+                fs, root = _fs(self._made_dir_in, self._dir)
+                fs.delete(root, False)
+                self._made_dir_in = None
+            except Exception:
+                pass  # not empty (a kept checkpoint) or session stopped
+        return n
 
 
-def _free_one(frame: DataFrame, path: str | None) -> bool:
-    if path is not None:
-        try:
-            _delete_path(frame, path)
-            return True
-        except Exception:
-            return False  # session stopped — nothing left to free
+#: The owner of last resort, never exited: frames registered while no
+#: scope is open, and frames kept out of an outermost scope.
+_ROOT = Scope()
+_STACK: list[Scope] = [_ROOT]
+
+
+def _fs(spark, path: str):
+    """(file system, Hadoop path) for ``path`` through the session's
+    Hadoop configuration (any scheme the cluster can write: local, HDFS,
+    S3A)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _cache_builder(frame: DataFrame):
+    return frame.sparkSession._jsparkSession.sharedState().cacheManager() \
+        .lookupCachedData(frame._jdf).get().cachedRepresentation() \
+        .cacheBuilder()
+
+
+def _release(frame: DataFrame, how) -> bool:
     try:
-        frame._jdf.queryExecution().logical().rdd().unpersist(False)
+        if how is _CACHE:
+            frame.unpersist()
+        elif how is None:
+            # unpersist() on the returned frame has no handle on local
+            # checkpoint blocks; without this they linger until the JVM
+            # garbage-collects the internal RDD
+            frame._jdf.queryExecution().logical().rdd().unpersist(False)
+        else:
+            fs, path = _fs(frame.sparkSession, how)
+            fs.delete(path, True)
         return True
     except Exception:
         return False  # non-LogicalRDD plan or stopped session
 
 
-def free_local_checkpoint(frame: DataFrame) -> bool:
-    """Free ONE checkpointed frame's storage immediately (blocks or
-    parquet directory) and deregister it.  For iterative operators:
-    round N's checkpoint can be freed as soon as round N+1 is
-    materialized and the convergence check has consumed both — keeping
-    live checkpoint storage O(1) in rounds instead of O(iterations).
+def tracked_cache(frame: DataFrame, eager: bool = False) -> DataFrame:
+    """``frame.cache()``, owned by the innermost open scope (see
+    :meth:`Scope.cache`)."""
+    return _STACK[-1].cache(frame, eager)
 
-    CONTRACT — stronger than a cache release: a checkpoint truncates
-    lineage, so the frame is NOT recomputable afterwards.  Only free a
-    frame every consumer is finished with."""
-    for i, (f, path) in enumerate(_TRACKED_CHECKPOINTS):
-        if f is frame:
-            del _TRACKED_CHECKPOINTS[i]
-            return _free_one(f, path)
-    return _free_one(frame, None)
+
+def row_count(frame: DataFrame) -> int:
+    """Row count of a persisted frame.  An eagerly built cache counted
+    its rows in a row-count accumulator, so this costs no job; anything
+    else is counted.  Read it right after the build: a cached block that
+    is evicted and rebuilt counts its rows again."""
+    cached = frame.sparkSession._jsparkSession.sharedState() \
+        .cacheManager().lookupCachedData(frame._jdf)
+    if cached.isDefined():
+        return _cache_builder(frame).rowCountStats().value()
+    return frame.count()
+
+
+def tracked_local_checkpoint(frame: DataFrame, eager: bool = True) -> DataFrame:
+    """A lineage-truncating checkpoint owned by the innermost open scope
+    (local blocks, or parquet inside a scope with a checkpoint dir)."""
+    return _STACK[-1].checkpoint(frame, eager)
+
+
+def keep(frame: DataFrame) -> DataFrame:
+    """Hand ``frame`` from the innermost scope to its enclosing owner
+    (see :meth:`Scope.keep`); returns ``frame``."""
+    return _STACK[-1].keep(frame)
+
+
+def free(frame: DataFrame) -> bool:
+    """Release one frame now, wherever it is owned (see
+    :meth:`Scope.free`).  Not recomputable afterwards if it was a
+    checkpoint: only free a frame every consumer is finished with."""
+    return _STACK[-1].free(frame)
+
+
+def scoped(operator):
+    """Run ``operator`` in its own :class:`Scope`: whatever it caches or
+    checkpoints is released when it returns or raises, except the frame
+    it hands on with :func:`keep`."""
+    @functools.wraps(operator)
+    def run(*args, **kwargs):
+        with Scope():
+            return operator(*args, **kwargs)
+    return run
+
+
+def release_operator_caches() -> int:
+    """Unpersist every cache the root registry owns (frames cached with
+    no scope open); returns how many.  Call it after the action that
+    consumed the operator results.  Results computed from a released
+    cache stay correct (the plan recomputes)."""
+    return _ROOT.release(checkpoints=False)
 
 
 def release_local_checkpoints() -> int:
-    """Free every tracked checkpoint's storage; returns how many frames
-    were released.  Same call site as :func:`release_operator_caches`
-    (stage boundary, AFTER the consuming action) but a harder contract:
-    released frames cannot be recomputed — callers must be done with
-    every result derived from them."""
-    n = 0
-    for f, path in list(_TRACKED_CHECKPOINTS):
-        if _free_one(f, path):
-            n += 1
-    _TRACKED_CHECKPOINTS.clear()
-    return n
+    """Free every checkpoint the root registry owns; returns how many.
+    Same call site as :func:`release_operator_caches`, harder contract:
+    released frames cannot be recomputed."""
+    return _ROOT.release(caches=False)
+
+
+def tracked_count() -> int:
+    """Caches the innermost open owner holds (test hook)."""
+    return sum(how is _CACHE for _, how in _STACK[-1]._owned)
 
 
 def tracked_checkpoint_count() -> int:
-    """How many checkpoints are currently registered (test hook)."""
-    return len(_TRACKED_CHECKPOINTS)
+    """Checkpoints the innermost open owner holds (test hook)."""
+    return sum(how is not _CACHE for _, how in _STACK[-1]._owned)

@@ -25,7 +25,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from slow_tortoise_spark.operators.cachectl import (
-    free_local_checkpoint,
+    free,
+    keep,
+    scoped,
     tracked_cache,
     tracked_local_checkpoint,
 )
@@ -1420,10 +1422,10 @@ def _star_components(
         # this round's eager checkpoint and the convergence counts were
         # the last consumers of the previous round — free its blocks
         # now, keeping live checkpoint storage O(1) in rounds
-        free_local_checkpoint(edges)
+        free(edges)
         edges = small
         if changed == 0:
-            return edges.select(
+            return keep(edges).select(
                 F.col("u").alias("doc_id"), F.col("v").alias("component")
             ).unionByName(
                 edges.select("v").distinct().select(
@@ -1436,6 +1438,7 @@ def _star_components(
     )
 
 
+@scoped
 def connected_components(
     pairs: DataFrame,
     id_a: str = "doc_a",
@@ -1473,12 +1476,11 @@ def connected_components(
     if algorithm != "label_prop":
         raise ValueError(f"unknown algorithm {algorithm!r}")
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
+    edges = tracked_cache(
         edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .distinct()
-        .cache()
     )
     labels = tracked_local_checkpoint(
         edges.select(F.col("src").alias("id"))
@@ -1514,12 +1516,11 @@ def connected_components(
         )
         # the eager round checkpoint and the changed-count join were
         # the last consumers of the previous labels — free them now
-        free_local_checkpoint(labels)
+        free(labels)
         labels = new_labels
         if changed == 0:
             converged = True
             break
-    edges.unpersist()
     if not converged:
         # Silently returning a partial closure would hand dedup several
         # "representatives" from one transitive cluster — exactly the
@@ -1531,7 +1532,7 @@ def connected_components(
             f"iterations (graph diameter exceeds the budget); raise "
             f"max_iters"
         )
-    return labels.select(
+    return keep(labels).select(
         F.col("id").alias("doc_id"), F.col("label").alias("component")
     )
 

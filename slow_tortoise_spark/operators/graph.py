@@ -5,7 +5,7 @@ pipelines gate crawl data on a link-graph centrality score (PageRank /
 harmonic centrality over the host graph) long before any text model
 sees a byte.  This module gives that tier the same treatment as the
 rest of the engine: pure DataFrame power iteration, per-round
-checkpoints through the cachectl registry, and a deterministic
+checkpoints in a cachectl scope of its own, and a deterministic
 convention a SQL oracle can replay round by round.
 
 Reference scope note: the reference pipeline (uncharted-causemos/
@@ -19,7 +19,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from slow_tortoise_spark.operators.cachectl import (
-    free_local_checkpoint,
+    free,
+    keep,
+    scoped,
+    tracked_cache,
     tracked_local_checkpoint,
 )
 
@@ -58,6 +61,7 @@ def _edge_weight(weight_col: str):
     ).otherwise(w)
 
 
+@scoped
 def pagerank(
     edges: DataFrame,
     iters: int = 3,
@@ -115,17 +119,17 @@ def pagerank(
     cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
     if weight_col is not None:
         cols.append(_edge_weight(weight_col).alias("_w"))
-    e = edges.select(*cols).cache()
-    deg = e.groupBy("src").agg(
+    e = tracked_cache(edges.select(*cols))
+    deg = tracked_cache(e.groupBy("src").agg(
         (F.count("*") if weight_col is None else F.sum("_w")).alias("_d")
-    ).cache()
+    ))
     # loop-invariant: the edge list with its source's out-degree
     # attached ONCE (previously re-joined every round)
-    ed = e.join(deg, "src").cache()
+    ed = tracked_cache(e.join(deg, "src"))
     # loop-invariant: which nodes are dangling (no out-edges) — carried
     # as a flag so each round's dangling mass is a scan of the
     # materialized rank checkpoint, not an anti-join job
-    nodes = (
+    nodes = tracked_cache(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -134,69 +138,56 @@ def pagerank(
               "node", "left")
         .select("node", F.coalesce(F.col("_dang"), F.lit(True))
                 .alias("_dang"))
-        .cache()
     )
-    ranks = None
-    try:
-        n = nodes.count()
-        if n == 0:
-            return nodes.select("node").withColumn("rank", F.lit(0.0))
+    n = nodes.count()
+    if n == 0:
+        return nodes.select("node").withColumn("rank", F.lit(0.0))
 
-        ranks = tracked_local_checkpoint(
-            nodes.withColumn("rank", F.lit(1.0 / n))
+    ranks = tracked_local_checkpoint(
+        nodes.withColumn("rank", F.lit(1.0 / n))
+    )
+    for i in range(iters):
+        dangling = (
+            ranks.filter(F.col("_dang"))
+            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("s"))
+            .first()["s"]
         )
-        for i in range(iters):
-            dangling = (
-                ranks.filter(F.col("_dang"))
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("s"))
-                .first()["s"]
+        share = (
+            F.col("_r") / F.col("_d") if weight_col is None
+            else F.col("_r") * F.col("_w") / F.col("_d")
+        )
+        contrib = (
+            ed.join(
+                ranks.select(F.col("node").alias("src"),
+                             F.col("rank").alias("_r")),
+                "src",
             )
-            share = (
-                F.col("_r") / F.col("_d") if weight_col is None
-                else F.col("_r") * F.col("_w") / F.col("_d")
+            .groupBy("dst")
+            .agg(F.sum(share).alias("_c"))
+        )
+        new_ranks = tracked_local_checkpoint(
+            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
+            .select(
+                "node",
+                "_dang",
+                (
+                    F.lit((1.0 - damping) / n)
+                    + F.lit(damping)
+                    * (F.coalesce(F.col("_c"), F.lit(0.0))
+                       + F.lit(float(dangling) / n))
+                ).alias("rank"),
             )
-            contrib = (
-                ed.join(
-                    ranks.select(F.col("node").alias("src"),
-                                 F.col("rank").alias("_r")),
-                    "src",
-                )
-                .groupBy("dst")
-                .agg(F.sum(share).alias("_c"))
-            )
-            new_ranks = tracked_local_checkpoint(
-                nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-                .select(
-                    "node",
-                    "_dang",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (F.coalesce(F.col("_c"), F.lit(0.0))
-                           + F.lit(float(dangling) / n))
-                    ).alias("rank"),
-                )
-            )
-            free_local_checkpoint(ranks)
-            ranks = new_ranks
-            if i == 0:
-                # round 1 materialized ``ed`` (``nodes`` already was):
-                # the raw edge list need not stay cached beside it
-                e.unpersist()
-        return ranks.select("node", "rank")
-    except BaseException:
-        if ranks is not None:
-            free_local_checkpoint(ranks)
-        raise
-    finally:
-        # every path, the early return and a failing round included,
-        # releases the four caches
-        e.unpersist()
-        deg.unpersist()
-        ed.unpersist()
-        nodes.unpersist()
+        )
+        free(ranks)
+        ranks = new_ranks
+        if i == 0:
+            # round 1 materialized ``ed`` (``nodes`` already was):
+            # the raw edge list need not stay cached beside it
+            free(e)
+    return keep(ranks).select("node", "rank")
 
 
+@scoped
 def harmonic_centrality(
     edges: DataFrame,
     radius: int = 3,
@@ -230,17 +221,15 @@ def harmonic_centrality(
     — so an engine replaying the identical expression matches bitwise
     (each dᵣ/r is one IEEE division, the fold order is written down).
     """
-    e = (
+    e = tracked_cache(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .cache()
     )
-    nodes = (
+    nodes = tracked_cache(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .cache()
     )
     visited = tracked_local_checkpoint(
         nodes.select(F.col("node").alias("v"), F.col("node").alias("u"))
@@ -268,12 +257,12 @@ def harmonic_centrality(
             visited.unionByName(new_frontier)
         )
         if frontier is not visited:
-            free_local_checkpoint(frontier)
-        free_local_checkpoint(visited)
+            free(frontier)
+        free(visited)
         frontier, visited = new_frontier, new_visited
     if frontier is not visited:
-        free_local_checkpoint(frontier)
-    free_local_checkpoint(visited)
+        free(frontier)
+    free(visited)
     out = nodes
     harmonic = F.lit(0.0)
     for r, cnt in enumerate(counts, start=1):
@@ -282,14 +271,9 @@ def harmonic_centrality(
             F.coalesce(F.col(f"_d{r}"), F.lit(0)).cast("double")
             / F.lit(float(r))
         )
-    result = tracked_local_checkpoint(
+    return keep(tracked_local_checkpoint(
         out.select("node", harmonic.alias("harmonic"))
-    )
-    for cnt in counts:
-        free_local_checkpoint(cnt)
-    e.unpersist()
-    nodes.unpersist()
-    return result
+    ))
 
 
 # HyperBall constants: 16 registers (b=4) keyed by md5 nibble 1; the
@@ -340,6 +324,7 @@ def _hb_estimate(prefix: str = ""):
     ).otherwise(e_raw)
 
 
+@scoped
 def hyperball_harmonic(
     edges: DataFrame,
     radius: int = 3,
@@ -371,47 +356,40 @@ def hyperball_harmonic(
     replaying engines — max() and the fixed-order estimate fold have
     no accumulation-order freedom.
     """
-    out, ests, cleanup = _hyperball_ball_estimates(
-        edges, radius, src_col, dst_col
-    )
+    out = _hyperball_ball_estimates(edges, radius, src_col, dst_col)
     harmonic = F.lit(0.0)
     for r in range(1, radius + 1):
         harmonic = harmonic + (
             F.greatest(F.lit(0.0), F.col(f"_e{r}") - F.col(f"_e{r - 1}"))
             / F.lit(float(r))
         )
-    result = tracked_local_checkpoint(
+    return keep(tracked_local_checkpoint(
         out.select("node", harmonic.alias("harmonic_est"))
-    )
-    cleanup()
-    return result
+    ))
 
 
 def _hyperball_ball_estimates(
     edges: DataFrame, radius: int, src_col: str, dst_col: str
 ):
-    """Shared HyperBall register evolution: returns ``(out, ests,
-    cleanup)`` where ``out`` is the node frame left-joined with the
-    per-round ball estimates ``_e0 … _e{radius}`` (one column per
-    round, the fixed-shape :func:`_hb_estimate` fold over the merged
-    registers after round r), ``ests`` the per-round checkpointed
-    estimate frames, and ``cleanup()`` frees them plus the edge/node
-    caches once the caller has checkpointed its own fold.  Both
+    """Shared HyperBall register evolution: returns the node frame
+    left-joined with the per-round ball estimates ``_e0 … _e{radius}``
+    (one column per round, the fixed-shape :func:`_hb_estimate` fold
+    over the merged registers after round r).  Its caches and per-round
+    estimate checkpoints belong to the calling operator's scope, which
+    frees them once the caller has checkpointed its own fold.  Both
     geometric centralities (:func:`hyperball_harmonic`,
     :func:`hyperball_closeness`) are fixed-order folds over these same
     estimates — the register loop, the expensive part, is written
     once."""
-    e = (
+    e = tracked_cache(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .cache()
     )
-    nodes = (
+    nodes = tracked_cache(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .cache()
     )
     h = F.md5(F.col("node").cast("string"))
     j = _hb_nibble(h, 1)
@@ -447,27 +425,21 @@ def _hyperball_ball_estimates(
                 .groupBy("node")
                 .agg(*[F.max(f"r{k}").alias(f"r{k}") for k in range(_HB_M)])
             )
-            free_local_checkpoint(sketches)
+            free(sketches)
             sketches = merged
         ests.append(tracked_local_checkpoint(
             sketches.select(
                 F.col("node").alias("_v"), _hb_estimate().alias(f"_e{r}")
             )
         ))
-    free_local_checkpoint(sketches)
+    free(sketches)
     out = nodes
-    for r, est in enumerate(ests):
+    for est in ests:
         out = out.join(est, out["node"] == est["_v"], "left").drop("_v")
-
-    def cleanup() -> None:
-        for est in ests:
-            free_local_checkpoint(est)
-        e.unpersist()
-        nodes.unpersist()
-
-    return out, ests, cleanup
+    return out
 
 
+@scoped
 def hyperball_closeness(
     edges: DataFrame,
     radius: int = 3,
@@ -495,9 +467,7 @@ def hyperball_closeness(
     folds have zero accumulation-order freedom, so a replaying engine
     matches bit for bit.
     """
-    out, ests, cleanup = _hyperball_ball_estimates(
-        edges, radius, src_col, dst_col
-    )
+    out = _hyperball_ball_estimates(edges, radius, src_col, dst_col)
     sumdist = F.lit(0.0)
     for r in range(1, radius + 1):
         sumdist = sumdist + F.lit(float(r)) * F.greatest(
@@ -507,13 +477,12 @@ def hyperball_closeness(
         sumdist > F.lit(0.0),
         (F.col(f"_e{radius}") - F.lit(1.0)) / sumdist,
     ).otherwise(F.lit(0.0))
-    result = tracked_local_checkpoint(
+    return keep(tracked_local_checkpoint(
         out.select("node", closeness.alias("closeness_est"))
-    )
-    cleanup()
-    return result
+    ))
 
 
+@scoped
 def label_propagation(
     edges: DataFrame,
     iters: int = 4,
@@ -561,20 +530,19 @@ def label_propagation(
     is the caller's check, same as pagerank's.
     """
     if weight_col is None:
-        adj = _symmetrized_simple(edges, src_col, dst_col).cache()
+        adj = tracked_cache(_symmetrized_simple(edges, src_col, dst_col))
     else:
         pairs = edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
             _edge_weight(weight_col).alias("_w"),
         ).filter(F.col("src") != F.col("dst"))
-        adj = (
+        adj = tracked_cache(
             pairs.unionByName(
                 pairs.select(F.col("dst").alias("src"),
                              F.col("src").alias("dst"), "_w")
             )
             .groupBy("src", "dst")
             .agg(F.sum("_w").alias("_w"))
-            .cache()
         )
     labels = tracked_local_checkpoint(
         adj.select(F.col("src").alias("node")).distinct()
@@ -599,12 +567,12 @@ def label_propagation(
                 .alias("label")
             )
         )
-        free_local_checkpoint(labels)
+        free(labels)
         labels = new_labels
-    adj.unpersist()
-    return labels
+    return keep(labels)
 
 
+@scoped
 def k_core(
     edges: DataFrame,
     k: int = 2,
@@ -644,32 +612,29 @@ def k_core(
         # fits — a localCheckpoint here reports the default (huge)
         # size and silently demoted both anti-joins to full shuffles
         # (measured: 1.6× the round wall at 10M edges).
-        bad = (
+        bad = tracked_cache(
             adj.groupBy("src")
             .agg(F.count(F.lit(1)).alias("_d"))
             .filter(F.col("_d") < k)
             .select(F.col("src").alias("_bad"))
-            .cache()
         )
         n_bad = bad.count()
         if n_bad == 0:
-            bad.unpersist()
             break
         new_adj = tracked_local_checkpoint(
             adj.join(bad, adj["src"] == bad["_bad"], "left_anti")
             .join(bad, adj["dst"] == bad["_bad"], "left_anti")
         )
-        free_local_checkpoint(adj)
-        bad.unpersist()
+        free(adj)
+        free(bad)
         adj = new_adj
-    result = tracked_local_checkpoint(
+    return keep(tracked_local_checkpoint(
         adj.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    free_local_checkpoint(adj)
-    return result
+    ))
 
 
+@scoped
 def core_number(
     edges: DataFrame,
     src_col: str = "src",
@@ -723,7 +688,7 @@ def core_number(
     adj = tracked_local_checkpoint(
         _symmetrized_simple(edges, src_col, dst_col)
     )
-    deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("_d")).cache()
+    deg = tracked_cache(adj.groupBy("src").agg(F.count(F.lit(1)).alias("_d")))
     removed: list[DataFrame] = []
     k = 1
     while True:
@@ -736,7 +701,6 @@ def core_number(
                 F.count(F.lit(1)).alias("c")).collect()
         }
         if not hist:  # adjacency exhausted — every node assigned
-            deg.unpersist()
             break
         m = min(hist)
         if m >= k:  # stable at k: jump to the next removing level
@@ -747,14 +711,14 @@ def core_number(
         if n_bad <= _CORE_BROADCAST_LIMIT:
             bad = F.broadcast(bad)
         else:
-            bad = bad.cache()
+            bad = tracked_cache(bad)
             bad.count()  # real stats under the join decision
         new_adj = tracked_local_checkpoint(
             adj.join(bad, adj["src"] == bad["_bad"], "left_anti")
             .join(bad, adj["dst"] == bad["_bad"], "left_anti")
         )
-        new_deg = (
-            new_adj.groupBy("src").agg(F.count(F.lit(1)).alias("_d")).cache()
+        new_deg = tracked_cache(
+            new_adj.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
         )
         # The step's removal set is a NODE-SET difference, not just
         # ``bad``: a survivor whose every edge left with a removed
@@ -767,22 +731,19 @@ def core_number(
                   "node", "left_anti")
             .select("node", F.lit(k - 1).cast("int").alias("core"))
         ))
-        free_local_checkpoint(adj)
-        deg.unpersist()
-        bad.unpersist()
+        free(adj)
+        free(deg)
+        free(bad)
         adj, deg = new_adj, new_deg
-    free_local_checkpoint(adj)
     if not removed:
         return edges.sparkSession.createDataFrame([], "node string, core int")
     out = removed[0]
     for r in removed[1:]:
         out = out.unionByName(r)
-    result = tracked_local_checkpoint(out)
-    for r in removed:
-        free_local_checkpoint(r)
-    return result
+    return keep(tracked_local_checkpoint(out))
 
 
+@scoped
 def neighborhood_function(
     edges: DataFrame,
     radius: int = 3,
@@ -821,9 +782,7 @@ def neighborhood_function(
     cross-multiplication (10·N(r) ≥ 9·N(R), the gopher pattern) — no
     float comparison anywhere in the output.
     """
-    out, ests, cleanup = _hyperball_ball_estimates(
-        edges, radius, src_col, dst_col
-    )
+    out = _hyperball_ball_estimates(edges, radius, src_col, dst_col)
 
     def _runmax(r: int):
         cols = [F.col(f"_e{k}") for k in range(r + 1)]
@@ -851,11 +810,10 @@ def neighborhood_function(
         ).alias("_s"),
         eff.alias("effective_diameter"),
     ).select("_s.r", "_s.ball_sum_micros", "effective_diameter")
-    result = tracked_local_checkpoint(curve)
-    cleanup()
-    return result
+    return keep(tracked_local_checkpoint(curve))
 
 
+@scoped
 def triangle_counts(
     edges: DataFrame,
     src_col: str = "src",
@@ -888,10 +846,10 @@ def triangle_counts(
     against the oriented edge list, then one explode + partial-agg
     count per corner.  No iteration, no window.
     """
-    adj = _symmetrized_simple(edges, src_col, dst_col).cache()
-    deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("_d")).cache()
+    adj = tracked_cache(_symmetrized_simple(edges, src_col, dst_col))
+    deg = tracked_cache(adj.groupBy("src").agg(F.count(F.lit(1)).alias("_d")))
     # (degree, id) total order; keep each undirected edge once, low→high
-    ranked = (
+    ranked = tracked_cache(
         adj.join(deg.select(F.col("src").alias("src"),
                             F.col("_d").alias("_ds")), "src")
         .join(deg.select(F.col("src").alias("dst"),
@@ -901,7 +859,6 @@ def triangle_counts(
             | ((F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst")))
         )
         .select("src", "dst")
-        .cache()
     )
     paths = (
         ranked.select(F.col("src").alias("_u"), F.col("dst").alias("_v"))
@@ -937,13 +894,10 @@ def triangle_counts(
             ).otherwise(F.lit(0.0)).alias("clustering"),
         )
     )
-    result = tracked_local_checkpoint(out)
-    adj.unpersist()
-    deg.unpersist()
-    ranked.unpersist()
-    return result
+    return keep(tracked_local_checkpoint(out))
 
 
+@scoped
 def transitivity(
     edges: DataFrame,
     src_col: str = "src",
@@ -985,11 +939,10 @@ def transitivity(
             0,
         ).cast("bigint").alias("transitivity_micros"),
     )
-    result = tracked_local_checkpoint(out)
-    free_local_checkpoint(tc)
-    return result
+    return keep(tracked_local_checkpoint(out))
 
 
+@scoped
 def personalized_pagerank(
     edges: DataFrame,
     seeds: list[str],
@@ -1024,15 +977,15 @@ def personalized_pagerank(
     cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
     if weight_col is not None:
         cols.append(_edge_weight(weight_col).alias("_w"))
-    e = edges.select(*cols).cache()
-    deg = e.groupBy("src").agg(
+    e = tracked_cache(edges.select(*cols))
+    deg = tracked_cache(e.groupBy("src").agg(
         (F.count("*") if weight_col is None else F.sum("_w")).alias("_d")
-    ).cache()
+    ))
     # loop-invariant hoists, mirroring :func:`pagerank` (r15): the
     # edge⋈out-degree attach and the dangling-node flag are computed
     # once, not per round
-    ed = e.join(deg, "src").cache()
-    nodes = (
+    ed = tracked_cache(e.join(deg, "src"))
+    nodes = tracked_cache(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .unionByName(
@@ -1046,67 +999,54 @@ def personalized_pagerank(
               "node", "left")
         .select("node", F.coalesce(F.col("_dang"), F.lit(True))
                 .alias("_dang"))
-        .cache()
     )
     is_seed = F.col("node").isin(s)
-    ranks = None
-    try:
-        ranks = tracked_local_checkpoint(
-            nodes.withColumn(
-                "rank",
-                F.when(is_seed, F.lit(1.0 / len(s))).otherwise(F.lit(0.0)),
+    ranks = tracked_local_checkpoint(
+        nodes.withColumn(
+            "rank",
+            F.when(is_seed, F.lit(1.0 / len(s))).otherwise(F.lit(0.0)),
+        )
+    )
+    for i in range(iters):
+        dangling = (
+            ranks.filter(F.col("_dang"))
+            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("s"))
+            .first()["s"]
+        )
+        share = (
+            F.col("_r") / F.col("_d") if weight_col is None
+            else F.col("_r") * F.col("_w") / F.col("_d")
+        )
+        contrib = (
+            ed.join(
+                ranks.select(F.col("node").alias("src"),
+                             F.col("rank").alias("_r")),
+                "src",
+            )
+            .groupBy("dst")
+            .agg(F.sum(share).alias("_c"))
+        )
+        new_ranks = tracked_local_checkpoint(
+            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
+            .select(
+                "node",
+                "_dang",
+                (
+                    F.lit(damping)
+                    * F.coalesce(F.col("_c"), F.lit(0.0))
+                    + F.when(
+                        is_seed,
+                        (F.lit(1.0 - damping)
+                         + F.lit(damping) * F.lit(float(dangling)))
+                        / F.lit(float(len(s))),
+                    ).otherwise(F.lit(0.0))
+                ).alias("rank"),
             )
         )
-        for i in range(iters):
-            dangling = (
-                ranks.filter(F.col("_dang"))
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("s"))
-                .first()["s"]
-            )
-            share = (
-                F.col("_r") / F.col("_d") if weight_col is None
-                else F.col("_r") * F.col("_w") / F.col("_d")
-            )
-            contrib = (
-                ed.join(
-                    ranks.select(F.col("node").alias("src"),
-                                 F.col("rank").alias("_r")),
-                    "src",
-                )
-                .groupBy("dst")
-                .agg(F.sum(share).alias("_c"))
-            )
-            new_ranks = tracked_local_checkpoint(
-                nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-                .select(
-                    "node",
-                    "_dang",
-                    (
-                        F.lit(damping)
-                        * F.coalesce(F.col("_c"), F.lit(0.0))
-                        + F.when(
-                            is_seed,
-                            (F.lit(1.0 - damping)
-                             + F.lit(damping) * F.lit(float(dangling)))
-                            / F.lit(float(len(s))),
-                        ).otherwise(F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-            free_local_checkpoint(ranks)
-            ranks = new_ranks
-            if i == 0:
-                # round 1 materialized ``ed`` (``nodes`` already was):
-                # the raw edge list need not stay cached beside it
-                e.unpersist()
-        return ranks.select("node", "rank")
-    except BaseException:
-        if ranks is not None:
-            free_local_checkpoint(ranks)
-        raise
-    finally:
-        # every path, a failing round included, releases the four caches
-        e.unpersist()
-        deg.unpersist()
-        ed.unpersist()
-        nodes.unpersist()
+        free(ranks)
+        ranks = new_ranks
+        if i == 0:
+            # round 1 materialized ``ed`` (``nodes`` already was):
+            # the raw edge list need not stay cached beside it
+            free(e)
+    return keep(ranks).select("node", "rank")

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from slow_tortoise_spark.operators.cachectl import scoped, tracked_cache
+
 #: Tiny per-language stopword sets for the n-gram/stopword-ratio language
 #: heuristic. Deliberately small and deterministic (no model dependency).
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -250,8 +252,6 @@ def unigram_logprob(
     ``round_to`` rounds the mean (engine-portable float parity for
     oracles); None keeps full precision.
     """
-    from slow_tortoise_spark.operators.cachectl import tracked_cache
-
     # tracked_cache: the token stream feeds the vocab aggregate (paid
     # immediately by the total-count collect below), the scoring join's
     # stream side, AND the vocab's re-derivation inside that join —
@@ -516,8 +516,6 @@ def bigram_logprob(
     fewer than 2 tokens surface with n_bigrams=0 and mean 0.0 (row
     parity with the LEFT join, per the repetition_ratio lesson).
     """
-    from slow_tortoise_spark.operators.cachectl import tracked_cache
-
     # Materialize the token array in its own projection FIRST: a
     # higher-order-function lambda is interpreted, so an expression
     # captured from outside (here the split+filter tokenizer) re-runs
@@ -655,8 +653,6 @@ def unigram_logprob_under(
     it (AQE broadcasts a fitting vocab), one per-doc average.  Docs with
     zero tokens keep row parity with zeros.
     """
-    from slow_tortoise_spark.operators.cachectl import tracked_cache
-
     ref_toks = fan_out(reference.select(text_col)).select(
         F.explode(tokens_col(F.lower(F.col(text_col)))).alias("tok")
     )
@@ -829,6 +825,7 @@ def _bpe_top_pair(words: DataFrame):
     )
 
 
+@scoped
 def bpe_train(
     df: DataFrame, num_merges: int = 8, text_col: str = "text"
 ) -> DataFrame:
@@ -845,10 +842,8 @@ def bpe_train(
     shallow.
     """
     spark = df.sparkSession
-    words = bpe_word_freq(df, text_col).cache()
+    cur = tracked_cache(bpe_word_freq(df, text_col))
     merges = []
-    cached = [words]
-    cur = words
     for rank in range(1, num_merges + 1):
         top = _bpe_top_pair(cur)
         if top is None or top["cnt"] is None:
@@ -867,14 +862,10 @@ def bpe_train(
         # the vocab; caching every 8th keeps recompute O(8) replaces
         # instead of O(k) while bounding pinned copies.
         if rank % 8 == 0 and rank < num_merges:
-            cur = cur.cache()
-            cached.append(cur)
-    out = spark.createDataFrame(
+            cur = tracked_cache(cur)
+    return spark.createDataFrame(
         merges, "rank bigint, lhs string, rhs string, cnt bigint"
     )
-    for frame in cached:
-        frame.unpersist()
-    return out
 
 
 def bpe_segmented_vocab(
@@ -1520,8 +1511,6 @@ def kn_bigram_logprob_under(
     # aggregate feeds four consumers (ctx, cont, two scalar counts, and
     # the target join) — uncached, every one would re-tokenize the
     # corpus.  The cache is bigram-type + vocab sized, not corpus sized.
-    from slow_tortoise_spark.operators.cachectl import tracked_cache
-
     t_ref = F.col("_t")  # materialized below — see bigrams_of
     bi = F.when(
         F.size(t_ref) >= 2,

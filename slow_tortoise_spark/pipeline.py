@@ -1,6 +1,7 @@
 """Batch pipeline orchestrator — the reference's Prefect DAG collapsed
 into one plain Python driver function (SURVEY.md §3: the whole Prefect
-layer is replaced by Catalyst planning + explicit cache()/unpersist()).
+layer is replaced by Catalyst planning + explicit caches that a cachectl
+scope releases).
 
 Dataflow spine (matches /root/reference/flows/data_pipeline.py:977-1137):
 
@@ -21,11 +22,15 @@ extrema collects) that stay on the driver thread.  The all-time summary
 (temporal_aggregation("all") → output summary) is queued on the same
 pool before any sink, so it overlaps the whole run instead of running
 after the last sink; each resolution queues its tile branch first, so
-its longest sink starts earliest.  A resolution's cached frames are
-released once its queued sinks have drained.  On every path, errors
-included, the run cancels or waits for its queued sinks and releases
-every frame it cached.  At 100 TB replace cache() with a checkpoint to
-fast storage if executor memory can't hold the working set.
+its longest sink starts earliest.
+
+The run's frames belong to a cachectl scope, and each resolution's to a
+scope nested in it that exits once the resolution's sinks have settled.
+On every path, errors included, queued sinks are cancelled or waited
+for before a scope releases the frames they read.  When the working set
+outgrows executor memory (the 100 TB shape), ``checkpoint_dir`` makes
+the same frames parquet checkpoints under that directory, deleted when
+their scope exits.
 
 Sink layout: the tile and per-region timeseries families are written
 one object per artifact (the reference layout) up to ``BUNDLE_THRESHOLD``
@@ -37,6 +42,7 @@ costs no job.
 from __future__ import annotations
 
 from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -44,6 +50,12 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
+from slow_tortoise_spark.operators.cachectl import (
+    Scope,
+    row_count,
+    tracked_cache,
+    tracked_local_checkpoint,
+)
 from slow_tortoise_spark.operators.extrema import regional_extrema
 from slow_tortoise_spark.operators.pivot import qualifier_timeseries_pivot
 from slow_tortoise_spark.operators.regional import (
@@ -118,24 +130,21 @@ class PipelineParams:
     # reference save_tile(debug=True): human-readable .txt tiles.
     tile_debug: bool = False
     # When set, the reused intermediates (validated cube, per-resolution
-    # temporal aggregates, regional rollup) are CHECKPOINTED to this
-    # directory instead of cache()d: lineage truncates and the working
-    # set lives on (fast) storage rather than executor memory — the
-    # 100 TB knob SCALE.md describes for when the cube outgrows the
-    # cluster's cache capacity. Empty string → plain cache().
+    # temporal aggregates, regional rollup) are CHECKPOINTED as parquet
+    # under this directory instead of cache()d: lineage truncates and
+    # the working set lives on (fast) storage rather than executor
+    # memory — the 100 TB knob SCALE.md describes for when the cube
+    # outgrows the cluster's cache capacity. The checkpoints are deleted
+    # as their scope exits. Empty string → plain cache().
     checkpoint_dir: str = ""
     extra_writer_args: dict = field(default_factory=dict)
 
 
-class _RunScope:
-    """One pipeline run's driver-side resources: the thread pool its
-    artifact sinks run on and the frames it cached.  ``close`` runs on
-    every path, errors included: it cancels queued sinks, waits for
-    running ones and unpersists every frame still cached."""
+class _SinkPool:
+    """The thread pool one pipeline run's artifact sinks run on."""
 
-    def __init__(self, spark: SparkSession, checkpoint_dir: str):
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.checkpoint_dir = checkpoint_dir
         # Sink jobs are small (per-job overhead, not data, bounds them),
         # and Spark's FIFO scheduler runs jobs from several threads at
         # once while none of them fills the cores: one sink per core.
@@ -143,7 +152,6 @@ class _RunScope:
             max_workers=spark.sparkContext.defaultParallelism
         )
         self.pending: list[Future] = []
-        self.cached: list = []
 
     def sink(self, fn, *args, **kwargs) -> Future:
         """Queue ``fn(*args, **kwargs)`` on the pool.  The target is
@@ -157,57 +165,31 @@ class _RunScope:
 
     def drain(self) -> None:
         """Wait for every queued sink; raise the first failure in queue
-        order (``close`` then cancels the rest)."""
+        order."""
         while self.pending:
             self.pending.pop(0).result()
 
-    def persist(self, frame):
-        """Cache ``frame`` and build the cache now, on the calling thread,
-        or checkpoint it eagerly when the run has a checkpoint dir
-        (checkpointed frames need no unpersist: nothing is pinned in
-        executor memory).  Built here, a cache costs one job: sinks that
-        first read it concurrently would each submit a job to build it.
-        The build job also counts the rows it caches; ``rows`` reads
-        that count."""
-        if self.checkpoint_dir:
-            return frame.checkpoint(eager=True)
-        self.cached.append(frame.cache())
-        # the job adaptive execution runs for a cache's first reader
-        self._cache_builder(frame).cachedColumnBuffers().count()
-        return frame
-
-    def rows(self, frame) -> int:
-        """The row count of a frame ``persist`` returned.  A cache's
-        builder summed it in a row-count accumulator while its build job
-        ran, so reading it costs no job; a checkpoint is counted from its
-        files.  Read it right after ``persist``: a cached block that is
-        evicted and rebuilt later counts its rows again."""
-        if self.checkpoint_dir:
-            return frame.count()
-        return self._cache_builder(frame).rowCountStats().value()
-
-    def _cache_builder(self, frame):
-        return self.spark._jsparkSession.sharedState().cacheManager() \
-            .lookupCachedData(frame._jdf).get().cachedRepresentation() \
-            .cacheBuilder()
-
-    def release_since(self, mark: int) -> None:
-        """Unpersist the frames cached after the first ``mark``."""
-        while len(self.cached) > mark:
-            self.cached.pop().unpersist()
-
-    def close(self) -> None:
-        self.pool.shutdown(wait=True, cancel_futures=True)
-        self.release_since(0)
+    @contextmanager
+    def settled(self):
+        """A stretch of the run whose sinks must settle before the frames
+        they read are released: on success drain, on any failure cancel
+        the queued sinks and wait for the running ones."""
+        try:
+            yield
+            self.drain()
+        except BaseException:
+            self.pool.shutdown(wait=True, cancel_futures=True)
+            raise
 
 
 def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
     """Execute the full artifact pipeline; returns the run summary dict."""
-    run = _RunScope(spark, params.checkpoint_dir)
+    run = _SinkPool(spark)
     try:
-        return _run_pipeline(spark, params, run)
+        with Scope(params.checkpoint_dir), run.settled():
+            return _run_pipeline(spark, params, run)
     finally:
-        run.close()
+        run.pool.shutdown()
 
 
 def _by_feature(rows: list) -> list:
@@ -225,7 +207,7 @@ def _all_time_summary(df, weight_column: str) -> list[dict[str, Any]]:
 
 
 def _run_pipeline(
-    spark: SparkSession, params: PipelineParams, run: _RunScope
+    spark: SparkSession, params: PipelineParams, run: _SinkPool
 ) -> dict[str, Any]:
     writer = WRITE_TYPES[params.dest_type](
         params.dest_root, **params.extra_writer_args
@@ -249,14 +231,18 @@ def _run_pipeline(
     def task_on(name: str) -> bool:
         return name in selected
 
-    if params.checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(params.checkpoint_dir)
+    def persist(frame):
+        """Build ``frame`` now, in the innermost scope, as a cache or
+        (with a checkpoint dir) a parquet checkpoint."""
+        if params.checkpoint_dir:
+            return tracked_local_checkpoint(frame)
+        return tracked_cache(frame, eager=True)
 
     raw = read_datacube(spark, params.data_paths)
     df, stats = validate_and_fix(
         raw, weight_column=params.weight_column, fill_timestamp=params.fill_timestamp
     )
-    df = run.persist(df)
+    df = persist(df)
 
     all_qualifiers = [
         c
@@ -349,8 +335,8 @@ def _run_pipeline(
         all_regions = parts[0]
         for p in parts[1:]:
             all_regions = all_regions.unionByName(p)
-        all_regions = run.persist(all_regions)
-        n_regions = run.rows(all_regions)
+        all_regions = persist(all_regions)
+        n_regions = row_count(all_regions)
 
         def region_payload(pdf):
             lists = {r: [] for r in REGION_LEVELS}
@@ -398,254 +384,252 @@ def _run_pipeline(
     agg_cols = ["s_sum_t_sum", "s_mean_t_sum", "s_sum_t_mean", "s_mean_t_mean"]
 
     for time_res in params.time_resolutions:
-        mark = len(run.cached)
         n_tiles: Future | None = None
-        t = run.persist(temporal_aggregation(df, time_res, weight_column=weight))
+        # the resolution's frames go once its sinks have settled
+        with Scope(), run.settled():
+            t = persist(temporal_aggregation(df, time_res, weight_column=weight))
 
-        # Tiling family (G5–G8) — only when coordinates exist.  Queued
-        # first: the tile sink is the resolution's longest.
-        if (task_on("compute_tiles") and params.compute_tiles
-                and "lat" in df.columns and "lng" in df.columns):
-            sub = run.persist(subtile_aggregation(t))
-            # max-precision subtile rows upper-bound the finest level's
-            # tile count — the dominant share of the tile tree (each
-            # coarser zoom has ~1/4 as many)
-            n_subtiles = run.rows(sub)
-            if n_subtiles > 0:
-                tiles = tiles_all_levels(sub)
-                ext = ".txt" if params.tile_debug else ".tile"
-                if n_subtiles > BUNDLE_THRESHOLD:
-                    n_tiles = run.sink(
-                        write_tile_bundles,
-                        tiles,
-                        bundle_path_fn=lambda pid, tr=time_res: (
-                            f"{prefix}/tiles/{tr}/bundle-{pid:05d}"
+            # Tiling family (G5–G8) — only when coordinates exist.  Queued
+            # first: the tile sink is the resolution's longest.
+            if (task_on("compute_tiles") and params.compute_tiles
+                    and "lat" in df.columns and "lng" in df.columns):
+                sub = persist(subtile_aggregation(t))
+                # max-precision subtile rows upper-bound the finest level's
+                # tile count — the dominant share of the tile tree (each
+                # coarser zoom has ~1/4 as many)
+                n_subtiles = row_count(sub)
+                if n_subtiles > 0:
+                    tiles = tiles_all_levels(sub)
+                    ext = ".txt" if params.tile_debug else ".tile"
+                    if n_subtiles > BUNDLE_THRESHOLD:
+                        n_tiles = run.sink(
+                            write_tile_bundles,
+                            tiles,
+                            bundle_path_fn=lambda pid, tr=time_res: (
+                                f"{prefix}/tiles/{tr}/bundle-{pid:05d}"
+                            ),
+                            writer=writer,
+                        )
+                    else:
+                        n_tiles = run.sink(
+                            write_tiles,
+                            tiles,
+                            path_fn=lambda r, tr=time_res, ex=ext: (
+                                f"{prefix}/tiles/{tr}/{r['feature']}/"
+                                f"{r['timestamp']}-{r['tile']['z']}-{r['tile']['x']}-"
+                                f"{r['tile']['y']}{ex}"
+                            ),
+                            writer=writer,
+                            debug=params.tile_debug,
+                        )
+                    # the key takes its place in results.json now; the count
+                    # replaces the future once the resolution's sinks drain
+                    results[f"tiles_{time_res}"] = n_tiles
+                    gs = grid_stats(sub)
+                    run.sink(
+                        write_grouped_csv,
+                        gs,
+                        group_cols=["feature", "timestamp"],
+                        path_fn=lambda k, tr=time_res: (
+                            f"{prefix}/stats/{tr}/{k['feature']}/{k['timestamp']}.csv"
                         ),
                         writer=writer,
+                        sort_cols=["zoom"],
                     )
-                else:
-                    n_tiles = run.sink(
-                        write_tiles,
-                        tiles,
-                        path_fn=lambda r, tr=time_res, ex=ext: (
-                            f"{prefix}/tiles/{tr}/{r['feature']}/"
-                            f"{r['timestamp']}-{r['tile']['z']}-{r['tile']['x']}-"
-                            f"{r['tile']['y']}{ex}"
-                        ),
-                        writer=writer,
-                        debug=params.tile_debug,
-                    )
-                # the key takes its place in results.json now; the count
-                # replaces the future once the resolution's sinks drain
-                results[f"tiles_{time_res}"] = n_tiles
-                gs = grid_stats(sub)
+
+            # Global timeseries CSV per feature.
+            if task_on("compute_global_timeseries"):
+                ts = global_timeseries(t, weight_column=weight)
                 run.sink(
                     write_grouped_csv,
-                    gs,
-                    group_cols=["feature", "timestamp"],
-                    path_fn=lambda k, tr=time_res: (
-                        f"{prefix}/stats/{tr}/{k['feature']}/{k['timestamp']}.csv"
-                    ),
+                    ts,
+                    group_cols=["feature"],
+                    path_fn=lambda k, tr=time_res: f"{prefix}/timeseries/{tr}/{k['feature']}/global.csv",
                     writer=writer,
-                    sort_cols=["zoom"],
+                    sort_cols=["timestamp"],
                 )
 
-        # Global timeseries CSV per feature.
-        if task_on("compute_global_timeseries"):
-            ts = global_timeseries(t, weight_column=weight)
-            run.sink(
-                write_grouped_csv,
-                ts,
-                group_cols=["feature"],
-                path_fn=lambda k, tr=time_res: f"{prefix}/timeseries/{tr}/{k['feature']}/global.csv",
-                writer=writer,
-                sort_cols=["timestamp"],
+            # Regional families share the cached all-levels rollup.
+            need_regional = region_cols and (
+                task_on("compute_regional_aggregation")
+                or task_on("compute_regional_timeseries")
+                or task_on("compute_regional_stats")
             )
-
-        # Regional families share the cached all-levels rollup.
-        need_regional = region_cols and (
-            task_on("compute_regional_aggregation")
-            or task_on("compute_regional_timeseries")
-            or task_on("compute_regional_stats")
-        )
-        if need_regional:
-            regional = run.persist(regional_aggregation_all_levels(
-                t, weight_column=weight
-            ))
-        if need_regional and task_on("compute_regional_aggregation"):
-            # one CSV per (feature, level, timestamp)
-            run.sink(
-                write_grouped_csv,
-                regional.withColumnRenamed("region_id", "id"),
-                group_cols=["feature", "level", "timestamp"],
-                path_fn=lambda k, tr=time_res: (
-                    f"{prefix}/regional/{tr}/{k['feature']}/level-{k['level']}/"
-                    f"{k['timestamp']}.csv"
-                ),
-                writer=writer,
-                sort_cols=["id"],
-            )
-            # R1 per-qualifier breakdowns: one CSV per (feature, level,
-            # timestamp, qualifier column) with columns (id, qualifier,
-            # aggs) — reference data_pipeline.py:554-586 loops levels ×
-            # qualifiers as separate Dask aggregations; here each
-            # qualifier is one extra single-shuffle ROLLUP.
-            for q in qualifiers:
-                feats = _active_features(q)
-                if not feats:
-                    continue
-                # Null-qualifier rows are excluded from the breakout —
-                # the reference's pandas groupby(dropna=True) semantics.
-                # Post-validate this is a no-op (P4 fills nulls with the
-                # string "None"), but the rollup's grouping_id would
-                # otherwise keep real-NULL groups for unvalidated input.
-                rolled_q = regional_aggregation_all_levels(
-                    t.filter(F.col("feature").isin(feats)
-                             & F.col(q).isNotNull()),
-                    weight_column=weight,
-                    qualifier=q,
-                )
+            if need_regional:
+                regional = persist(regional_aggregation_all_levels(
+                    t, weight_column=weight
+                ))
+            if need_regional and task_on("compute_regional_aggregation"):
+                # one CSV per (feature, level, timestamp)
                 run.sink(
                     write_grouped_csv,
-                    rolled_q.withColumnRenamed("region_id", "id")
-                    .withColumnRenamed(q, "qualifier"),
+                    regional.withColumnRenamed("region_id", "id"),
                     group_cols=["feature", "level", "timestamp"],
-                    path_fn=lambda k, tr=time_res, qq=q: (
-                        f"{prefix}/regional/{tr}/{k['feature']}/"
-                        f"level-{k['level']}/qualifiers/{qq}/"
+                    path_fn=lambda k, tr=time_res: (
+                        f"{prefix}/regional/{tr}/{k['feature']}/level-{k['level']}/"
                         f"{k['timestamp']}.csv"
                     ),
                     writer=writer,
-                    sort_cols=["id", "qualifier"],
+                    sort_cols=["id"],
                 )
-        if need_regional and task_on("compute_regional_timeseries"):
-            # R2: per-region timeseries — one CSV per (feature, level,
-            # region), rows over timestamps; qualifier breakdowns only for
-            # levels ≤ regional_timeseries_max_level and qualifiers whose
-            # cardinality fits regional_timeseries_count.
-            if n_regions > BUNDLE_THRESHOLD:
-                run.sink(
-                    write_grouped_csv_bundles,
-                    regional.withColumnRenamed("region_id", "id"),
-                    group_cols=["feature", "level", "id"],
-                    key_fn=lambda k, tr=time_res: (
-                        f"{prefix}/regional-timeseries/{tr}/{k['feature']}/"
-                        f"level-{k['level']}/{k['id']}.csv"
-                    ),
-                    bundle_path_fn=lambda pid, tr=time_res: (
-                        f"{prefix}/regional-timeseries/{tr}/bundle-{pid:05d}"
-                    ),
-                    writer=writer,
-                    sort_cols=["timestamp"],
+                # R1 per-qualifier breakdowns: one CSV per (feature, level,
+                # timestamp, qualifier column) with columns (id, qualifier,
+                # aggs) — reference data_pipeline.py:554-586 loops levels ×
+                # qualifiers as separate Dask aggregations; here each
+                # qualifier is one extra single-shuffle ROLLUP.
+                for q in qualifiers:
+                    feats = _active_features(q)
+                    if not feats:
+                        continue
+                    # Null-qualifier rows are excluded from the breakout —
+                    # the reference's pandas groupby(dropna=True) semantics.
+                    # Post-validate this is a no-op (P4 fills nulls with the
+                    # string "None"), but the rollup's grouping_id would
+                    # otherwise keep real-NULL groups for unvalidated input.
+                    rolled_q = regional_aggregation_all_levels(
+                        t.filter(F.col("feature").isin(feats)
+                                 & F.col(q).isNotNull()),
+                        weight_column=weight,
+                        qualifier=q,
+                    )
+                    run.sink(
+                        write_grouped_csv,
+                        rolled_q.withColumnRenamed("region_id", "id")
+                        .withColumnRenamed(q, "qualifier"),
+                        group_cols=["feature", "level", "timestamp"],
+                        path_fn=lambda k, tr=time_res, qq=q: (
+                            f"{prefix}/regional/{tr}/{k['feature']}/"
+                            f"level-{k['level']}/qualifiers/{qq}/"
+                            f"{k['timestamp']}.csv"
+                        ),
+                        writer=writer,
+                        sort_cols=["id", "qualifier"],
+                    )
+            if need_regional and task_on("compute_regional_timeseries"):
+                # R2: per-region timeseries — one CSV per (feature, level,
+                # region), rows over timestamps; qualifier breakdowns only for
+                # levels ≤ regional_timeseries_max_level and qualifiers whose
+                # cardinality fits regional_timeseries_count.
+                if n_regions > BUNDLE_THRESHOLD:
+                    run.sink(
+                        write_grouped_csv_bundles,
+                        regional.withColumnRenamed("region_id", "id"),
+                        group_cols=["feature", "level", "id"],
+                        key_fn=lambda k, tr=time_res: (
+                            f"{prefix}/regional-timeseries/{tr}/{k['feature']}/"
+                            f"level-{k['level']}/{k['id']}.csv"
+                        ),
+                        bundle_path_fn=lambda pid, tr=time_res: (
+                            f"{prefix}/regional-timeseries/{tr}/bundle-{pid:05d}"
+                        ),
+                        writer=writer,
+                        sort_cols=["timestamp"],
+                    )
+                else:
+                    run.sink(
+                        write_grouped_csv,
+                        regional.withColumnRenamed("region_id", "id"),
+                        group_cols=["feature", "level", "id"],
+                        path_fn=lambda k, tr=time_res: (
+                            f"{prefix}/regional-timeseries/{tr}/{k['feature']}/"
+                            f"level-{k['level']}/{k['id']}.csv"
+                        ),
+                        writer=writer,
+                        sort_cols=["timestamp"],
+                    )
+                ts_max_level = min(
+                    params.regional_timeseries_max_level, len(region_cols) - 1
                 )
-            else:
-                run.sink(
-                    write_grouped_csv,
-                    regional.withColumnRenamed("region_id", "id"),
-                    group_cols=["feature", "level", "id"],
-                    path_fn=lambda k, tr=time_res: (
-                        f"{prefix}/regional-timeseries/{tr}/{k['feature']}/"
-                        f"level-{k['level']}/{k['id']}.csv"
-                    ),
-                    writer=writer,
-                    sort_cols=["timestamp"],
+                for q in qualifiers:
+                    ts_feats = _active_features(
+                        q, extra_cap=params.regional_timeseries_count
+                    )
+                    if not ts_feats:
+                        continue
+                    # one qualifier ROLLUP covers every gated level in a
+                    # single shuffle (the reference loops levels × qualifiers
+                    # as separate aggregations)
+                    rq = regional_aggregation_all_levels(
+                        t.filter(F.col("feature").isin(ts_feats)
+                                 & F.col(q).isNotNull()),  # dropna parity, see above
+                        weight_column=weight,
+                        qualifier=q,
+                        max_level=ts_max_level,
+                    )
+                    run.sink(
+                        write_grouped_csv,
+                        rq.withColumnRenamed("region_id", "id"),
+                        group_cols=["feature", "level", "id", q],
+                        path_fn=lambda k, tr=time_res, qq=q: (
+                            f"{prefix}/regional-timeseries/{tr}/{k['feature']}/"
+                            f"level-{k['level']}/qualifiers/{qq}/{k[qq]}/"
+                            f"{k['id']}.csv"
+                        ),
+                        writer=writer,
+                        sort_cols=["timestamp"],
+                    )
+
+            if need_regional and task_on("compute_regional_stats"):
+                # Extrema per admin level (R3) — the reference emits one stats
+                # artifact per (feature, region level), not one across levels
+                # (flows/common.py:500-541); level-0 totals would otherwise
+                # dominate every max.
+                extrema = regional_extrema(
+                    regional,
+                    [c for c in agg_cols if c in regional.columns],
+                    keys=["feature", "level"],
                 )
-            ts_max_level = min(
-                params.regional_timeseries_max_level, len(region_cols) - 1
-            )
-            for q in qualifiers:
-                ts_feats = _active_features(
-                    q, extra_cap=params.regional_timeseries_count
-                )
-                if not ts_feats:
+                # ≤ 20 ties × 2 kinds × 4 cols × features × levels — safe to
+                # collect.
+                ex = extrema.collect()
+                by_feat_level: dict[tuple, dict] = {}
+                for r in ex:
+                    node = by_feat_level.setdefault(
+                        (r["feature"], r["level"]), {"min": {}, "max": {}}
+                    )
+                    node[r["kind"]].setdefault(r["agg_col"], []).append(
+                        {"region_id": r["region_id"], "timestamp": r["timestamp"],
+                         "value": r["value"]}
+                    )
+                for (feat, level), node in by_feat_level.items():
+                    write_json(
+                        node,
+                        f"{prefix}/extrema/{time_res}/{feat}/level-{level}.json",
+                        writer,
+                    )
+
+            # Qualifier timeseries pivots (V1), one CSV per (feature, agg col).
+            # Derived from the cached full temporal aggregate so the s_* stats
+            # aggregate over the fine (all-column) temporal groups — the
+            # reference's semantics — and no extra scan of the raw cube runs.
+            # Family-gated with the global timeseries (the reference emits its
+            # qualifier timeseries from compute_global_timeseries).
+            for q in (qualifiers if task_on("compute_global_timeseries") else []):
+                feats = _active_features(q)
+                if not feats:
                     continue
-                # one qualifier ROLLUP covers every gated level in a
-                # single shuffle (the reference loops levels × qualifiers
-                # as separate aggregations)
-                rq = regional_aggregation_all_levels(
-                    t.filter(F.col("feature").isin(ts_feats)
-                             & F.col(q).isNotNull()),  # dropna parity, see above
+                # cached: the per-agg-column pivot loop below would otherwise
+                # recompute this spatial aggregation once per column
+                sq = persist(spatial_aggregation(
+                    t.filter(F.col("feature").isin(feats)),
+                    keys=["feature", "timestamp", q], aggs=["sum", "mean"],
                     weight_column=weight,
-                    qualifier=q,
-                    max_level=ts_max_level,
-                )
-                run.sink(
-                    write_grouped_csv,
-                    rq.withColumnRenamed("region_id", "id"),
-                    group_cols=["feature", "level", "id", q],
-                    path_fn=lambda k, tr=time_res, qq=q: (
-                        f"{prefix}/regional-timeseries/{tr}/{k['feature']}/"
-                        f"level-{k['level']}/qualifiers/{qq}/{k[qq]}/"
-                        f"{k['id']}.csv"
-                    ),
-                    writer=writer,
-                    sort_cols=["timestamp"],
-                )
-
-        if need_regional and task_on("compute_regional_stats"):
-            # Extrema per admin level (R3) — the reference emits one stats
-            # artifact per (feature, region level), not one across levels
-            # (flows/common.py:500-541); level-0 totals would otherwise
-            # dominate every max.
-            extrema = regional_extrema(
-                regional,
-                [c for c in agg_cols if c in regional.columns],
-                keys=["feature", "level"],
-            )
-            # ≤ 20 ties × 2 kinds × 4 cols × features × levels — safe to
-            # collect.
-            ex = extrema.collect()
-            by_feat_level: dict[tuple, dict] = {}
-            for r in ex:
-                node = by_feat_level.setdefault(
-                    (r["feature"], r["level"]), {"min": {}, "max": {}}
-                )
-                node[r["kind"]].setdefault(r["agg_col"], []).append(
-                    {"region_id": r["region_id"], "timestamp": r["timestamp"],
-                     "value": r["value"]}
-                )
-            for (feat, level), node in by_feat_level.items():
-                write_json(
-                    node,
-                    f"{prefix}/extrema/{time_res}/{feat}/level-{level}.json",
-                    writer,
-                )
-
-        # Qualifier timeseries pivots (V1), one CSV per (feature, agg col).
-        # Derived from the cached full temporal aggregate so the s_* stats
-        # aggregate over the fine (all-column) temporal groups — the
-        # reference's semantics — and no extra scan of the raw cube runs.
-        # Family-gated with the global timeseries (the reference emits its
-        # qualifier timeseries from compute_global_timeseries).
-        for q in (qualifiers if task_on("compute_global_timeseries") else []):
-            feats = _active_features(q)
-            if not feats:
-                continue
-            # cached: the per-agg-column pivot loop below would otherwise
-            # recompute this spatial aggregation once per column
-            sq = run.persist(spatial_aggregation(
-                t.filter(F.col("feature").isin(feats)),
-                keys=["feature", "timestamp", q], aggs=["sum", "mean"],
-                weight_column=weight,
-            ))
-            for agg_col in [c for c in sq.columns
-                            if c.startswith("s_") and c != "s_count"] + ["s_count"]:
-                wide = qualifier_timeseries_pivot(sq, q, agg_col)
-                run.sink(
-                    write_grouped_csv,
-                    wide,
-                    group_cols=["feature"],
-                    path_fn=lambda k, tr=time_res, qq=q, ac=agg_col: (
-                        f"{prefix}/qualifiers/{tr}/{k['feature']}/{qq}/{ac}.csv"
-                    ),
-                    writer=writer,
-                    sort_cols=["timestamp"],
-                )
-
-        run.drain()
+                ))
+                for agg_col in [c for c in sq.columns
+                                if c.startswith("s_") and c != "s_count"] + ["s_count"]:
+                    wide = qualifier_timeseries_pivot(sq, q, agg_col)
+                    run.sink(
+                        write_grouped_csv,
+                        wide,
+                        group_cols=["feature"],
+                        path_fn=lambda k, tr=time_res, qq=q, ac=agg_col: (
+                            f"{prefix}/qualifiers/{tr}/{k['feature']}/{qq}/{ac}.csv"
+                        ),
+                        writer=writer,
+                        sort_cols=["timestamp"],
+                    )
         if n_tiles is not None:
             results[f"tiles_{time_res}"] = n_tiles.result()
-        run.release_since(mark)
 
     run.drain()
     results["output_agg_values"] = summary.result()

@@ -88,17 +88,3 @@ def temporal_agg_columns(weight_column: str = "") -> list[str]:
     if weight_column:
         cols.append("t_wavg")
     return cols
-
-
-def spatial_agg_columns(aggs: list[str], weight_column: str = "") -> list[str]:
-    """Names of the value columns produced by spatial aggregation (A4/A5).
-
-    For each spatial agg ``g`` and temporal col ``t_X`` we emit ``s_g_t_X``;
-    weighted runs add ``s_wavg_t_X``; ``s_count`` is always present.
-    """
-    t_cols = temporal_agg_columns(weight_column)
-    out = [f"s_{g}_t{t[1:]}" for g in aggs for t in t_cols]
-    if weight_column:
-        out.extend(f"s_wavg_t{t[1:]}" for t in t_cols)
-    out.append("s_count")
-    return out

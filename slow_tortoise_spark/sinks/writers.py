@@ -329,12 +329,7 @@ def _tile_bodies(batches, to_pandas, debug: bool = False):
                                        row["total_bins"], bins)
 
 
-def write_tile_bundles(
-    tiles_df,
-    bundle_path_fn,
-    writer,
-    tiles_per_partition_hint: int = 4096,
-) -> int:
+def write_tile_bundles(tiles_df, bundle_path_fn, writer) -> int:
     """Scale-path tile sink: pack each partition's tiles into ONE bundle
     object plus a JSON index, instead of one object per tile.
 
@@ -342,7 +337,6 @@ def write_tile_bundles(
     (~400k objects); bundling turns that into O(partitions) objects. A
     serving layer reads `<bundle>.idx.json` ({tile_key: [offset, len]})
     and range-reads the bundle. ``bundle_path_fn(partition_id) -> path``.
-    Repartition upstream to hit ``tiles_per_partition_hint``.
     """
 
     def emit(pid, batches, to_pandas) -> int:

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from slow_tortoise_spark.operators.cachectl import Scope
+
 _CORRUPT = "_corrupt_record"
 
 
@@ -126,11 +128,8 @@ def bad_record_count(df: DataFrame) -> int:
     against a short-lived cache."""
     if _CORRUPT not in df.columns:
         return 0
-    cached = df.cache()
-    try:
-        return cached.filter(F.col(_CORRUPT).isNotNull()).count()
-    finally:
-        cached.unpersist()
+    with Scope() as scope:
+        return scope.cache(df).filter(F.col(_CORRUPT).isNotNull()).count()
 
 
 def drop_bad_records(df: DataFrame) -> DataFrame:

@@ -660,15 +660,17 @@ def test_ppl_filter_routes_degenerate_docs_to_tail(spark, tmp_path):
 
 
 def test_pipeline_returns_storage_to_zero_including_checkpoints(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Round-7 verdict item 7: a corpus-pipeline run used to leave
     ~28 MB of localCheckpoint blocks behind (freed only when the JVM
     GC'd the internal RDDs).  Stage-boundary checkpoints — including
     every connected-components round — now go through
-    tracked_local_checkpoint, and the pipeline's exit release frees
+    tracked_local_checkpoint into the run's scope, whose exit frees
     them explicitly: total RDD storage returns to the pre-run level
-    immediately, the long-lived-driver contract."""
+    immediately, the long-lived-driver contract.  The same holds when
+    a parquet-mode run fails at its final write: nothing stays cached
+    or registered, and no ``_ckpt`` directory remains."""
     from slow_tortoise_spark.corpus_pipeline import (
         CorpusParams,
         run_corpus_pipeline,
@@ -677,7 +679,9 @@ def test_pipeline_returns_storage_to_zero_including_checkpoints(
         release_local_checkpoints,
         release_operator_caches,
         tracked_checkpoint_count,
+        tracked_count,
     )
+    from slow_tortoise_spark.sinks.writers import FileWriter
 
     spark.catalog.clearCache()
     release_operator_caches()
@@ -710,15 +714,31 @@ def test_pipeline_returns_storage_to_zero_including_checkpoints(
     assert tracked_checkpoint_count() == 0  # pipeline released its own
     assert storage_bytes() <= baseline
 
+    def failing_write(self, data, path):
+        raise OSError(f"write failed: {path}")
+
+    monkeypatch.setattr(FileWriter, "write", failing_write)
+    failed_out = tmp_path / "failed"
+    with pytest.raises(OSError, match="manifest.json"):
+        run_corpus_pipeline(spark, docs, CorpusParams(
+            out_dir=str(failed_out), min_tokens=1, dedup="minhash_cc",
+            checkpoint_mode="parquet",
+        ))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert tracked_count() == 0 and tracked_checkpoint_count() == 0
+    assert not (failed_out / "_ckpt").exists()
+    assert storage_bytes() <= baseline
+
 
 def test_corpus_pipeline_checkpoint_modes_identical(spark, sf_dir, tmp_path):
     """checkpoint_mode="parquet" (executor-loss-durable lineage cuts)
     must produce a byte-identical corpus to the default local mode, use
     the parquet path at every boundary (subdirs appear under _ckpt),
     and free every checkpoint directory at release."""
-    import glob as _glob
-
-    from slow_tortoise_spark.operators.cachectl import checkpoint_mode
+    from slow_tortoise_spark.operators.cachectl import (
+        free,
+        tracked_local_checkpoint,
+    )
 
     docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
@@ -746,41 +766,48 @@ def test_corpus_pipeline_checkpoint_modes_identical(spark, sf_dir, tmp_path):
             assert not os.path.exists(f"{out}/_ckpt")
         else:
             assert not os.path.exists(f"{out}/_ckpt")
-    # the global mode is restored after each run
-    assert checkpoint_mode() == ("local", None)
+    # the parquet mode ended with its run: a checkpoint made outside
+    # any scope is local blocks again
+    cp = tracked_local_checkpoint(spark.range(3))
+    assert cp.inputFiles() == [] and cp.count() == 3
+    assert free(cp)
     assert outs["local"] == outs["parquet"]
 
 
 def test_parquet_checkpoint_roundtrip_and_free(spark, tmp_path):
-    """cachectl parquet mode: tracked_local_checkpoint writes+reads a
-    parquet dir, free_local_checkpoint deletes exactly that dir, and
-    restoring the previous mode reverts to localCheckpoint blocks."""
+    """A cachectl scope with a checkpoint dir: tracked_local_checkpoint
+    writes+reads a parquet dir, free deletes exactly that dir, the
+    scope's exit deletes what is left and the directory it created, and
+    outside the scope checkpoints are localCheckpoint blocks again."""
     import glob as _glob
 
     from slow_tortoise_spark.operators.cachectl import (
-        free_local_checkpoint,
-        set_checkpoint_mode,
+        Scope,
+        free,
         tracked_local_checkpoint,
     )
 
     ckdir = str(tmp_path / "ck")
-    prev = set_checkpoint_mode("parquet", ckdir)
-    try:
-        df = spark.range(100).withColumn("v", F.col("id") * 2)
+    df = spark.range(100).withColumn("v", F.col("id") * 2)
+    with Scope(ckdir):
         cp1 = tracked_local_checkpoint(df)
         cp2 = tracked_local_checkpoint(df.filter("id < 10"))
         assert sorted(r["v"] for r in cp1.collect()) == [2 * i for i in range(100)]
         assert cp2.count() == 10
         dirs = sorted(_glob.glob(f"{ckdir}/ckpt_*"))
         assert len(dirs) == 2
-        assert free_local_checkpoint(cp1)
+        assert free(cp1)
         remaining = sorted(_glob.glob(f"{ckdir}/ckpt_*"))
         assert len(remaining) == 1
         assert cp2.count() == 10  # untouched checkpoint still readable
-        assert free_local_checkpoint(cp2)
+        assert free(cp2)
         assert _glob.glob(f"{ckdir}/ckpt_*") == []
-    finally:
-        set_checkpoint_mode(*prev)
+        tracked_local_checkpoint(df)  # left for the scope's exit
+        assert len(_glob.glob(f"{ckdir}/ckpt_*")) == 1
+    assert not os.path.exists(ckdir)
+    cp = tracked_local_checkpoint(df)
+    assert cp.inputFiles() == [] and cp.count() == 100
+    assert free(cp)
 
 
 def test_jsonl_csv_ingest_fidelity_and_bad_records(spark, tmp_path):

@@ -294,18 +294,17 @@ def test_pipeline_csv_bundle_sink(sink_layouts):
 
 def test_run_scope_reports_rows_it_persisted(spark, tmp_path):
     """The row count a persisted frame reports is its ``count()``, read
-    from the cache build in cache mode and counted in checkpoint mode."""
-    from slow_tortoise_spark.pipeline import _RunScope
+    from the eager cache build in cache mode and counted in checkpoint
+    mode (a parquet checkpoint under the scope's directory)."""
+    from pyspark import StorageLevel
+
+    from slow_tortoise_spark.operators.cachectl import Scope, row_count
 
     frame = spark.range(1000).selectExpr("id % 37 AS k").distinct()
-    ckpt = str(tmp_path / "ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt)
-    for checkpoint_dir in ("", ckpt):
-        run = _RunScope(spark, checkpoint_dir)
-        try:
-            assert run.rows(run.persist(frame)) == frame.count() == 37
-        finally:
-            run.close()
+    with Scope(str(tmp_path / "ckpt")) as scope:
+        assert row_count(scope.checkpoint(frame)) == 37
+        assert row_count(scope.cache(frame, eager=True)) == frame.count() == 37
+    assert frame.storageLevel == StorageLevel.NONE  # released on exit
 
 
 def test_per_feature_qualifier_gating(spark, tmp_path):
@@ -435,10 +434,14 @@ def test_pipeline_on_reference_e2e_fixture(spark, tmp_path):
         assert got[k] == pytest.approx(want[k]), k
 
 
-def test_pipeline_checkpoint_mode(spark, cube_path, tmp_path):
-    """checkpoint_dir swaps cache() for reliable checkpoints: artifacts
-    identical to a cached run, checkpoint files actually written."""
+def test_pipeline_checkpoint_mode(spark, cube_path, tmp_path, monkeypatch):
+    """checkpoint_dir swaps cache() for parquet checkpoints: artifacts
+    identical to a cached run, checkpoint files actually written during
+    the run, none left behind after it, and the session's own checkpoint
+    dir untouched."""
     import filecmp
+
+    from pyspark.sql.readwriter import DataFrameWriter
 
     out_a = str(tmp_path / "cached")
     out_b = str(tmp_path / "ckpt_run")
@@ -447,11 +450,26 @@ def test_pipeline_checkpoint_mode(spark, cube_path, tmp_path):
                   compute_tiles=False)
     run_pipeline(spark, PipelineParams(
         data_id="dc", run_id="rc", dest_root=out_a, **common))
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def spy_parquet(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        if path.startswith(ckpt):
+            written.append(glob.glob(f"{path}/*.parquet"))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
+    session_dir = spark.sparkContext.getCheckpointDir()
     run_pipeline(spark, PipelineParams(
         data_id="dc", run_id="rc", dest_root=out_b, checkpoint_dir=ckpt,
         **common))
-    # checkpoint store was used
-    assert glob.glob(f"{ckpt}/**/rdd-*", recursive=True)
+    # the checkpoint store was used: every persisted frame was written
+    # there as parquet, and each write left files at the time
+    assert written and all(written)
+    # ... and the run deleted all of it again
+    assert [p for p in glob.glob(f"{ckpt}/**", recursive=True)
+            if os.path.isfile(p)] == []
+    assert spark.sparkContext.getCheckpointDir() == session_dir
     # identical artifact trees, byte-for-byte
     a_files = sorted(
         os.path.relpath(p, out_a)

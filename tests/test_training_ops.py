@@ -4044,36 +4044,42 @@ def test_pagerank_releases_storage(spark):
     out = pagerank(df, iters=2)
     out.collect()
     from slow_tortoise_spark.operators.cachectl import (
-        free_local_checkpoint,
+        free,
     )
 
-    free_local_checkpoint(out)
+    free(out)
     after = len([i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()])
     assert after <= base + 1  # the returned frame itself was the last holder
 
 
 @pytest.mark.parametrize("failing_call", [2, 3])
-@pytest.mark.parametrize("op", ["pagerank", "personalized_pagerank"])
+@pytest.mark.parametrize(
+    "op", ["pagerank", "personalized_pagerank", "harmonic_centrality"])
 def test_pagerank_releases_caches_on_every_path(spark, monkeypatch, op,
                                                 failing_call):
     """A normal run leaves nothing in the cache manager; a run whose
     round fails (call 2 = round 1's checkpoint, call 3 = round 2's,
     after the edge cache is already dropped) re-raises with every cache
     and the live rank checkpoint released.  Personalized PageRank
-    (TrustRank's operator) shares the loop shape and the contract."""
+    (TrustRank's operator) shares the loop shape and the contract.
+    Harmonic centrality fails inside its first BFS round (call 2 = the
+    new frontier, call 3 = its per-node counts), with its edge and node
+    caches and the visited set live."""
     from pyspark.sql import Row
 
     from slow_tortoise_spark.operators import graph
     from slow_tortoise_spark.operators.cachectl import (
-        free_local_checkpoint,
+        free,
         tracked_checkpoint_count,
     )
 
-    def run(df, **kwargs):
+    def run(df, weight_col=None):
         if op == "pagerank":
-            return graph.pagerank(df, iters=3, **kwargs)
+            return graph.pagerank(df, iters=3, weight_col=weight_col)
+        if op == "harmonic_centrality":  # unweighted: one run per weight
+            return graph.harmonic_centrality(df, radius=3)
         return graph.personalized_pagerank(df, seeds=["n0"], iters=3,
-                                           **kwargs)
+                                           weight_col=weight_col)
 
     def cache_empty():
         return spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -4087,7 +4093,7 @@ def test_pagerank_releases_caches_on_every_path(spark, monkeypatch, op,
         out = run(df, weight_col=weight_col)
         assert out.count() == 200
         assert cache_empty()
-        free_local_checkpoint(out)
+        free(out)
 
     base = tracked_checkpoint_count()
     real = graph.tracked_local_checkpoint
@@ -4137,7 +4143,7 @@ def test_harmonic_centrality_releases_storage(spark):
     caches free once the caller releases the returned frame."""
     from pyspark.sql import Row
 
-    from slow_tortoise_spark.operators.cachectl import free_local_checkpoint
+    from slow_tortoise_spark.operators.cachectl import free
     from slow_tortoise_spark.operators.graph import harmonic_centrality
 
     base = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -4146,7 +4152,7 @@ def test_harmonic_centrality_releases_storage(spark):
     )
     out = harmonic_centrality(df, radius=3)
     out.collect()
-    free_local_checkpoint(out)
+    free(out)
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert after <= base + 1
 
@@ -4275,7 +4281,7 @@ def test_k_core_oracle_unroll_has_margin():
 def test_k_core_releases_storage(spark):
     from pyspark.sql import Row
 
-    from slow_tortoise_spark.operators.cachectl import free_local_checkpoint
+    from slow_tortoise_spark.operators.cachectl import free
     from slow_tortoise_spark.operators.graph import k_core
 
     base = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -4284,7 +4290,7 @@ def test_k_core_releases_storage(spark):
     )
     out = k_core(df, k=2)
     out.collect()
-    free_local_checkpoint(out)
+    free(out)
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert after <= base + 1
 
@@ -4294,7 +4300,7 @@ def test_hyperball_releases_storage(spark):
     once the caller releases the returned frame."""
     from pyspark.sql import Row
 
-    from slow_tortoise_spark.operators.cachectl import free_local_checkpoint
+    from slow_tortoise_spark.operators.cachectl import free
     from slow_tortoise_spark.operators.graph import hyperball_harmonic
 
     base = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -4303,7 +4309,7 @@ def test_hyperball_releases_storage(spark):
     )
     out = hyperball_harmonic(df, radius=3)
     out.collect()
-    free_local_checkpoint(out)
+    free(out)
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert after <= base + 1
 
@@ -4495,7 +4501,7 @@ def test_label_propagation_ignores_self_loops_and_multiplicity(spark):
 def test_label_propagation_releases_storage(spark):
     from pyspark.sql import Row
 
-    from slow_tortoise_spark.operators.cachectl import free_local_checkpoint
+    from slow_tortoise_spark.operators.cachectl import free
     from slow_tortoise_spark.operators.graph import label_propagation
 
     base = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -4504,7 +4510,7 @@ def test_label_propagation_releases_storage(spark):
     )
     out = label_propagation(df, iters=3)
     out.collect()
-    free_local_checkpoint(out)
+    free(out)
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert after <= base + 1
 
@@ -4592,7 +4598,7 @@ def test_core_number_empty_and_self_loop_graphs(spark):
 def test_core_number_releases_storage(spark):
     from pyspark.sql import Row
 
-    from slow_tortoise_spark.operators.cachectl import free_local_checkpoint
+    from slow_tortoise_spark.operators.cachectl import free
     from slow_tortoise_spark.operators.graph import core_number
 
     base = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -4601,7 +4607,7 @@ def test_core_number_releases_storage(spark):
     )
     out = core_number(df)
     out.collect()
-    free_local_checkpoint(out)
+    free(out)
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert after <= base + 1
 
@@ -4723,7 +4729,7 @@ def test_hyperball_closeness_shares_estimates_with_harmonic(spark):
 def test_hyperball_closeness_releases_storage(spark):
     from pyspark.sql import Row
 
-    from slow_tortoise_spark.operators.cachectl import free_local_checkpoint
+    from slow_tortoise_spark.operators.cachectl import free
     from slow_tortoise_spark.operators.graph import hyperball_closeness
 
     base = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -4732,7 +4738,7 @@ def test_hyperball_closeness_releases_storage(spark):
     )
     out = hyperball_closeness(df, radius=3)
     out.collect()
-    free_local_checkpoint(out)
+    free(out)
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert after <= base + 1
 
@@ -4797,7 +4803,7 @@ def test_triangle_counts_simple_graph_semantics(spark):
 def test_triangle_counts_releases_storage(spark):
     from pyspark.sql import Row
 
-    from slow_tortoise_spark.operators.cachectl import free_local_checkpoint
+    from slow_tortoise_spark.operators.cachectl import free
     from slow_tortoise_spark.operators.graph import triangle_counts
 
     base = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -4806,7 +4812,7 @@ def test_triangle_counts_releases_storage(spark):
     )
     out = triangle_counts(df)
     out.collect()
-    free_local_checkpoint(out)
+    free(out)
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert after <= base + 1
 
@@ -4876,7 +4882,7 @@ def test_neighborhood_function_matches_python_register_replay(spark):
 def test_neighborhood_function_releases_storage(spark):
     from pyspark.sql import Row
 
-    from slow_tortoise_spark.operators.cachectl import free_local_checkpoint
+    from slow_tortoise_spark.operators.cachectl import free
     from slow_tortoise_spark.operators.graph import neighborhood_function
 
     base = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -4885,7 +4891,7 @@ def test_neighborhood_function_releases_storage(spark):
     )
     out = neighborhood_function(df, radius=3)
     assert out.count() == 4
-    free_local_checkpoint(out)
+    free(out)
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert after <= base + 1
 

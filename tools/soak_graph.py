@@ -36,7 +36,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from slow_tortoise_spark.operators.cachectl import free_local_checkpoint
+    from slow_tortoise_spark.operators.cachectl import free
     from slow_tortoise_spark.operators.graph import (
         core_number,
         harmonic_centrality,
@@ -88,7 +88,7 @@ def main() -> int:
     pr_top = [r["node"] for r in
               pr.orderBy(F.desc("rank"), "node").limit(10).collect()]
     out["pagerank_s"] = round(time.time() - t0, 1)
-    free_local_checkpoint(pr)
+    free(pr)
 
     t0 = time.time()
     hb = hyperball_harmonic(edges, radius=3)
@@ -96,7 +96,7 @@ def main() -> int:
               hb.orderBy(F.desc("harmonic_est"), "node").limit(10).collect()]
     out["hyperball_s"] = round(time.time() - t0, 1)
     out["top10_overlap_pagerank_hyperball"] = len(set(pr_top) & set(hb_top))
-    free_local_checkpoint(hb)
+    free(hb)
 
     # degeneracy cleanup at full size: symmetrized degree is ~10 out +
     # skewed in, so k=12 forces genuine cascading peels
@@ -104,7 +104,7 @@ def main() -> int:
     kc = k_core(edges, k=12)
     out["k_core_nodes"] = kc.count()
     out["k_core_s"] = round(time.time() - t0, 1)
-    free_local_checkpoint(kc)
+    free(kc)
 
     # full degeneracy decomposition (round 11): every node's core
     # number in one pass — steps scale with the number of distinct
@@ -117,7 +117,7 @@ def main() -> int:
     out["core_number_nodes"] = cn_stats["n"]
     out["core_number_kmax"] = int(cn_stats["kmax"])
     out["core_number_s"] = round(time.time() - t0, 1)
-    free_local_checkpoint(cn)
+    free(cn)
 
     # label propagation (round 11): 4 synchronous rounds at full size —
     # two node-bounded partial-agg shuffles per round, no pair state
@@ -126,14 +126,14 @@ def main() -> int:
     n_comm = lp.select("label").distinct().count()
     out["label_propagation_communities"] = n_comm
     out["label_propagation_s"] = round(time.time() - t0, 1)
-    free_local_checkpoint(lp)
+    free(lp)
 
     # closeness off the same register loop as hyperball_harmonic
     t0 = time.time()
     hcl = hyperball_closeness(edges, radius=3)
     hcl.orderBy(F.desc("closeness_est"), "node").limit(10).collect()
     out["hyperball_closeness_s"] = round(time.time() - t0, 1)
-    free_local_checkpoint(hcl)
+    free(hcl)
 
     # triangle counting at full size: the degree-ordered orientation is
     # the claim under test — without it the hub's Σ deg² wedge join
@@ -146,7 +146,7 @@ def main() -> int:
     out["triangles_total"] = int(tc_stats["t3"]) // 3
     out["triangles_max_per_node"] = int(tc_stats["mx"])
     out["triangle_counts_s"] = round(time.time() - t0, 1)
-    free_local_checkpoint(tc)
+    free(tc)
     edges.unpersist()
 
     # exact tier at a size where the visited pair set fits: shows the
@@ -159,12 +159,12 @@ def main() -> int:
         hc = harmonic_centrality(small, radius=3)
         hc.orderBy(F.desc("harmonic"), "node").limit(10).collect()
         out["exact_harmonic_s"] = round(time.time() - t0, 1)
-        free_local_checkpoint(hc)
+        free(hc)
         t0 = time.time()
         hbs = hyperball_harmonic(small, radius=3)
         hbs.orderBy(F.desc("harmonic_est"), "node").limit(10).collect()
         out["hyperball_small_s"] = round(time.time() - t0, 1)
-        free_local_checkpoint(hbs)
+        free(hbs)
         small.unpersist()
 
     sweep_path = os.path.join(
