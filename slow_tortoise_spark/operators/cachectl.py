@@ -11,9 +11,10 @@ operator opens its own for its per-round frames.
 
 Operators route their caches through :func:`tracked_cache` and their
 lineage cuts through :func:`tracked_local_checkpoint`; both register
-into the innermost open scope.  A frame an operator RETURNS must outlive
-the operator's own scope, so the operator hands it on with
-:meth:`Scope.keep`, and the enclosing owner releases it.  With no scope
+into the innermost open scope.  An iterative operator runs in a scope of
+its own (:func:`scoped`); the frame it RETURNS must outlive that scope,
+so it hands the frame on with :func:`keep`, and the enclosing owner
+releases it.  With no scope
 open, the owner is a process-wide root registry that is never exited:
 code outside a scope (the bench harness, ``tools/``, catalog queries)
 drops it with :func:`release_operator_caches` and
