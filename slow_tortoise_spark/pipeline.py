@@ -36,7 +36,9 @@ Sink layout: the tile and per-region timeseries families are written
 one object per artifact (the reference layout) up to ``BUNDLE_THRESHOLD``
 artifacts and bundled above it; the counts come from cache builds the run
 makes anyway (the subtile rows, the region inventory), so the choice
-costs no job.
+costs no job.  The layout is one argument of the sink, and a bundle
+entry is the per-file artifact: its index key is the path it would have
+had, and its bytes are that file's bytes.
 """
 
 from __future__ import annotations
@@ -87,10 +89,8 @@ from slow_tortoise_spark.schema import REGION_LEVELS
 from slow_tortoise_spark.sinks.writers import (
     WRITE_TYPES,
     write_grouped_csv,
-    write_grouped_csv_bundles,
     write_grouped_json,
     write_json,
-    write_tile_bundles,
     write_tiles,
 )
 from slow_tortoise_spark.sources.reader import read_datacube
@@ -190,6 +190,14 @@ def run_pipeline(spark: SparkSession, params: PipelineParams) -> dict[str, Any]:
             return _run_pipeline(spark, params, run)
     finally:
         run.pool.shutdown()
+
+
+def _bundle_path_fn(bundle_dir: str | None):
+    """The ``bundle_path_fn`` of a family bundled under ``bundle_dir``;
+    None (one object per artifact) without one."""
+    if bundle_dir is None:
+        return None
+    return lambda pid: f"{bundle_dir}/bundle-{pid:05d}"
 
 
 def _by_feature(rows: list) -> list:
@@ -300,17 +308,41 @@ def _run_pipeline(
             feats = [f for f in feats if feature_counts[f][q] <= extra_cap]
         return feats
 
+    def qualifier_rollups(t, extra_cap: int | None = None,
+                          max_level: int | None = None):
+        """Yield ``(q, rollup)`` per gated qualifier: one single-shuffle
+        regional ROLLUP of ``t`` with ``q`` as an extra key (region ids
+        as ``id``), over the features ``_active_features(q, extra_cap)``
+        admits."""
+        for q in qualifiers:
+            feats = _active_features(q, extra_cap)
+            if not feats:
+                continue
+            # Null-qualifier rows are excluded from the breakout — the
+            # reference's pandas groupby(dropna=True) semantics.
+            # Post-validate this is a no-op (P4 fills nulls with the string
+            # "None"), but the rollup's grouping_id would otherwise keep
+            # real-NULL groups for unvalidated input.
+            yield q, regional_aggregation_all_levels(
+                t.filter(F.col("feature").isin(feats) & F.col(q).isNotNull()),
+                weight_column=weight,
+                qualifier=q,
+                max_level=max_level,
+            ).withColumnRenamed("region_id", "id")
+
+    def csv(frame, keys, path_fn, sort_cols, bundle_dir=None) -> None:
+        """Queue one CSV family: an artifact per group of ``keys`` at
+        ``path_fn(key dict)``, rows sorted on ``sort_cols``; with
+        ``bundle_dir``, one bundle + index per partition under it."""
+        run.sink(write_grouped_csv, frame, group_cols=keys, path_fn=path_fn,
+                 writer=writer, sort_cols=sort_cols,
+                 bundle_path_fn=_bundle_path_fn(bundle_dir))
+
     # Raw passthrough for small features (S7).
     small = [f for f, n in feature_rows.items() if n <= params.raw_count_threshold]
     if small:
-        run.sink(
-            write_grouped_csv,
-            df.filter(F.col("feature").isin(small)),
-            group_cols=["feature"],
-            path_fn=lambda k: f"{prefix}/raw/{k['feature']}/raw.csv",
-            writer=writer,
-            sort_cols=["timestamp"],
-        )
+        csv(df.filter(F.col("feature").isin(small)), ["feature"],
+            lambda k: f"{prefix}/raw/{k['feature']}/raw.csv", ["timestamp"])
     results["rows_per_feature"] = feature_rows
 
     # Region + qualifier inventories (A7/A8) → the reference's raw-info
@@ -399,55 +431,34 @@ def _run_pipeline(
                 # coarser zoom has ~1/4 as many)
                 n_subtiles = row_count(sub)
                 if n_subtiles > 0:
-                    tiles = tiles_all_levels(sub)
+                    tile_dir = f"{prefix}/tiles/{time_res}"
                     ext = ".txt" if params.tile_debug else ".tile"
-                    if n_subtiles > BUNDLE_THRESHOLD:
-                        n_tiles = run.sink(
-                            write_tile_bundles,
-                            tiles,
-                            bundle_path_fn=lambda pid, tr=time_res: (
-                                f"{prefix}/tiles/{tr}/bundle-{pid:05d}"
-                            ),
-                            writer=writer,
-                        )
-                    else:
-                        n_tiles = run.sink(
-                            write_tiles,
-                            tiles,
-                            path_fn=lambda r, tr=time_res, ex=ext: (
-                                f"{prefix}/tiles/{tr}/{r['feature']}/"
-                                f"{r['timestamp']}-{r['tile']['z']}-{r['tile']['x']}-"
-                                f"{r['tile']['y']}{ex}"
-                            ),
-                            writer=writer,
-                            debug=params.tile_debug,
-                        )
+                    n_tiles = run.sink(
+                        write_tiles,
+                        tiles_all_levels(sub),
+                        path_fn=lambda r, td=tile_dir: (
+                            f"{td}/{r['feature']}/{r['timestamp']}-"
+                            f"{r['tile']['z']}-{r['tile']['x']}-{r['tile']['y']}{ext}"
+                        ),
+                        writer=writer,
+                        debug=params.tile_debug,
+                        bundle_path_fn=_bundle_path_fn(
+                            tile_dir if n_subtiles > BUNDLE_THRESHOLD else None),
+                    )
                     # the key takes its place in results.json now; the count
                     # replaces the future once the resolution's sinks drain
                     results[f"tiles_{time_res}"] = n_tiles
-                    gs = grid_stats(sub)
-                    run.sink(
-                        write_grouped_csv,
-                        gs,
-                        group_cols=["feature", "timestamp"],
-                        path_fn=lambda k, tr=time_res: (
+                    csv(grid_stats(sub), ["feature", "timestamp"],
+                        lambda k, tr=time_res: (
                             f"{prefix}/stats/{tr}/{k['feature']}/{k['timestamp']}.csv"
-                        ),
-                        writer=writer,
-                        sort_cols=["zoom"],
-                    )
+                        ), ["zoom"])
 
             # Global timeseries CSV per feature.
             if task_on("compute_global_timeseries"):
-                ts = global_timeseries(t, weight_column=weight)
-                run.sink(
-                    write_grouped_csv,
-                    ts,
-                    group_cols=["feature"],
-                    path_fn=lambda k, tr=time_res: f"{prefix}/timeseries/{tr}/{k['feature']}/global.csv",
-                    writer=writer,
-                    sort_cols=["timestamp"],
-                )
+                csv(global_timeseries(t, weight_column=weight), ["feature"],
+                    lambda k, tr=time_res: (
+                        f"{prefix}/timeseries/{tr}/{k['feature']}/global.csv"
+                    ), ["timestamp"])
 
             # Regional families share the cached all-levels rollup.
             need_regional = region_cols and (
@@ -459,115 +470,53 @@ def _run_pipeline(
                 regional = persist(regional_aggregation_all_levels(
                     t, weight_column=weight
                 ))
+                by_id = regional.withColumnRenamed("region_id", "id")
             if need_regional and task_on("compute_regional_aggregation"):
                 # one CSV per (feature, level, timestamp)
-                run.sink(
-                    write_grouped_csv,
-                    regional.withColumnRenamed("region_id", "id"),
-                    group_cols=["feature", "level", "timestamp"],
-                    path_fn=lambda k, tr=time_res: (
+                csv(by_id, ["feature", "level", "timestamp"],
+                    lambda k, tr=time_res: (
                         f"{prefix}/regional/{tr}/{k['feature']}/level-{k['level']}/"
                         f"{k['timestamp']}.csv"
-                    ),
-                    writer=writer,
-                    sort_cols=["id"],
-                )
+                    ), ["id"])
                 # R1 per-qualifier breakdowns: one CSV per (feature, level,
                 # timestamp, qualifier column) with columns (id, qualifier,
                 # aggs) — reference data_pipeline.py:554-586 loops levels ×
                 # qualifiers as separate Dask aggregations; here each
                 # qualifier is one extra single-shuffle ROLLUP.
-                for q in qualifiers:
-                    feats = _active_features(q)
-                    if not feats:
-                        continue
-                    # Null-qualifier rows are excluded from the breakout —
-                    # the reference's pandas groupby(dropna=True) semantics.
-                    # Post-validate this is a no-op (P4 fills nulls with the
-                    # string "None"), but the rollup's grouping_id would
-                    # otherwise keep real-NULL groups for unvalidated input.
-                    rolled_q = regional_aggregation_all_levels(
-                        t.filter(F.col("feature").isin(feats)
-                                 & F.col(q).isNotNull()),
-                        weight_column=weight,
-                        qualifier=q,
-                    )
-                    run.sink(
-                        write_grouped_csv,
-                        rolled_q.withColumnRenamed("region_id", "id")
-                        .withColumnRenamed(q, "qualifier"),
-                        group_cols=["feature", "level", "timestamp"],
-                        path_fn=lambda k, tr=time_res, qq=q: (
+                for q, rolled_q in qualifier_rollups(t):
+                    csv(rolled_q.withColumnRenamed(q, "qualifier"),
+                        ["feature", "level", "timestamp"],
+                        lambda k, tr=time_res, qq=q: (
                             f"{prefix}/regional/{tr}/{k['feature']}/"
                             f"level-{k['level']}/qualifiers/{qq}/"
                             f"{k['timestamp']}.csv"
-                        ),
-                        writer=writer,
-                        sort_cols=["id", "qualifier"],
-                    )
+                        ), ["id", "qualifier"])
             if need_regional and task_on("compute_regional_timeseries"):
                 # R2: per-region timeseries — one CSV per (feature, level,
-                # region), rows over timestamps; qualifier breakdowns only for
-                # levels ≤ regional_timeseries_max_level and qualifiers whose
+                # region), rows over timestamps, bundled past the threshold;
+                # qualifier breakdowns only for levels ≤
+                # regional_timeseries_max_level and qualifiers whose
                 # cardinality fits regional_timeseries_count.
-                if n_regions > BUNDLE_THRESHOLD:
-                    run.sink(
-                        write_grouped_csv_bundles,
-                        regional.withColumnRenamed("region_id", "id"),
-                        group_cols=["feature", "level", "id"],
-                        key_fn=lambda k, tr=time_res: (
-                            f"{prefix}/regional-timeseries/{tr}/{k['feature']}/"
-                            f"level-{k['level']}/{k['id']}.csv"
-                        ),
-                        bundle_path_fn=lambda pid, tr=time_res: (
-                            f"{prefix}/regional-timeseries/{tr}/bundle-{pid:05d}"
-                        ),
-                        writer=writer,
-                        sort_cols=["timestamp"],
-                    )
-                else:
-                    run.sink(
-                        write_grouped_csv,
-                        regional.withColumnRenamed("region_id", "id"),
-                        group_cols=["feature", "level", "id"],
-                        path_fn=lambda k, tr=time_res: (
-                            f"{prefix}/regional-timeseries/{tr}/{k['feature']}/"
-                            f"level-{k['level']}/{k['id']}.csv"
-                        ),
-                        writer=writer,
-                        sort_cols=["timestamp"],
-                    )
-                ts_max_level = min(
-                    params.regional_timeseries_max_level, len(region_cols) - 1
-                )
-                for q in qualifiers:
-                    ts_feats = _active_features(
-                        q, extra_cap=params.regional_timeseries_count
-                    )
-                    if not ts_feats:
-                        continue
-                    # one qualifier ROLLUP covers every gated level in a
-                    # single shuffle (the reference loops levels × qualifiers
-                    # as separate aggregations)
-                    rq = regional_aggregation_all_levels(
-                        t.filter(F.col("feature").isin(ts_feats)
-                                 & F.col(q).isNotNull()),  # dropna parity, see above
-                        weight_column=weight,
-                        qualifier=q,
-                        max_level=ts_max_level,
-                    )
-                    run.sink(
-                        write_grouped_csv,
-                        rq.withColumnRenamed("region_id", "id"),
-                        group_cols=["feature", "level", "id", q],
-                        path_fn=lambda k, tr=time_res, qq=q: (
-                            f"{prefix}/regional-timeseries/{tr}/{k['feature']}/"
-                            f"level-{k['level']}/qualifiers/{qq}/{k[qq]}/"
-                            f"{k['id']}.csv"
-                        ),
-                        writer=writer,
-                        sort_cols=["timestamp"],
-                    )
+                rts_dir = f"{prefix}/regional-timeseries/{time_res}"
+                csv(by_id, ["feature", "level", "id"],
+                    lambda k, rd=rts_dir: (
+                        f"{rd}/{k['feature']}/level-{k['level']}/{k['id']}.csv"
+                    ), ["timestamp"],
+                    bundle_dir=rts_dir if n_regions > BUNDLE_THRESHOLD else None)
+                # one qualifier ROLLUP covers every gated level in a single
+                # shuffle (the reference loops levels × qualifiers as
+                # separate aggregations)
+                for q, rq in qualifier_rollups(
+                    t,
+                    extra_cap=params.regional_timeseries_count,
+                    max_level=min(params.regional_timeseries_max_level,
+                                  len(region_cols) - 1),
+                ):
+                    csv(rq, ["feature", "level", "id", q],
+                        lambda k, rd=rts_dir, qq=q: (
+                            f"{rd}/{k['feature']}/level-{k['level']}/"
+                            f"qualifiers/{qq}/{k[qq]}/{k['id']}.csv"
+                        ), ["timestamp"])
 
             if need_regional and task_on("compute_regional_stats"):
                 # Extrema per admin level (R3) — the reference emits one stats
@@ -617,17 +566,10 @@ def _run_pipeline(
                 ))
                 for agg_col in [c for c in sq.columns
                                 if c.startswith("s_") and c != "s_count"] + ["s_count"]:
-                    wide = qualifier_timeseries_pivot(sq, q, agg_col)
-                    run.sink(
-                        write_grouped_csv,
-                        wide,
-                        group_cols=["feature"],
-                        path_fn=lambda k, tr=time_res, qq=q, ac=agg_col: (
+                    csv(qualifier_timeseries_pivot(sq, q, agg_col), ["feature"],
+                        lambda k, tr=time_res, qq=q, ac=agg_col: (
                             f"{prefix}/qualifiers/{tr}/{k['feature']}/{qq}/{ac}.csv"
-                        ),
-                        writer=writer,
-                        sort_cols=["timestamp"],
-                    )
+                        ), ["timestamp"])
         if n_tiles is not None:
             results[f"tiles_{time_res}"] = n_tiles.result()
 

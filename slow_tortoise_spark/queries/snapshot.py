@@ -2,6 +2,7 @@
 bucketed merge upsert."""
 from __future__ import annotations
 
+from slow_tortoise_spark.operators.cachectl import tracked_local_checkpoint
 from slow_tortoise_spark.queries._shared import (
     Callable,
     F,
@@ -62,11 +63,10 @@ def q_snapshot_time_travel(spark, sf_dir):
         merge(b0, 0)
         merge(b1, 1)
         v0 = read_snapshot_at(spark, root, "v0000000000")
-        out = (
+        out = tracked_local_checkpoint(
             v0.select("o_orderkey", "o_custkey", "o_orderstatus",
                       "o_totalprice")
             .orderBy("o_orderkey")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -125,14 +125,13 @@ def q_agg_snapshot_incremental(spark, sf_dir):
                 # committed replay — must no-op, not double-count
                 merge(orders.filter(F.col("o_orderkey") % 3 == 1), 1)
         snap = read_snapshot(spark, root, live_only=False)
-        out = (
+        out = tracked_local_checkpoint(
             snap.select(
                 "o_orderstatus",
                 F.col("cents").alias("total_cents"),
                 F.col("_n").alias("n_orders"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -213,11 +212,10 @@ def q_bucketed_merge_upsert(spark, sf_dir):
         merge(b1, 1)  # committed replay — must no-op, not re-merge
         merge(b2, 2)
         live = read_bucketed_snapshot(spark, root, live_only=True)
-        out = (
+        out = tracked_local_checkpoint(
             live.select("o_orderkey", "o_custkey", "o_orderstatus",
                         "o_totalprice")
             .orderBy("o_orderkey")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)

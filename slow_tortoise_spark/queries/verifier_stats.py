@@ -2,6 +2,7 @@
 sets, salted join, perplexity buckets, KN smoothing, file round trips."""
 from __future__ import annotations
 
+from slow_tortoise_spark.operators.cachectl import tracked_local_checkpoint
 from slow_tortoise_spark.queries._shared import (
     Callable,
     F,
@@ -529,10 +530,9 @@ def q_jsonl_roundtrip(spark, sf_dir):
         write_jsonl(docs, root)
         back = read_jsonl(spark, root, _DOCS_DDL)
         assert bad_record_count(back) == 0
-        out = (
+        out = tracked_local_checkpoint(
             drop_bad_records(back)
             .orderBy("doc_id")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -563,10 +563,9 @@ def q_csv_roundtrip(spark, sf_dir):
         write_csv(docs, root)
         back = read_csv(spark, root, _DOCS_DDL)
         assert bad_record_count(back) == 0
-        out = (
+        out = tracked_local_checkpoint(
             drop_bad_records(back)
             .orderBy("doc_id")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -5,8 +5,11 @@ protobuf per tile) to S3/Minio or local disk from inside worker-side
 ``groupby().apply`` lambdas. The Spark-native equivalent: executors write
 from one ``mapInArrow`` pass, through a destination object small enough
 to pickle.  Every grouped sink runs on one group walker (``_walk_groups``)
-and the tile sinks on its per-partition pass (``_each_partition``); each
+and the tile sink on its per-partition pass (``_each_partition``); each
 partition returns one count row that the driver sums from ``collect()``.
+The layout is one argument, ``bundle_path_fn``: without it each artifact
+is one object, with it each partition's artifacts are one bundle plus an
+index keyed by the paths they would have had.
 
 Writers:
     FileWriter  — local filesystem (dirs auto-created)
@@ -192,45 +195,39 @@ def _walk_groups(df, group_cols: list[str], emit) -> int:
         df.repartition(*keys).sortWithinPartitions(*keys), emit_partition)
 
 
-def _write_per_group(df, group_cols: list[str], path_fn, writer, body_fn) -> int:
-    """One artifact per group: ``body_fn(pdf)`` at ``path_fn(key dict)``."""
-
-    def emit(_pid, groups) -> int:
+def _write_artifacts(writer, pid: int, artifacts, bundle_path_fn=None) -> int:
+    """Write one partition's ``(path, body)`` artifacts: one object each,
+    or with ``bundle_path_fn`` one ``<bundle_path_fn(pid)>.bundle`` object
+    plus a ``.idx.json`` index ({path: [offset, len]}), nothing when there
+    are none.  A bundle entry is the per-file artifact: its key is the
+    path it would have had, its bytes are that file's bytes.  Returns the
+    number of artifacts."""
+    if bundle_path_fn is None:
         n = 0
-        for key, pdf in groups:
-            writer.write(body_fn(pdf), path_fn(key))
+        for path, body in artifacts:
+            writer.write(body, path)
             n += 1
         return n
-
-    return _walk_groups(df, group_cols, emit)
-
-
-def _write_bundle(writer, base: str, bodies: dict[str, bytes]) -> int:
-    """Write ``bodies`` as one ``<base>.bundle`` object plus a
-    ``<base>.idx.json`` index ({key: [offset, len]}), or nothing when
-    there are none; returns the number of entries."""
+    bodies = {path: body.encode() if isinstance(body, str) else body
+              for path, body in artifacts}
     if bodies:
         index, offset = {}, 0
-        for key, body in bodies.items():
-            index[key] = [offset, len(body)]
+        for path, body in bodies.items():
+            index[path] = [offset, len(body)]
             offset += len(body)
+        base = bundle_path_fn(pid)
         writer.write(b"".join(bodies.values()), base + ".bundle")
         writer.write(json.dumps(index), base + ".idx.json")
     return len(bodies)
 
 
-def _csv_body(df, group_cols: list[str], sort_cols, drop_group_cols: bool = True):
-    """``body(pdf) -> str``: a group's CSV, rows stably sorted on
-    ``sort_cols``, without the group columns unless ``drop_group_cols`` is
-    false."""
-    value_cols = [c for c in df.columns if c not in group_cols]
-
-    def body(pdf):
-        if sort_cols:
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        return (pdf[value_cols] if drop_group_cols else pdf).to_csv(index=False)
-
-    return body
+def _write_groups(df, group_cols: list[str], path_fn, writer, body_fn,
+                  bundle_path_fn=None) -> int:
+    """One artifact per group, ``body_fn(pdf)`` at ``path_fn(key dict)``,
+    written by ``_write_artifacts``."""
+    return _walk_groups(df, group_cols, lambda pid, groups: _write_artifacts(
+        writer, pid, ((path_fn(key), body_fn(pdf)) for key, pdf in groups),
+        bundle_path_fn))
 
 
 def write_grouped_csv(
@@ -238,49 +235,35 @@ def write_grouped_csv(
     group_cols: list[str],
     path_fn,
     writer,
-    drop_group_cols: bool = True,
     sort_cols: list[str] | None = None,
+    bundle_path_fn=None,
 ) -> int:
-    """S7-style sink: one CSV artifact per distinct group.
+    """S7-style sink: one CSV artifact per distinct group, without the
+    group columns.
 
     ``path_fn(group_key_dict) -> rel_path``.  Runs on the group walker,
     so each group is serialized exactly once, executor-side.  Returns the
-    number of files.  ``sort_cols`` orders rows inside each artifact (a
+    number of groups.  ``sort_cols`` orders rows inside each artifact (a
     stable sort; group row order otherwise follows shuffle partitioning,
     which varies with cluster layout — sorted artifacts are byte-stable
     across runs).
+
+    ``bundle_path_fn(partition_id) -> path`` is the scale path: each
+    partition's groups go into ONE bundle object plus a JSON index
+    instead of one object per group, so the reference's many-small-files
+    problem (tens of thousands of regional-timeseries CSVs) becomes
+    O(partitions) store objects.  A serving layer reads
+    ``<bundle>.idx.json`` ({per-file path: [offset, len]}) and
+    range-reads the bundle.
     """
-    return _write_per_group(df, group_cols, path_fn, writer,
-                            _csv_body(df, group_cols, sort_cols, drop_group_cols))
+    value_cols = [c for c in df.columns if c not in group_cols]
 
+    def body(pdf):
+        if sort_cols:
+            pdf = pdf.sort_values(sort_cols, kind="mergesort")
+        return pdf[value_cols].to_csv(index=False)
 
-def write_grouped_csv_bundles(
-    df,
-    group_cols: list[str],
-    key_fn,
-    bundle_path_fn,
-    writer,
-    sort_cols: list[str] | None = None,
-) -> int:
-    """Scale-path grouped-CSV sink: pack each partition's groups into ONE
-    bundle object plus a JSON index instead of one object per group.
-
-    The per-group CSV layout (the reference's many-small-files problem —
-    tens of thousands of regional-timeseries CSVs) becomes O(partitions)
-    store objects; a serving layer reads ``<bundle>.idx.json``
-    ({key: [offset, len]}) and range-reads the bundle.  ``key_fn(group
-    key dict) -> index key``; ``bundle_path_fn(partition_id) -> path``.
-    Runs on the group walker, so each entry is byte-equal to the
-    ``write_grouped_csv`` artifact of its group.  Returns the number of
-    groups.
-    """
-    body = _csv_body(df, group_cols, sort_cols)
-
-    def emit(pid, groups) -> int:
-        bodies = {key_fn(key): body(pdf).encode() for key, pdf in groups}
-        return _write_bundle(writer, bundle_path_fn(pid), bodies)
-
-    return _walk_groups(df, group_cols, emit)
+    return _write_groups(df, group_cols, path_fn, writer, body, bundle_path_fn)
 
 
 def write_json(obj, rel_path: str, writer) -> None:
@@ -300,13 +283,13 @@ def write_grouped_json(df, group_cols: list[str], path_fn, writer,
     matter how many distinct values a feature has.  Returns the number of
     artifacts written.
     """
-    return _write_per_group(df, group_cols, path_fn, writer,
-                            lambda pdf: json.dumps(payload_fn(pdf), default=str))
+    return _write_groups(df, group_cols, path_fn, writer,
+                         lambda pdf: json.dumps(payload_fn(pdf), default=str))
 
 
-def _tile_bodies(batches, to_pandas, debug: bool = False):
-    """Yield ``(row dict, body)`` per tile row: the tile's protobuf bytes,
-    or with ``debug`` its human-readable dict repr."""
+def _tile_artifacts(batches, to_pandas, path_fn, debug: bool = False):
+    """Yield ``(path_fn(row dict), body)`` per tile row: the tile's
+    protobuf bytes, or with ``debug`` its human-readable dict repr."""
     from slow_tortoise_spark.sinks.tile_proto import encode_tile
 
     for batch in batches:
@@ -319,38 +302,19 @@ def _tile_bodies(batches, to_pandas, debug: bool = False):
                 for b in row["bins"]
             }
             if debug:
-                yield row, str({
+                body = str({
                     "coord": {"z": tile["z"], "x": tile["x"], "y": tile["y"]},
                     "total_bins": row["total_bins"],
                     "bins": bins,
                 })
             else:
-                yield row, encode_tile(tile["z"], tile["x"], tile["y"],
-                                       row["total_bins"], bins)
+                body = encode_tile(tile["z"], tile["x"], tile["y"],
+                                   row["total_bins"], bins)
+            yield path_fn(row), body
 
 
-def write_tile_bundles(tiles_df, bundle_path_fn, writer) -> int:
-    """Scale-path tile sink: pack each partition's tiles into ONE bundle
-    object plus a JSON index, instead of one object per tile.
-
-    The reference's per-tile layout was upload-bound at high precision
-    (~400k objects); bundling turns that into O(partitions) objects. A
-    serving layer reads `<bundle>.idx.json` ({tile_key: [offset, len]})
-    and range-reads the bundle. ``bundle_path_fn(partition_id) -> path``.
-    """
-
-    def emit(pid, batches, to_pandas) -> int:
-        bodies = {
-            f"{r['feature']}/{r['timestamp']}-{r['tile']['z']}-"
-            f"{r['tile']['x']}-{r['tile']['y']}": body
-            for r, body in _tile_bodies(batches, to_pandas)
-        }
-        return _write_bundle(writer, bundle_path_fn(pid), bodies)
-
-    return _each_partition(tiles_df, emit)
-
-
-def write_tiles(tiles_df, path_fn, writer, debug: bool = False) -> int:
+def write_tiles(tiles_df, path_fn, writer, debug: bool = False,
+                bundle_path_fn=None) -> int:
     """S8: serialize + write one protobuf per tile row, executor-side.
 
     ``tiles_df`` is the output of operators.tiles.tiles_for_level /
@@ -360,16 +324,16 @@ def write_tiles(tiles_df, path_fn, writer, debug: bool = False) -> int:
     /root/reference/flows/common.py:291-309) — pair it with a ``.txt``
     path convention in ``path_fn``.  Tile bytes never reach the driver:
     each partition returns one count.
+
+    ``bundle_path_fn(partition_id) -> path`` packs each partition's tiles
+    into ONE bundle object plus a JSON index ({per-file path: [offset,
+    len]}), as ``write_grouped_csv`` does: the reference's per-tile
+    layout was upload-bound at high precision (~400k objects), bundling
+    turns that into O(partitions) objects.
     """
-
-    def emit(_pid, batches, to_pandas) -> int:
-        n = 0
-        for row, body in _tile_bodies(batches, to_pandas, debug):
-            writer.write(body, path_fn(row))
-            n += 1
-        return n
-
-    return _each_partition(tiles_df, emit)
+    return _each_partition(tiles_df, lambda pid, batches, to_pandas: _write_artifacts(
+        writer, pid, _tile_artifacts(batches, to_pandas, path_fn, debug),
+        bundle_path_fn))
 
 
 def write_webdataset_shards(

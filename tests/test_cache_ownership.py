@@ -1,13 +1,10 @@
 """Guard: caches and checkpoints have one owner, ``operators/cachectl.py``.
 
-The pipelines, the operators and the sources cache and checkpoint only
-through a cachectl scope (``Scope``, ``tracked_cache``,
-``tracked_local_checkpoint``, ``free``), so every path releases what it
-made.  A hand-rolled ``unpersist`` or checkpoint call bypasses that.
-
-Out of scope: the five ``localCheckpoint(eager=True)`` calls in the
-catalog queries, ``queries/snapshot.py`` (3) and
-``queries/verifier_stats.py`` (2).
+Every module of the package (pipelines, operators, sources, catalog
+queries) caches and checkpoints only through a cachectl scope
+(``Scope``, ``tracked_cache``, ``tracked_local_checkpoint``, ``free``),
+so every path releases what it made.  A hand-rolled ``unpersist`` or
+checkpoint call bypasses that.
 """
 
 from __future__ import annotations
@@ -16,11 +13,7 @@ import pathlib
 import re
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "slow_tortoise_spark"
-OWNED = (
-    sorted((PKG / "operators").glob("*.py"))
-    + sorted((PKG / "sources").glob("*.py"))
-    + [PKG / "pipeline.py", PKG / "corpus_pipeline.py", PKG / "media_pipeline.py"]
-)
+OWNED = sorted(PKG.rglob("*.py"))
 HAND_ROLLED = re.compile(
     r"\.unpersist\(|localCheckpoint\(|\.checkpoint\(|setCheckpointDir")
 
@@ -32,5 +25,5 @@ def test_only_cachectl_caches_or_checkpoints_by_hand():
         for n, line in enumerate(path.read_text().splitlines(), start=1)
         if HAND_ROLLED.search(line)
     ]
-    assert len(OWNED) > 20  # the globs found the package
+    assert len(OWNED) > 20  # the glob found the package
     assert hits == []

@@ -730,22 +730,34 @@ def test_pipeline_returns_storage_to_zero_including_checkpoints(
     assert storage_bytes() <= baseline
 
 
-def test_corpus_pipeline_checkpoint_modes_identical(spark, sf_dir, tmp_path):
+def test_corpus_pipeline_checkpoint_modes_identical(spark, sf_dir, tmp_path,
+                                                   monkeypatch):
     """checkpoint_mode="parquet" (executor-loss-durable lineage cuts)
-    must produce a byte-identical corpus to the default local mode, use
-    the parquet path at every boundary (subdirs appear under _ckpt),
-    and free every checkpoint directory at release."""
+    must produce a byte-identical corpus to the default local mode,
+    write its checkpoints as parquet under _ckpt (the local mode writes
+    none there), and free every checkpoint directory at release."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from slow_tortoise_spark.operators.cachectl import (
         free,
         tracked_local_checkpoint,
     )
 
+    written: list[str] = []
+    real_parquet = DataFrameWriter.parquet
+
+    def spy_parquet(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        written.append(path)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
     docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     ).limit(300)
     outs = {}
     for mode in ("local", "parquet"):
         out = str(tmp_path / f"c_{mode}")
+        written.clear()
         manifest = run_corpus_pipeline(
             spark, docs,
             CorpusParams(
@@ -760,12 +772,14 @@ def test_corpus_pipeline_checkpoint_modes_identical(spark, sf_dir, tmp_path):
             for r in spark.read.parquet(f"{out}/corpus").collect()
         )
         outs[mode] = (manifest, rows)
+        checkpoints = [p for p in written if p.startswith(f"{out}/_ckpt/")]
         if mode == "parquet":
-            # every boundary went through parquet, was freed at exit,
-            # and the empty _ckpt parent was removed from the output
-            assert not os.path.exists(f"{out}/_ckpt")
+            # the boundaries went through parquet under _ckpt ...
+            assert checkpoints
         else:
-            assert not os.path.exists(f"{out}/_ckpt")
+            assert checkpoints == []
+        # ... which was freed at exit, the empty parent removed too
+        assert not os.path.exists(f"{out}/_ckpt")
     # the parquet mode ended with its run: a checkpoint made outside
     # any scope is local blocks again
     cp = tracked_local_checkpoint(spark.range(3))

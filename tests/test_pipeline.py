@@ -82,25 +82,35 @@ def test_run_pipeline_artifacts(spark, cube_path, tmp_path):
 
 
 def test_tile_bundle_sink(spark, cube_path, tmp_path):
-    """Bundled tile sink: one object per partition + index, tiles
-    byte-identical to the per-file sink."""
+    """Bundled tile sink: one object per partition + index, each entry
+    keyed by its per-file path and byte-identical to the per-file sink's
+    tile there."""
     from slow_tortoise_spark.operators.temporal import temporal_aggregation
     from slow_tortoise_spark.operators.tiles import (
         subtile_aggregation,
         tiles_for_level,
     )
-    from slow_tortoise_spark.sinks.writers import FileWriter, write_tile_bundles
+    from slow_tortoise_spark.sinks.writers import FileWriter, write_tiles
 
     df = spark.read.parquet(cube_path)
     sub = subtile_aggregation(temporal_aggregation(df, "month"))
     tiles = tiles_for_level(sub, level=8)
+
+    def path_fn(r):
+        t = r["tile"]
+        return f"tiles/{r['feature']}/{r['timestamp']}-{t['z']}-{t['x']}-{t['y']}.tile"
+
+    out_files = str(tmp_path / "files")
+    n_files = write_tiles(tiles, path_fn=path_fn, writer=FileWriter(out_files))
     out = str(tmp_path / "bundles")
-    n = write_tile_bundles(
+    n = write_tiles(
         tiles.repartition(2),
-        bundle_path_fn=lambda pid: f"tiles/part-{pid:05d}",
+        path_fn=path_fn,
         writer=FileWriter(out),
+        bundle_path_fn=lambda pid: f"tiles/part-{pid:05d}",
     )
     assert n == tiles.count() and n > 0
+    assert n_files == n
 
     import glob
     import json as _json
@@ -115,9 +125,11 @@ def test_tile_bundle_sink(spark, cube_path, tmp_path):
         total_indexed += len(index)
         for key, (off, ln) in index.items():
             tile = decode_tile(blob[off:off + ln])
-            z, x, y = key.rsplit("/", 1)[1].split("-")[1:]
+            z, x, y = key.rsplit("/", 1)[1][: -len(".tile")].split("-")[1:]
             assert (tile["z"], tile["x"], tile["y"]) == (int(z), int(x), int(y))
             assert tile["stats"]
+            assert blob[off:off + ln] == open(
+                os.path.join(out_files, key), "rb").read(), key
     assert total_indexed == n
 
 
@@ -262,6 +274,14 @@ def test_pipeline_bundled_and_debug_tile_sinks(sink_layouts):
     assert txts and not glob.glob(f"{files}/dl/rl/tiles/month/bundle-*")
     body = open(txts[0]).read()
     assert body.startswith("{'coord':") and "total_bins" in body
+
+    # a bundle entry is the per-file tile: its key is the path the tile
+    # has in the per-file run (there with the debug extension)
+    keys = set()
+    for i in indexes:
+        keys.update(os.path.splitext(k)[0] for k in json.load(open(i)))
+    assert keys == {os.path.splitext(os.path.relpath(p, files))[0]
+                    for p in txts}
 
 
 def test_auto_sink_selection(sink_layouts):
@@ -542,13 +562,8 @@ def test_grouped_csv_bundles_match_per_file_sink(spark, cube_path, tmp_path):
         regional_aggregation_all_levels,
     )
     from slow_tortoise_spark.operators.temporal import temporal_aggregation
-    from slow_tortoise_spark.sinks.writers import (
-        FileWriter,
-        write_grouped_csv,
-        write_grouped_csv_bundles,
-    )
-
     from slow_tortoise_spark.operators.validate import validate_and_fix
+    from slow_tortoise_spark.sinks.writers import FileWriter, write_grouped_csv
     from slow_tortoise_spark.sources.reader import read_datacube
 
     df, _ = validate_and_fix(read_datacube(spark, [cube_path]))
@@ -564,11 +579,11 @@ def test_grouped_csv_bundles_match_per_file_sink(spark, cube_path, tmp_path):
     )
 
     out_bundles = str(tmp_path / "bundles")
-    n_groups = write_grouped_csv_bundles(
+    n_groups = write_grouped_csv(
         regional, ["feature", "level", "id"],
-        key_fn=lambda k: f"rt/{k['feature']}/L{k['level']}/{k['id']}.csv",
-        bundle_path_fn=lambda pid: f"rt-bundles/part-{pid:05d}",
+        path_fn=lambda k: f"rt/{k['feature']}/L{k['level']}/{k['id']}.csv",
         writer=FileWriter(out_bundles), sort_cols=["timestamp"],
+        bundle_path_fn=lambda pid: f"rt-bundles/part-{pid:05d}",
     )
     assert n_groups == n_files > 0
 
@@ -593,7 +608,6 @@ def test_grouped_sinks_accept_dotted_column_names(spark, tmp_path):
     from slow_tortoise_spark.sinks.writers import (
         FileWriter,
         write_grouped_csv,
-        write_grouped_csv_bundles,
         write_grouped_json,
     )
 
@@ -615,11 +629,11 @@ def test_grouped_sinks_accept_dotted_column_names(spark, tmp_path):
     header = open(f"{out}/csv/f1.csv").read().splitlines()[0]
     assert "1.0" in header  # artifact keeps the original dotted header
 
-    n_b = write_grouped_csv_bundles(
+    n_b = write_grouped_csv(
         wide, ["feature"],
-        key_fn=lambda k: f"csv/{k['feature']}.csv",
-        bundle_path_fn=lambda pid: f"bundles/part-{pid:05d}",
+        path_fn=lambda k: f"csv/{k['feature']}.csv",
         writer=FileWriter(out), sort_cols=["timestamp"],
+        bundle_path_fn=lambda pid: f"bundles/part-{pid:05d}",
     )
     assert n_b == 2
     for ipath in glob.glob(f"{out}/bundles/*.idx.json"):
@@ -831,7 +845,6 @@ def test_grouped_sinks_on_empty_input_write_nothing(spark, tmp_path):
     from slow_tortoise_spark.sinks.writers import (
         FileWriter,
         write_grouped_csv,
-        write_grouped_csv_bundles,
         write_grouped_json,
     )
 
@@ -840,9 +853,8 @@ def test_grouped_sinks_on_empty_input_write_nothing(spark, tmp_path):
     assert write_grouped_csv(df, ["g"], lambda k: "x.csv", writer) == 0
     assert write_grouped_json(df, ["g"], lambda k: "x.json", writer,
                               payload_fn=len) == 0
-    assert write_grouped_csv_bundles(df, ["g"], key_fn=str,
-                                     bundle_path_fn=lambda pid: f"b{pid}",
-                                     writer=writer) == 0
+    assert write_grouped_csv(df, ["g"], path_fn=str, writer=writer,
+                             bundle_path_fn=lambda pid: f"b{pid}") == 0
     assert not os.path.exists(tmp_path / "empty")
 
 
