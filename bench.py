@@ -231,8 +231,7 @@ def run_suite(spark, sf_dir: str, names: list[str],
     mem_probes); the probes run between timed regions, one CPU spin per
     query and one memory probe per three queries."""
     from slow_tortoise_spark.operators.cachectl import (
-        release_local_checkpoints,
-        release_operator_caches,
+        release_unscoped,
     )
     from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
 
@@ -282,8 +281,7 @@ def run_suite(spark, sf_dir: str, names: list[str],
             )
             with open(os.path.join(plans_dir, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
-        release_operator_caches()
-        release_local_checkpoints()
+        release_unscoped()
         # job events reach the status store through the async listener
         # bus; drain it before counting the last rep's group
         sc._jsc.sc().listenerBus().waitUntilEmpty()

@@ -17,8 +17,7 @@ so it hands the frame on with :func:`keep`, and the enclosing owner
 releases it.  With no scope
 open, the owner is a process-wide root registry that is never exited:
 code outside a scope (the bench harness, ``tools/``, catalog queries)
-drops it with :func:`release_operator_caches` and
-:func:`release_local_checkpoints` after the consuming action.
+drops it with :func:`release_unscoped` after the consuming action.
 
 Why caches outlive the operator at all: several operators cache an
 intermediate that their returned (lazy) result reads on more than one
@@ -141,13 +140,12 @@ class Scope:
             return _release(frame, None)
         return _release(*owner._owned.pop(i))
 
-    def release(self, caches: bool = True, checkpoints: bool = True) -> int:
+    def release(self) -> int:
         """Release everything this scope owns; returns how many frames."""
         n = 0
-        for i in reversed(range(len(self._owned))):
-            if caches if self._owned[i][1] is _CACHE else checkpoints:
-                n += _release(*self._owned.pop(i))
-        if self._made_dir_in is not None and not self._owned:
+        while self._owned:
+            n += _release(*self._owned.pop())
+        if self._made_dir_in is not None:
             try:
                 fs, root = _fs(self._made_dir_in, self._dir)
                 fs.delete(root, False)
@@ -242,19 +240,13 @@ def scoped(operator):
     return run
 
 
-def release_operator_caches() -> int:
-    """Unpersist every cache the root registry owns (frames cached with
-    no scope open); returns how many.  Call it after the action that
-    consumed the operator results.  Results computed from a released
-    cache stay correct (the plan recomputes)."""
-    return _ROOT.release(checkpoints=False)
-
-
-def release_local_checkpoints() -> int:
-    """Free every checkpoint the root registry owns; returns how many.
-    Same call site as :func:`release_operator_caches`, harder contract:
-    released frames cannot be recomputed."""
-    return _ROOT.release(caches=False)
+def release_unscoped() -> int:
+    """Release every cache and checkpoint the root registry owns (frames
+    made with no scope open); returns how many.  Call it after the action
+    that consumed the operator results: results computed from a released
+    cache stay correct (the plan recomputes), but a released checkpoint
+    cannot be recomputed."""
+    return _ROOT.release()
 
 
 def tracked_count() -> int:

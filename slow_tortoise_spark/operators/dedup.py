@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from slow_tortoise_spark.memo import remembered
 from slow_tortoise_spark.operators.cachectl import (
     free,
     keep,
@@ -554,19 +555,14 @@ def verify_pairs_edit_distance(
     return scored.filter(F.col("edit_ratio") <= max_ratio)
 
 
-#: corpus-plan → priced (Σdf², docset payload bytes, hash-injective) —
-#: see _priced_pair_stats
-_JACCARD_PRICE_MEMO: dict[tuple, tuple[int, int, bool]] = {}
-
-
 def _priced_pair_stats(
     df: DataFrame, sh: DataFrame, text_col: str, n: int
 ) -> tuple[int, int, bool]:
     """(Σ df², docset payload bytes, xxhash64-injective) for a cached
     shingle frame — the shared pricing pass behind
     ``jaccard_pairs_auto`` and ``containment_pairs_auto`` (one gate,
-    one memo, one eviction policy; previously duplicated verbatim in
-    both dispatchers).
+    one remembered price; previously duplicated verbatim in both
+    dispatchers).
 
     Σ df² prices the naive self-join's intermediate exactly; the byte
     estimate (Σ shingle-string bytes + per-element overhead) prices the
@@ -580,40 +576,37 @@ def _priced_pair_stats(
     strings, which keeps every count bijection-identical while halving
     the exchange width and the per-pair intersect cost.  A collision
     (probability ~|vocab|²/2⁶⁵) simply falls back to the string path.
-    Memoized on the input's logical plan plus a file-catalog freshness
-    token: statistics only, never results — every run still computes
-    pairs from parquet (the same role a catalog's table statistics
-    play for a cost-based optimizer; stale-memo caveat documented at
-    the memo definition).
+    Remembered per input plan while the stat signature of every input
+    file holds (:mod:`slow_tortoise_spark.memo`): statistics only,
+    never results — every run still computes pairs from parquet (the
+    same role a catalog's table statistics play for a cost-based
+    optimizer).
     """
-    files = df.inputFiles()
-    memo_key = (df.semanticHash(), text_col, n,
-                len(files), sum(len(f) for f in files))
-    if memo_key in _JACCARD_PRICE_MEMO:
-        return _JACCARD_PRICE_MEMO[memo_key]
-    row = (
-        sh.groupBy("shingle")
-        .agg(
-            F.count("*").alias("df"),
-            F.sum(F.length("shingle")).alias("_b"),
+    def price() -> tuple[int, int, bool]:
+        row = (
+            sh.groupBy("shingle")
+            .agg(
+                F.count("*").alias("df"),
+                F.sum(F.length("shingle")).alias("_b"),
+            )
+            .agg(
+                F.sum(F.col("df") * F.col("df")).alias("pair_rows"),
+                F.sum("df").alias("sh_rows"),
+                F.sum("_b").alias("sh_bytes"),
+                F.count("*").alias("vocab"),
+                F.count_distinct(F.xxhash64("shingle")).alias("hashes"),
+            )
+            .first()
         )
-        .agg(
-            F.sum(F.col("df") * F.col("df")).alias("pair_rows"),
-            F.sum("df").alias("sh_rows"),
-            F.sum("_b").alias("sh_bytes"),
-            F.count("*").alias("vocab"),
-            F.count_distinct(F.xxhash64("shingle")).alias("hashes"),
-        )
-        .first()
-    )
-    pair_rows = row["pair_rows"] or 0
-    # UnsafeArrayData layout: string bytes + ~16 B/element slot+padding
-    docset_bytes = int((row["sh_bytes"] or 0) + 16 * (row["sh_rows"] or 0))
-    hash_ok = bool(row["vocab"] == row["hashes"])
-    if len(_JACCARD_PRICE_MEMO) > 256:
-        _JACCARD_PRICE_MEMO.clear()
-    _JACCARD_PRICE_MEMO[memo_key] = (pair_rows, docset_bytes, hash_ok)
-    return pair_rows, docset_bytes, hash_ok
+        pair_rows = row["pair_rows"] or 0
+        # UnsafeArrayData layout: string bytes + ~16 B/element slot+padding
+        docset_bytes = int((row["sh_bytes"] or 0) + 16 * (row["sh_rows"] or 0))
+        hash_ok = bool(row["vocab"] == row["hashes"])
+        return pair_rows, docset_bytes, hash_ok
+
+    return remembered(
+        df.sparkSession, ("pair_price", df.semanticHash(), text_col, n),
+        price, df.inputFiles())
 
 
 def jaccard_pairs_auto(
@@ -647,15 +640,16 @@ def jaccard_pairs_auto(
     corpus scan to avoid a shingle pass we were about to pay for
     anyway.)
     """
-    # Stats memo semantics (freshness token, staleness caveat) are
-    # documented at _priced_pair_stats / _JACCARD_PRICE_MEMO.
+    # The price is remembered (freshness rule and staleness caveat in
+    # slow_tortoise_spark.memo).
     # Cache on EVERY path, not just the pricing pass: the winning plan is
     # itself multi-consumer (the naive tier reads the shingle frame three
     # times — sizes agg + both self-join sides — and the prefix tier's
-    # docsets twice), so a memo hit still wants the cache.  Re-caching an
-    # identical logical plan is a CacheManager no-op (one WARN line), so
-    # repeated calls share one materialization instead of the memo-hit
-    # path silently depending on the miss-run's still-registered cache.
+    # docsets twice), so a remembered price still wants the cache.
+    # Re-caching an identical logical plan is a CacheManager no-op (one
+    # WARN line), so repeated calls share one materialization instead of
+    # a remembered-price build silently depending on the first build's
+    # still-registered cache.
     sh = tracked_cache(doc_shingles(df, text_col, n))
     pair_rows, docset_bytes, hash_ok = _priced_pair_stats(
         df, sh, text_col, n)
@@ -2060,8 +2054,8 @@ def token_budget_select(
     The input (with its helper columns) is ``tracked_cache``-ed before
     the first aggregate, so the driver passes and both branches of the
     returned plan share one materialization instead of re-executing
-    the upstream lineage; ``release_operator_caches()`` frees it at
-    the caller's stage boundary.
+    the upstream lineage; the caller's scope (or ``release_unscoped()``
+    outside any scope) frees it at the caller's stage boundary.
 
     NULL scores, NaN scores (float/double columns), NULL ids, and NULL
     explicit token counts all raise loudly (ordering under any of them

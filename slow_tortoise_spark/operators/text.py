@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from slow_tortoise_spark.memo import remembered
 from slow_tortoise_spark.operators.cachectl import scoped, tracked_cache
 
 #: Tiny per-language stopword sets for the n-gram/stopword-ratio language
@@ -53,16 +54,6 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(F.trim(text), _TOKEN_SPLIT), lambda t: t != "")
 
 
-#: fan_out partition-count memo keyed on (session, analyzed-plan
-#: semanticHash): the ``df.rdd.getNumPartitions()`` probe converts the
-#: plan to an RDD — ~80 ms of driver time per FRESH DataFrame (profiled
-#: r14), paid on every query (re)construction.  Same in-process
-#: staleness caveat as the reader/price memos: a path that gains files
-#: mid-session serves the old count — which only affects the
-#: repartition DECISION (parallelism), never results.
-_FAN_OUT_MEMO: dict[tuple[int, int], int] = {}
-
-
 def fan_out(df: DataFrame) -> DataFrame:
     """Spread a narrow scan across the cluster before CPU-heavy explodes.
 
@@ -70,21 +61,14 @@ def fan_out(df: DataFrame) -> DataFrame:
     would serialize tokenize/explode/hash work onto one core (measured:
     the whole bigram-LM scoring pass ran as a 1-task stage on the
     single-file sf0.1 documents table); at real scale inputs arrive as
-    many files and this is a no-op.
+    many files and this is a no-op.  The partition-count probe converts
+    the plan to an RDD, ~80 ms of driver time per fresh DataFrame, so
+    the count is remembered per analyzed plan (see
+    :mod:`slow_tortoise_spark.memo`).
     """
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        key = (id(df.sparkSession), df.semanticHash())
-    except Exception:
-        key = None
-    if key is not None and key in _FAN_OUT_MEMO:
-        n = _FAN_OUT_MEMO[key]
-    else:
-        n = df.rdd.getNumPartitions()
-        if key is not None:
-            if len(_FAN_OUT_MEMO) > 1024:
-                _FAN_OUT_MEMO.clear()
-            _FAN_OUT_MEMO[key] = n
+    n = remembered(df.sparkSession, ("fan_out", df.semanticHash()),
+                   lambda: df.rdd.getNumPartitions())
     if n < max(parallelism // 2, 2):
         return df.repartition(parallelism)
     return df

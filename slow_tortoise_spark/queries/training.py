@@ -2,6 +2,7 @@
 embeddings (catalog-core portion)."""
 from __future__ import annotations
 
+from slow_tortoise_spark.memo import remembered
 from slow_tortoise_spark.queries._shared import (
     Callable,
     F,
@@ -237,36 +238,21 @@ def _simhash_sql(n_bits: int = 64):
     """
 
 
-#: collected query-vector memo, keyed like the reader memo (session,
-#: path stat signature, vec_id): fetching the 64-float query parameter
-#: is a driver job (~80 ms) paid on every query (re)construction — the
-#: same query-construction-statistics role as dedup's price memo.  The
-#: stat signature invalidates on file rewrite; the top-k RESULT is
-#: still computed from parquet on every run.
-_QUERY_VEC_MEMO: dict[tuple, list[float]] = {}
-
-
 def _query_vec(spark, sf_dir: str, vec_id: int) -> list[float]:
-    import os
+    """The embedding of ``vec_id``.  Fetching this 64-float query
+    parameter is a driver job (~80 ms) paid on every query
+    (re)construction, so it is remembered while the embeddings file
+    holds (:mod:`slow_tortoise_spark.memo`); the top-k RESULT is still
+    computed from parquet on every run."""
+    def fetch() -> list[float]:
+        emb = _t(spark, sf_dir, "embeddings")
+        return [
+            float(x)
+            for x in emb.filter(f"vec_id = {vec_id}").first()["embedding"]
+        ]
 
-    path = f"{sf_dir}/embeddings.parquet"
-    try:
-        st = os.stat(path)
-        key = (id(spark), path, st.st_mtime_ns, st.st_size, vec_id)
-    except OSError:
-        key = None
-    if key is not None and key in _QUERY_VEC_MEMO:
-        return _QUERY_VEC_MEMO[key]
-    emb = _t(spark, sf_dir, "embeddings")
-    vec = [
-        float(x)
-        for x in emb.filter(f"vec_id = {vec_id}").first()["embedding"]
-    ]
-    if key is not None:
-        if len(_QUERY_VEC_MEMO) > 256:
-            _QUERY_VEC_MEMO.clear()
-        _QUERY_VEC_MEMO[key] = vec
-    return vec
+    return remembered(spark, ("query_vec", vec_id), fetch,
+                      (f"{sf_dir}/embeddings.parquet",))
 
 
 def q_ann_cosine_topk(spark, sf_dir):

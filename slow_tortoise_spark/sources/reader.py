@@ -24,6 +24,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from slow_tortoise_spark.memo import remembered
 from slow_tortoise_spark.schema import NULL_TOKEN, REGION_LEVELS
 
 #: Shards that duplicate numeric data with stringified values; skipped on read.
@@ -148,30 +149,23 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
         return []
 
 
-#: Constructed-DataFrame memo: building the re-typed frame costs ~100 ms of
-#: driver round-trips (parquet relation + withColumns over every field), paid
-#: per call by query functions that take (spark, sf_dir).  DataFrames are
-#: immutable, so reuse is safe; the local-path stat signature (mtime, size)
-#: invalidates the entry when the file — or the directory entry list, for
-#: multi-file parquet dirs — is rewritten.  Non-statable paths (object
-#: stores) skip the memo entirely rather than risk serving a stale plan.
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
-
-
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     """Read a parquet table, re-typing TIMESTAMP(NANOS) columns to timestamps.
 
     With ``spark.sql.legacy.parquet.nanosAsLong`` the scan surfaces nanos as
     long; we truncate to microseconds (integer DIV, matching how micro-
     precision engines read the same files) and cast to TimestampType.
+    Building the re-typed frame costs ~100 ms of driver round trips
+    (parquet relation + withColumns over every field), paid per call by
+    query functions that take (spark, sf_dir), so the frame is
+    remembered while the path's stat signature holds (see
+    :mod:`slow_tortoise_spark.memo`).
     """
-    try:
-        st = os.stat(path)
-        memo_key = (id(spark), path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        memo_key = None
-    if memo_key is not None and memo_key in _TABLE_MEMO:
-        return _TABLE_MEMO[memo_key]
+    return remembered(spark, "read_table",
+                      lambda: _read_table(spark, path), (path,))
+
+
+def _read_table(spark: SparkSession, path: str) -> DataFrame:
     # Runtime-settable SESSION confs; done here so callers with a vanilla
     # session (e.g. the external driver) can still read TIMESTAMP(NANOS)
     # files, and so calendar truncation is UTC regardless of the host
@@ -205,10 +199,6 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     )
     if casts:
         df = df.withColumns(casts)
-    if memo_key is not None:
-        if len(_TABLE_MEMO) > 256:
-            _TABLE_MEMO.clear()
-        _TABLE_MEMO[memo_key] = df
     return df
 
 

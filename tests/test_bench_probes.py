@@ -112,3 +112,50 @@ def test_run_bench_record(spark, sf_dir, tmp_path):
     assert files == sorted(f"{q}.txt" for q in names)
     for f in files:
         assert os.path.getsize(tmp_path / f) > 0
+
+
+def test_warm_headline_builds_launch_no_jobs(spark, sf_dir):
+    """The benchmark's warm ops rest on ``memo.remembered``: once a
+    headline query has been built and run, building it again launches no
+    Spark job and adds no entry to the store, and all four sites that
+    remember (table frames, partition counts, pair prices, the query
+    vector) are in it.  With the store emptied, the builds launch jobs
+    again (the price and query-vector collects), so the pin has teeth."""
+    from bench import BENCH_QUERIES
+    from slow_tortoise_spark import memo
+    from slow_tortoise_spark.operators.cachectl import release_unscoped
+    from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
+
+    sc = spark.sparkContext
+    catalog = {**VERIFIER_QUERIES, **QUERIES}
+
+    def build(name, tag):
+        group = f"memo-pin-{tag}-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            df = catalog[name](spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job events reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    memo._STORE.clear()
+    try:
+        for name in BENCH_QUERIES:
+            build(name, "first")[0].write.format("noop") \
+                .mode("overwrite").save()
+            release_unscoped()
+        first = set(memo._STORE)
+        warm = {name: build(name, "warm")[1] for name in BENCH_QUERIES}
+        assert warm == dict.fromkeys(BENCH_QUERIES, 0)
+        assert set(memo._STORE) == first
+        assert {key if isinstance(key, str) else key[0]
+                for _, key, _ in first} == {
+            "read_table", "fan_out", "pair_price", "query_vec"}
+        memo._STORE.clear()
+        cold = {name: build(name, "cold")[1] for name in BENCH_QUERIES}
+        assert sum(cold.values()) > 0, cold
+    finally:
+        release_unscoped()

@@ -496,10 +496,10 @@ def test_operator_caches_release_to_baseline(spark, sf_dir):
     """Round-5 verdict item 4: operators that cache multi-consumer
     intermediates (shingle frames, LSH band stacks, Bloom word tables)
     register them in the cachectl registry; after N query invocations a
-    single release_operator_caches() returns executor storage to
+    single release_unscoped() returns executor storage to
     baseline — the long-lived-driver contract."""
     from slow_tortoise_spark.operators.cachectl import (
-        release_operator_caches,
+        release_unscoped,
         tracked_count,
     )
     from slow_tortoise_spark.operators.dedup import (
@@ -510,7 +510,7 @@ def test_operator_caches_release_to_baseline(spark, sf_dir):
     from slow_tortoise_spark.sources.reader import read_table
 
     spark.catalog.clearCache()
-    release_operator_caches()  # drop anything earlier tests registered
+    release_unscoped()  # drop anything earlier tests registered
     base_tracked = tracked_count()
     assert base_tracked == 0
 
@@ -528,7 +528,7 @@ def test_operator_caches_release_to_baseline(spark, sf_dir):
         simhash_near_duplicates(docs, max_hamming=3).count()
     assert tracked_count() > 0  # operators really registered their caches
 
-    released = release_operator_caches()
+    released = release_unscoped()
     assert released >= tracked_count() == 0
     assert n_cached_rdds() <= baseline  # storage back to baseline
 
@@ -676,16 +676,14 @@ def test_pipeline_returns_storage_to_zero_including_checkpoints(
         run_corpus_pipeline,
     )
     from slow_tortoise_spark.operators.cachectl import (
-        release_local_checkpoints,
-        release_operator_caches,
+        release_unscoped,
         tracked_checkpoint_count,
         tracked_count,
     )
     from slow_tortoise_spark.sinks.writers import FileWriter
 
     spark.catalog.clearCache()
-    release_operator_caches()
-    release_local_checkpoints()  # drop anything earlier tests left
+    release_unscoped()  # drop anything earlier tests left
 
     jsc = spark.sparkContext._jsc.sc()
 

@@ -351,7 +351,7 @@ def test_headline_query_exchange_budgets(spark, sf_dir):
     lower is fine, higher is a review flag."""
     from slow_tortoise_spark import queries as Q
     from slow_tortoise_spark.operators.cachectl import (
-        release_operator_caches,
+        release_unscoped,
     )
 
     # Deterministic baseline: frames cached by EARLIER tests substitute
@@ -360,7 +360,7 @@ def test_headline_query_exchange_budgets(spark, sf_dir):
     # under every InMemoryTableScan — inflating the TEXTUAL count for
     # reasons that are actually runtime wins.  Audit against a clean
     # cache state, as the driver's fresh session would.
-    release_operator_caches()
+    release_unscoped()
     spark.catalog.clearCache()
 
     budgets = {

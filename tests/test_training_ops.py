@@ -435,6 +435,63 @@ def test_priced_stats_enable_hash_ids_and_broadcast(spark):
             for r in out.collect()} == naive
 
 
+def test_priced_stats_follow_a_table_rewritten_in_place(spark, tmp_path):
+    """A table overwritten in place is priced again.  Spark's part-file
+    names always have the same length, so only the input files' stat
+    signatures tell the 40-doc table from the 400-doc one."""
+    from slow_tortoise_spark import memo
+    from slow_tortoise_spark.operators.cachectl import (
+        release_unscoped,
+        tracked_cache,
+    )
+    from slow_tortoise_spark.operators.dedup import (
+        _priced_pair_stats,
+        doc_shingles,
+    )
+
+    path = str(tmp_path / "docs.parquet")
+
+    def write_and_price(n_docs):
+        rows = [(i, f"w{i % 5} w{i % 7} w{i % 11} w{i % 3} tail{i % 17}")
+                for i in range(n_docs)]
+        spark.createDataFrame(rows, "doc_id long, text string") \
+            .coalesce(1).write.mode("overwrite").parquet(path)
+        docs = spark.read.parquet(path)
+        sh = tracked_cache(doc_shingles(docs, "text", 3))
+        return docs, sh, _priced_pair_stats(docs, sh, "text", 3)
+
+    try:
+        _, _, small = write_and_price(40)
+        docs, sh, large = write_and_price(400)
+        memo._STORE.clear()
+        assert large != small
+        assert large == _priced_pair_stats(docs, sh, "text", 3)
+    finally:
+        release_unscoped()
+
+
+def test_memo_skips_unstatable_paths_and_keeps_sessions_apart(spark):
+    """``remembered`` never remembers a value for a path it cannot stat
+    (an object store), and two session objects share no entry."""
+    from slow_tortoise_spark.memo import remembered
+
+    calls = []
+
+    def compute():
+        calls.append(None)
+        return len(calls)
+
+    key = object()
+    assert remembered(spark, key, compute, ("s3a://b/x",)) == 1
+    assert remembered(spark, key, compute, ("s3a://b/x",)) == 2
+    assert remembered(spark, key, compute) == 3
+    assert remembered(spark, key, compute) == 3
+    other = spark.newSession()
+    assert remembered(other, key, compute) == 4
+    assert remembered(other, key, compute) == 4
+    assert remembered(spark, key, compute) == 3
+
+
 def test_ivf_kmeans_refinement_improves_or_holds_recall(spark, sf_dir):
     from slow_tortoise_spark.sources.reader import read_table
 

@@ -32,8 +32,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
     from slow_tortoise_spark.operators.cachectl import (
-        release_local_checkpoints,
-        release_operator_caches,
+        release_unscoped,
     )
     from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
     from slow_tortoise_spark.session import get_spark
@@ -53,8 +52,7 @@ def main() -> int:
             failed[name] = msg[:400]
             print(f"FAIL {name}: {msg[:200]}", file=sys.stderr)
         finally:
-            release_operator_caches()
-            release_local_checkpoints()
+            release_unscoped()
     print(json.dumps({"queries": len(cat), "failed": failed}))
     return 1 if failed else 0
 

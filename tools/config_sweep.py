@@ -86,8 +86,7 @@ def main() -> int:
     only = set(args)
 
     from slow_tortoise_spark.operators.cachectl import (
-        release_local_checkpoints,
-        release_operator_caches,
+        release_unscoped,
     )
     from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
     from slow_tortoise_spark.session import get_spark
@@ -117,8 +116,7 @@ def main() -> int:
                 print(f"FAIL [{cfg_name}] {name}: {msg[:200]}",
                       file=sys.stderr)
             finally:
-                release_operator_caches()
-                release_local_checkpoints()
+                release_unscoped()
 
     mismatched: dict[str, list[str]] = {}
     base = hashes["baseline"]

@@ -39,8 +39,7 @@ def main() -> int:
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 8
 
     from slow_tortoise_spark.operators.cachectl import (
-        release_local_checkpoints,
-        release_operator_caches,
+        release_unscoped,
     )
     from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
     from slow_tortoise_spark.session import get_spark
@@ -68,8 +67,7 @@ def main() -> int:
         for name, fn in sorted(cat.items()):
             try:
                 base = _canon_hash(fn(spark, sf_dir))
-                release_operator_caches()
-                release_local_checkpoints()
+                release_unscoped()
                 alt = _canon_hash(fn(spark, staged))
                 if alt != base:
                     mismatched.append(name)
@@ -81,8 +79,7 @@ def main() -> int:
                 failed[name] = msg[:400]
                 print(f"FAIL {name}: {msg[:200]}", file=sys.stderr)
             finally:
-                release_operator_caches()
-                release_local_checkpoints()
+                release_unscoped()
     finally:
         shutil.rmtree(staged, ignore_errors=True)
 

@@ -39,8 +39,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
     from slow_tortoise_spark.operators.cachectl import (
-        release_local_checkpoints,
-        release_operator_caches,
+        release_unscoped,
     )
     from slow_tortoise_spark.queries import QUERIES, VERIFIER_QUERIES
     from slow_tortoise_spark.session import get_spark
@@ -60,8 +59,7 @@ def main() -> int:
             flagged[name] = [f"plan-error: {type(exc).__name__}: {exc}"[:200]]
             continue
         finally:
-            release_operator_caches()
-            release_local_checkpoints()
+            release_unscoped()
         hits = []
         if "CartesianProduct" in plan:
             hits.append("CartesianProduct")
